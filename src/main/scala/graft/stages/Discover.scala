@@ -20,6 +20,12 @@ import graft.ops.Fingerprint
   * driver-side metadata (cheap), fingerprinting is a bounded 128 KiB read
   * per file fanned across executors, and every join broadcasts the smaller
   * side.
+  *
+  * The fingerprint pass runs once per call: the anti-joins take their
+  * (chunk, episode) keys from the file listing, not from the
+  * fingerprinted rows, so the manifest write's plan holds a single
+  * fingerprint `mapPartitions`. Nothing is cached; the returned delta is a
+  * read of the manifest just written.
   */
 object Discover {
 
@@ -77,9 +83,7 @@ object Discover {
       it.map { case (chunk, pqUri) =>
         val pq = new HPath(pqUri)
         val fs = pq.getFileSystem(conf)
-        val name = pq.getName
-        val epIdx = "episode_(\\d+)\\.parquet".r.findFirstMatchIn(name).map(_.group(1).toLong)
-        epIdx match {
+        episodeIndex(pqUri) match {
           case None =>
             EpisodeManifestRow(-1L, chunk, pqUri, null, null, exists_front = false,
               exists_wrist = false, 0L, null, Fingerprint.Algo, nowStr,
@@ -121,6 +125,10 @@ object Discover {
       }
     }.toDF()
   }
+
+  /** Episode index parsed from an `episode_<n>.parquet` file name. */
+  private def episodeIndex(uri: String): Option[Long] =
+    "episode_(\\d+)\\.parquet".r.findFirstMatchIn(new HPath(uri).getName).map(_.group(1).toLong)
 
   private def jsonStr(s: String): String =
     if (s == null) "null"
@@ -172,7 +180,8 @@ object Discover {
     * against the previous manifest (J1: UNCHANGED/ERROR), synthesize
     * DELETED tombstones (J2), append orphan videos, union + sort, write the
     * manifest atomically (S3), and return the delta (non-UNCHANGED rows,
-    * T5).
+    * T5). The delta reads the written manifest, so it is valid until the
+    * next run replaces that file.
     */
   def run(spark: SparkSession, dataRoot: String, manifestOut: String,
       cfg: Config = Config()): DataFrame = {
@@ -180,7 +189,8 @@ object Discover {
       SingleFile.recoverAtomic(spark, manifestOut) // heal a crashed replace
       val p = new HPath(manifestOut)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(spark.read.parquet(manifestOut)) else None
+      if (fs.exists(p)) Some(spark.read.schema(Schemas.manifestSchema).parquet(manifestOut))
+      else None
     }
 
     val files = listEpisodes(spark, dataRoot, cfg)
@@ -196,6 +206,14 @@ object Discover {
     }
 
     var cur = fingerprintEpisodes(spark, dataRoot, files, cfg)
+    // the (chunk, episode) key of every fingerprinted row (-1 for a bad
+    // file name, as fingerprintEpisodes emits it), built from the listing
+    // so the anti-joins below do not re-run the fingerprint pass
+    val curKeys = {
+      import spark.implicits._
+      files.map { case (chunk, uri) => (chunk, episodeIndex(uri).getOrElse(-1L)) }.distinct
+        .toDF("chunk", "episode_index")
+    }
 
     // J1: reclassify vs previous manifest fingerprints (broadcast — the
     // previous manifest is one row per episode, small relative to data)
@@ -214,8 +232,7 @@ object Discover {
     val tombstones = prevOpt.map { prev =>
       val nowStr = utcNow()
       prev.select("chunk", "episode_index").dropDuplicates("chunk", "episode_index")
-        .join(cur.select("chunk", "episode_index").dropDuplicates("chunk", "episode_index"),
-          Seq("chunk", "episode_index"), "left_anti")
+        .join(curKeys, Seq("chunk", "episode_index"), "left_anti")
         .select(
           col("episode_index"), col("chunk"),
           lit(null).cast("string").as("parquet_uri"),
@@ -230,18 +247,18 @@ object Discover {
           lit(null).cast("string").as("errors"))
     }
 
-    val orphans = orphanVideos(spark, dataRoot, chunks,
-      cur.select("chunk", "episode_index").dropDuplicates("chunk", "episode_index"))
+    val orphans = orphanVideos(spark, dataRoot, chunks, curKeys)
 
     // U1: relaxed union — schemas are pre-aligned so by-name union suffices
     val ordered = Schemas.manifestSchema.fieldNames.map(col).toSeq
     var all = cur.select(ordered: _*)
     tombstones.foreach(t => all = all.unionByName(t.select(ordered: _*)))
     all = all.unionByName(orphans.select(ordered: _*))
-    val sorted = all.orderBy("chunk", "episode_index").cache()
+    // one sorted partition for the single-file manifest: no range sampling
+    SingleFile.writeParquetAtomic(
+      all.repartition(1).sortWithinPartitions("chunk", "episode_index"), manifestOut)
 
-    SingleFile.writeParquetAtomic(sorted, manifestOut)
-
-    sorted.filter(col("status") =!= Status.Unchanged)
+    spark.read.schema(Schemas.manifestSchema).parquet(manifestOut)
+      .filter(col("status") =!= Status.Unchanged)
   }
 }

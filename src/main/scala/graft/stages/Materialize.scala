@@ -1,8 +1,9 @@
 package graft.stages
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Schemas
 import graft.functions.Hashing
 import graft.io.{Episodes, SingleFile}
 
@@ -15,11 +16,13 @@ import graft.io.{Episodes, SingleFile}
   * Spark shape: split assignment is a column expression over the seeded
   * portable hash (no driver loop); the partitioned layout is ONE
   * partitionBy write job + metadata renames; the index is a small DataFrame
-  * aggregation. Video placement (symlink/hardlink/copy/manifest-only,
-  * materialize_refactored.py:29-47) runs executor-side in mapPartitions —
-  * which requires a SHARED filesystem (NFS/HDFS-mounted paths): links are
-  * created on whichever machine the task runs, so on a cluster the
-  * videosRoot/outDir must resolve identically on every executor.
+  * aggregation, written as one sorted partition with the split counts
+  * observed on that write (no separate count query). Video placement
+  * (symlink/hardlink/copy/manifest-only, materialize_refactored.py:29-47)
+  * runs executor-side in mapPartitions — which requires a SHARED
+  * filesystem (NFS/HDFS-mounted paths): links are created on whichever
+  * machine the task runs, so on a cluster the videosRoot/outDir must
+  * resolve identically on every executor.
   */
 object Materialize {
 
@@ -48,7 +51,7 @@ object Materialize {
 
     // one scan over all normalized episodes; episode identity from filename
     // (materialize_refactored.py:94-97)
-    val raw = spark.read.parquet(files: _*)
+    val raw = spark.read.schema(Schemas.episodeSchema).parquet(files: _*)
       .withColumn("_ep_idx",
         regexp_extract(input_file_name(), "episode_(\\d+)\\.parquet", 1).cast("long"))
       .withColumn("_ep_name",
@@ -89,9 +92,9 @@ object Materialize {
     // dataset index (A13-A14): one row per episode with paths + row counts.
     // `split`/`chunk` were consumed by partitionBy, so recompute split from
     // the same deterministic hash — identical by construction.
-    // persisted: placeVideos consumes the index twice (link candidates +
-    // the final path join) — without the barrier the full-corpus groupBy
-    // above would run once per consumer
+    // persisted for the index write: with video placement the write reads
+    // the index twice (link candidates + the final path join), and without
+    // the barrier the full-corpus groupBy would run once per consumer
     val index = raw.groupBy(col("_ep_idx").as("episode_index"), col("_ep_name"))
       .agg(count(lit(1)).as("num_rows"))
       .withColumn("split", splitCol(col("episode_index"), cfg))
@@ -101,15 +104,19 @@ object Materialize {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // video placement (S18) + per-view index paths
-    val withVideos = placeVideos(spark, index, outDir, cfg)
-      .drop("_ep_name")
-      .orderBy("episode_index")
-      .cache()
+    val withVideos = placeVideos(spark, index, outDir, cfg).drop("_ep_name")
+    val splits = Observation()
+    val indexPath = s"$outDir/dataset_index.parquet"
+    SingleFile.writeParquetAtomic(
+      withVideos.observe(splits,
+          count_if(col("split") === "train").as("train"),
+          count_if(col("split") === "val").as("val"),
+          count_if(col("split") === "test").as("test"))
+        .repartition(1).sortWithinPartitions("episode_index"),
+      indexPath)
+    index.unpersist()
 
-    SingleFile.writeParquetAtomic(withVideos, s"$outDir/dataset_index.parquet")
-
-    val counts = withVideos.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val Seq(train, validation, test) = Observed.longs(splits, "train", "val", "test")
     val manifest =
       s"""{
          |  "source_parquet": ${q(normDir)},
@@ -117,17 +124,14 @@ object Materialize {
          |  "output": ${q(outDir)},
          |  "seed": ${q(cfg.seed)},
          |  "fractions": {"train": ${cfg.train}, "val": ${cfg.validation}, "test": ${cfg.test}},
-         |  "counts": {"train": ${counts.getOrElse("train", 0L)}, "val": ${counts.getOrElse("val", 0L)}, "test": ${counts.getOrElse("test", 0L)}},
+         |  "counts": {"train": $train, "val": $validation, "test": $test},
          |  "chunk": ${q(cfg.chunkId)},
          |  "views": ${cfg.views.map(q).mkString("[", ", ", "]")},
          |  "link_videos": ${q(cfg.linkVideos)}
          |}""".stripMargin
     SingleFile.writeText(spark, s"$outDir/_manifest.json", manifest)
 
-    // release both barriers now that the index parquet + manifest are
-    // written; the returned frame is sealed (self-contained, GC-freed)
-    // so no cached table outlives the stage (round-8 verdict #2)
-    graft.ops.Pins.sealOutput(withVideos, withVideos, index)
+    spark.read.schema(withVideos.schema).parquet(indexPath)
   }
 
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""

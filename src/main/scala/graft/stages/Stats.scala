@@ -1,6 +1,6 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{FeatureStats, GlobalStats, Schemas, StatsDoc}
@@ -45,7 +45,8 @@ object Stats {
             .otherwise(element_at(split(col("value"), ","), -1))
             .try_cast("long").as("episode_index"))
           .filter(col("episode_index").isNotNull)
-          .distinct()
+        // no distinct(): the left-semi join that applies the ids ignores
+        // duplicates
         Some(ids)
       }
     }
@@ -80,6 +81,11 @@ object Stats {
 
   /** The weighted pooled reduction. Returns the global stats plus meta
     * counters (episodes_used, total_frames).
+    *
+    * One job reads the JSONL: every feature's per-episode block becomes a
+    * row of an exploded (feature, n, mean, std, min, max) array, and a
+    * single `groupBy(f, dim)` reduces all features at once. The meta
+    * counters ride that pass as an `Observation` on the per-episode rows.
     */
   def reduceFromJsonl(spark: SparkSession, statsJsonlPath: String,
       features: Seq[String], validIdsPath: Option[String] = None): GlobalStats = {
@@ -106,51 +112,57 @@ object Stats {
     }): _*)
 
     val withN = filtered.withColumn("n", nCol).filter(col("n").isNotNull && col("n") > 0)
-      .cache()
+    val meta = Observation()
+    val observed = withN.observe(meta,
+      count(lit(1)).as("episodes"), coalesce(sum("n"), lit(0L)).as("frames"))
 
-    val (episodesUsed, totalFrames) = {
-      val r = withN.agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    val featureStats: Map[String, FeatureStats] = features.flatMap { key =>
+    // one (f, mean, std, mi, ma) struct per feature, f its position in
+    // `features`; the cast types the empty array of an empty feature list
+    val blocks = features.zipWithIndex.map { case (key, i) =>
       val (_, mean, std, mi, ma) = featureCols(col("stats_json"), key)
-      val ep = withN.select(col("n"), mean.as("mean"), std.as("std"), mi.as("mi"), ma.as("ma"))
-        .filter(col("mean").isNotNull && col("std").isNotNull &&
-          col("mi").isNotNull && col("ma").isNotNull)
-        .filter(size(col("std")) === size(col("mean")) &&
-          size(col("mi")) === size(col("mean")) &&
-          size(col("ma")) === size(col("mean")))
-      val dims = ep.select(col("n"), posexplode(col("mean")).as(Seq("dim", "mu")),
-          col("std"), col("mi"), col("ma"))
-        .withColumn("sd", element_at(col("std"), col("dim") + 1))
-        .withColumn("mival", element_at(col("mi"), col("dim") + 1))
-        .withColumn("maval", element_at(col("ma"), col("dim") + 1))
-      val agg = dims.groupBy("dim").agg(
-        sum(col("n")).as("S"),
-        sum(col("n") * col("mu")).as("sum_mu"),
-        sum(col("n") * (col("sd") * col("sd") + col("mu") * col("mu"))).as("sum_m2"),
-        min("mival").as("mn"),
-        max("maval").as("mx"))
-        .orderBy("dim")
-        .collect()
-      if (agg.isEmpty) None
-      else {
-        val s = agg.map(_.getAs[Long]("S"))
-        val meanV = agg.map(r => r.getAs[Double]("sum_mu") / r.getAs[Long]("S"))
-        val varV = agg.zip(meanV).map { case (r, m) =>
+      struct(lit(i).as("f"), mean.as("mean"), std.as("std"), mi.as("mi"), ma.as("ma"))
+    }
+    val blockType = ArrayType(StructType(Seq(
+      StructField("f", IntegerType)) ++
+      Seq("mean", "std", "mi", "ma").map(StructField(_, ArrayType(DoubleType)))))
+    val ep = observed
+      .select(col("n"), explode(array(blocks: _*).cast(blockType)).as("b"))
+      .select(col("n"), col("b.*"))
+      .filter(col("mean").isNotNull && col("std").isNotNull &&
+        col("mi").isNotNull && col("ma").isNotNull)
+      .filter(size(col("std")) === size(col("mean")) &&
+        size(col("mi")) === size(col("mean")) &&
+        size(col("ma")) === size(col("mean")))
+    val dims = ep.select(col("f"), col("n"), posexplode(col("mean")).as(Seq("dim", "mu")),
+        col("std"), col("mi"), col("ma"))
+      .withColumn("sd", element_at(col("std"), col("dim") + 1))
+      .withColumn("mival", element_at(col("mi"), col("dim") + 1))
+      .withColumn("maval", element_at(col("ma"), col("dim") + 1))
+    val agg = dims.groupBy("f", "dim").agg(
+      sum(col("n")).as("S"),
+      sum(col("n") * col("mu")).as("sum_mu"),
+      sum(col("n") * (col("sd") * col("sd") + col("mu") * col("mu"))).as("sum_m2"),
+      min("mival").as("mn"),
+      max("maval").as("mx"))
+      .collect()
+
+    val featureStats: Map[String, FeatureStats] =
+      agg.groupBy(_.getAs[Int]("f")).map { case (i, unsorted) =>
+        val rows = unsorted.sortBy(_.getAs[Int]("dim"))
+        val s = rows.map(_.getAs[Long]("S"))
+        val meanV = rows.map(r => r.getAs[Double]("sum_mu") / r.getAs[Long]("S"))
+        val varV = rows.zip(meanV).map { case (r, m) =>
           math.max(r.getAs[Double]("sum_m2") / r.getAs[Long]("S") - m * m, 0.0)
         }
-        Some(key -> FeatureStats(
+        features(i) -> FeatureStats(
           count = s.head,
           mean = meanV.toSeq,
           std = varV.map(math.sqrt).toSeq,
-          min = agg.map(_.getAs[Double]("mn")).toSeq,
-          max = agg.map(_.getAs[Double]("mx")).toSeq))
+          min = rows.map(_.getAs[Double]("mn")).toSeq,
+          max = rows.map(_.getAs[Double]("mx")).toSeq)
       }
-    }.toMap
 
-    withN.unpersist()
+    val Seq(episodesUsed, totalFrames) = Observed.longs(meta, "episodes", "frames")
     GlobalStats(episodesUsed, totalFrames, statsJsonlPath, featureStats)
   }
 

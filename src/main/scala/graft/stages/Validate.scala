@@ -1,6 +1,6 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Schemas, Status}
@@ -15,6 +15,13 @@ import graft.io.{Episodes, SingleFile}
   * (A1–A5), then a broadcast join against episode metadata adds the
   * rows-vs-meta check (J4), and a `when(...)` stack assembles the verdict
   * and typed issues array. 10k or 10M episodes is the same plan.
+  *
+  * Each piece of work runs once per call: the manifest is read with its
+  * declared schema (no inference job), the verdict aggregation is
+  * executed only by the sink writes, and the summary counts ride the
+  * `episodes.parquet` write as an `Observation`. The two tables read more
+  * than once (the existence-checked manifest and the sorted results) are
+  * cached for the call and released before it returns.
   *
   * Issue kinds mirror validate_one.py:
   *   frame_index_start, frame_index_not_sorted, timestamp_not_sorted,
@@ -104,16 +111,17 @@ object Validate {
   /** Full stage from a discover manifest: filter ACTIONABLE statuses (P6),
     * validate the referenced parquets, mark missing parquets, write the four
     * sink files (parquet, failures.jsonl, validated_episodes.jsonl,
-    * summary.yaml). Returns (total, ok, fail).
+    * summary.yaml). Returns (total, ok, fail). Leaves no cached table
+    * behind, so a later call in the same session sees the manifest as it
+    * is then.
     */
   def run(spark: SparkSession, manifestPath: String, metaDir: String,
       outDir: String, cfg: Config = Config()): (Long, Long, Long) = {
     import spark.implicits._
 
-    val manifest = spark.read.parquet(manifestPath)
+    val manifest = spark.read.schema(manifestSchema).parquet(manifestPath)
       .filter(col("status").isin(Status.Actionable: _*))
       .select("episode_index", "chunk", "parquet_uri", "video_front_uri", "video_wrist_uri")
-      .cache()
 
     val meta = loadEpisodesMeta(spark, s"$metaDir/episodes.jsonl")
 
@@ -143,14 +151,13 @@ object Validate {
     //    driver state is O(#directories), not O(#episodes). The glob may
     //    read extra non-manifest files; they are dropped after the cheap
     //    per-episode aggregation by the join below.
-    val ExplicitListMax = 100000L
-    val presentCount = present.count()
+    val ExplicitListMax = 100000
+    val listed = present.select("parquet_uri").as[String].limit(ExplicitListMax + 1).collect()
     val readPaths: Seq[String] =
-      if (presentCount <= ExplicitListMax)
-        present.select("parquet_uri").as[String].collect().toSeq.sorted
+      if (listed.length <= ExplicitListMax) listed.toSeq.sorted
       else
         present.select(regexp_replace(col("parquet_uri"), "/[^/]+$", "").as("dir"))
-          .distinct().as[String].collect().sorted.map(d => s"$d/episode_*.parquet")
+          .distinct().as[String].collect().sorted.map(d => s"$d/episode_*.parquet").toSeq
 
     // `input_file_name()` is a scheme-qualified, percent-ENCODED URI;
     // manifest URIs (Hadoop Path.toString) keep raw chars and may lack the
@@ -160,23 +167,6 @@ object Validate {
       val stripped = regexp_replace(c, "^file:/+", "/")
       coalesce(try_url_decode(stripped), stripped)
     }
-
-    val validated: DataFrame =
-      if (readPaths.isEmpty) spark.emptyDataFrame
-      else {
-        val aggs = episodeAggregates(Episodes.readRaw(spark, readPaths))
-        // inner join: drops any globbed file the manifest doesn't know
-        verdicts(aggs, meta, cfg)
-          .join(present.select(col("parquet_uri").as("src_uri"), col("chunk").as("m_chunk"),
-              col("video_front_uri"), col("video_wrist_uri")),
-            normUri(col("src_file")) === normUri(col("src_uri")), "inner")
-          .select(
-            col("episode_index"), col("m_chunk").as("chunk"),
-            col("src_uri").as("parquet_uri"),
-            col("video_front_uri"), col("video_wrist_uri"),
-            col("ok"), col("rows"), col("frame_min"), col("frame_max"),
-            col("expected_rows_meta"), col("issues"))
-      }
 
     // missing-parquet short-circuit rows (validate_from_manifest:55-69)
     val missing = withExists.filter(!col("parquet_exists"))
@@ -190,13 +180,30 @@ object Validate {
           coalesce(col("parquet_uri"), lit("null")).as("detail"))).as("issues"))
 
     val combined =
-      if (validated.isEmpty) missing
-      else validated.unionByName(missing)
+      if (readPaths.isEmpty) missing
+      else {
+        val aggs = episodeAggregates(Episodes.readRaw(spark, readPaths))
+        // inner join: drops any globbed file the manifest doesn't know
+        verdicts(aggs, meta, cfg)
+          .join(present.select(col("parquet_uri").as("src_uri"), col("chunk").as("m_chunk"),
+              col("video_front_uri"), col("video_wrist_uri")),
+            normUri(col("src_file")) === normUri(col("src_uri")), "inner")
+          .select(
+            col("episode_index"), col("m_chunk").as("chunk"),
+            col("src_uri").as("parquet_uri"),
+            col("video_front_uri"), col("video_wrist_uri"),
+            col("ok"), col("rows"), col("frame_min"), col("frame_max"),
+            col("expected_rows_meta"), col("issues"))
+          .unionByName(missing)
+      }
 
     val results = (if (cfg.skipVideo) combined else addVideoChecks(spark, combined, cfg))
       .orderBy("episode_index").cache()
 
-    results.write.mode(SaveMode.Overwrite).parquet(s"$outDir/episodes.parquet")
+    // the summary counts ride the first sink write
+    val counts = Observation()
+    results.observe(counts, count(lit(1)).as("total"), count_if(col("ok")).as("ok"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/episodes.parquet")
     SingleFile.writeJsonl(
       results.filter(!col("ok")).withColumn("issues", to_json(col("issues"))),
       s"$outDir/failures.jsonl")
@@ -206,8 +213,9 @@ object Validate {
         "video_front_uri", "video_wrist_uri"),
       s"$outDir/validated_episodes.jsonl")
 
-    val total = results.count()
-    val okN = results.filter(col("ok")).count()
+    results.unpersist()
+    withExists.unpersist()
+    val Seq(total, okN) = Observed.longs(counts, "total", "ok")
     SingleFile.writeText(spark, s"$outDir/summary.yaml",
       s"total: $total\nok: $okN\nfail: ${total - okN}\n")
     (total, okN, total - okN)

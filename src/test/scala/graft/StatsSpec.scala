@@ -215,4 +215,23 @@ class StatsSpec extends SparkSuite {
     assert(parsed.features.keySet === Set("action", Schemas.ObsStateStorage))
     assert(parsed.episodesUsed === gs.episodesUsed)
   }
+
+  test("an empty valid-ids file reduces to zero episodes, zero frames, no features") {
+    // the semi join against no ids can be optimized to an empty plan,
+    // which drops the observer the meta counters ride on
+    val root = tmpDir("stats_no_ids")
+    Files.createDirectories(Paths.get(root))
+    Files.write(Paths.get(s"$root/stats.jsonl"),
+      statsJsonl(Map(0L -> cleanFrames(0, 8), 1L -> cleanFrames(1, 9))).getBytes)
+    Files.write(Paths.get(s"$root/ids.jsonl"), Array.emptyByteArray)
+    val gs = Stats.run(spark, s"$root/stats.jsonl", s"$root/global_stats.json", features,
+      Some(s"$root/ids.jsonl"))
+    assert(gs.episodesUsed === 0L)
+    assert(gs.totalFrames === 0L)
+    assert(gs.features.isEmpty)
+    val parsed = graft.core.StatsDoc.parse(
+      graft.io.SingleFile.readText(spark, s"$root/global_stats.json").get).get
+    assert(parsed.episodesUsed === 0L)
+    assert(parsed.features.isEmpty)
+  }
 }

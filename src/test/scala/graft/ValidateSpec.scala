@@ -90,26 +90,30 @@ class ValidateSpec extends SparkSuite {
     assert(kinds.contains("rows_vs_meta"))
   }
 
-  test("full run writes the four sinks and counts match") {
-    // build a manifest the way discover would
-    val out = tmpDir("validate_out")
-    val manifest = tmpDir("manifest_dir") + "/episodes.parquet"
-    val files = Episodes.listEpisodeFiles(spark, s"$root/data")
+  /** A discover-shaped manifest over the fixture's episode files plus one
+    * missing parquet (episode 99), each row with the status `statusOf`
+    * gives its episode.
+    */
+  private def writeManifest(path: String, statusOf: Long => String): Unit = {
     import spark.implicits._
+    val files = Episodes.listEpisodeFiles(spark, s"$root/data") :+
+      s"$root/data/chunk-000/episode_000099.parquet"
     val mdf = files.map { f =>
       val ep = "episode_(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong
       (ep, "000", f, null.asInstanceOf[String], null.asInstanceOf[String],
-        false, false, 0L, "fp", "algo", "now", "NEW", null.asInstanceOf[String])
+        false, false, 0L, "fp", "algo", "now", statusOf(ep), null.asInstanceOf[String])
     }.toDF("episode_index", "chunk", "parquet_uri", "video_front_uri",
       "video_wrist_uri", "exists_front", "exists_wrist", "bytes_total",
       "fingerprint", "fingerprint_algo", "discovered_at", "status", "errors")
-    // add one missing-parquet row
-    val withMissing = mdf.unionByName(Seq(
-      (99L, "000", s"$root/data/chunk-000/episode_000099.parquet",
-        null.asInstanceOf[String], null.asInstanceOf[String], false, false,
-        0L, "fp", "algo", "now", "NEW", null.asInstanceOf[String]))
-      .toDF(mdf.columns: _*))
-    graft.io.SingleFile.writeParquetAtomic(withMissing, manifest)
+    graft.io.SingleFile.writeParquetAtomic(mdf, path)
+  }
+
+  test("full run writes the four sinks and counts match") {
+    import spark.implicits._
+    issuesByEpisode // builds the fixture
+    val out = tmpDir("validate_out")
+    val manifest = tmpDir("manifest_dir") + "/episodes.parquet"
+    writeManifest(manifest, _ => "NEW")
 
     val (total, okN, failN) = Validate.run(spark, manifest, s"$root/meta", out)
     assert(total === 9)  // 8 present + 1 missing
@@ -121,5 +125,26 @@ class ValidateSpec extends SparkSuite {
     assert(validated.select("episode_index").as[Long].collect().toSet === Set(0L))
     val summary = graft.io.SingleFile.readText(spark, s"$out/summary.yaml").get
     assert(summary === "total: 9\nok: 1\nfail: 8\n")
+  }
+
+  test("a rerun in the same session validates the manifest as it is now") {
+    // a cached manifest read would make every later run in the session
+    // see the first run's actionable rows
+    issuesByEpisode
+    val manifest = tmpDir("manifest_rerun") + "/episodes.parquet"
+    def run(statusOf: Long => String): (Long, Long, Long) = {
+      writeManifest(manifest, statusOf)
+      val out = tmpDir("validate_rerun")
+      val result = Validate.run(spark, manifest, s"$root/meta", out)
+      assert(spark.sharedState.cacheManager.isEmpty, "Validate.run left a cached table")
+      val summary = graft.io.SingleFile.readText(spark, s"$out/summary.yaml").get
+      assert(summary === s"total: ${result._1}\nok: ${result._2}\nfail: ${result._3}\n")
+      result
+    }
+    spark.catalog.clearCache()
+    assert(run(_ => "NEW") === ((9L, 1L, 8L)))
+    // only the clean episode 0 and the 7-wide episode 4 are actionable now
+    assert(run(ep => if (ep == 0L || ep == 4L) "CHANGED" else "UNCHANGED") === ((2L, 1L, 1L)))
+    assert(run(_ => "UNCHANGED") === ((0L, 0L, 0L)))
   }
 }
