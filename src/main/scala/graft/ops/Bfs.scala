@@ -15,9 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * frontier, one keyed join), drops already-known nodes with a left-anti
   * join, and appends the survivors at distance r. Work per round is
   * O(edges incident to the frontier), total O(E) across all rounds —
-  * the textbook level-synchronous BFS. `known` is localCheckpointed per
-  * round (it is read twice per round: anti-join + final union);
-  * the edge table is persisted once and released on return ([[Pins]]).
+  * the textbook level-synchronous BFS. `known` is checkpointed per round
+  * on an [[Iterate.Chain]] (it is read twice per round: anti-join + next
+  * union); the edge table is persisted once and released on return
+  * ([[Pins]]).
   * Unreached nodes are absent from the output (their distance is not
   * `maxHops`-representable, and emitting every node would make the
   * output graph-sized instead of reachable-set-sized).
@@ -35,34 +36,41 @@ object Bfs {
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var known = sources.select(col("v").cast("long").as("v"), lit(0L).as("dist"))
-      .distinct()
-      .localCheckpoint()
+    // `known` lives on a checkpoint chain; its size rides each checkpoint job
+    val chain = new Iterate.Chain
+    var known: DataFrame = null
+    def checkpointKnown(df: DataFrame): Long = {
+      val (k, m) = chain.next(df, count(lit(1)).as("n"))
+      known = k
+      m("n").asInstanceOf[Long]
+    }
+    var knownCount = checkpointKnown(
+      sources.select(col("v").cast("long").as("v"), lit(0L).as("dist")).distinct())
     var frontier = known.select("v")
     var r = 1
     var done = false
     while (r <= maxHops && !done) {
-      // the discovered-this-round count rides the checkpoint job as an
-      // observed metric (round-17): the old frontier.isEmpty was a second
-      // job per round answering a question the checkpoint already knew
-      val obs = org.apache.spark.sql.Observation()
       val next = edges.join(frontier.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v")).distinct()
         .join(known, Seq("v"), "left_anti")
         .select(col("v"), lit(r.toLong).as("dist"))
-        .observe(obs, count(lit(1)).as("n"))
-      known = known.unionByName(next).localCheckpoint()
+      // `next` is disjoint from `known` (the anti-join), so an unchanged
+      // size means this round discovered nothing
+      val grown = checkpointKnown(known.unionByName(next))
       // derive the NEXT frontier from the checkpointed table, never from
       // `next`'s lazy lineage: the expansion join must run exactly once
       // per round (inside the checkpoint) — a lazy frontier would re-run
-      // it for the drain check AND again for the next round's join
+      // it for the next round's join
       frontier = known.where(col("dist") === r).select("v")
       // a drained frontier ends the walk early — the remaining rounds
       // would join empty sets (cheap but pointless jobs)
-      done = obs.get("n").asInstanceOf[Long] == 0L
+      done = grown == knownCount
+      knownCount = grown
       r += 1
     }
-    Pins.sealOutput(known.select(col("v").as("node_id"), col("dist")), edges)
+    val out = Pins.sealOutput(known.select(col("v").as("node_id"), col("dist")), edges)
+    chain.release()
+    out
   }
 
   /** In-memory reference for tests. */

@@ -30,11 +30,9 @@ import org.apache.spark.storage.StorageLevel
   *    parity-tested reference implementation, but only competitive when
   *    the diameter is ≤ ~3.
   *
-  * Both loops truncate lineage with `localCheckpoint` every round —
+  * Both loops truncate lineage on an [[Iterate.Chain]] every round —
   * iterative self-referential plans otherwise grow without bound and
-  * re-analyze cost goes super-linear. A multi-hour production run should
-  * swap in reliable `checkpoint` (HDFS-backed) so executor loss cannot
-  * force a full recompute; the loop structure is unchanged.
+  * re-analyze cost goes super-linear.
   *
   * Convergence detection differs per algorithm. [[labelPropagation]] uses
   * the monotone invariant sum(label): every round can only lower labels,
@@ -66,13 +64,12 @@ object Cluster {
     */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    val chain = new CheckpointChain(spark)
+    val chain = new Iterate.Chain
     val edges = symmetricEdges(pairs, aCol, bCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = chain.next(
       edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id")))
+        .withColumn("cluster", col("id")))._1
     var prevSum = sumLabels(labels)
     var converged = false
     var i = 0
@@ -82,44 +79,32 @@ object Cluster {
         .select(col("dst").as("id"), col("cluster"))
       labels = chain.next(
         labels.unionByName(prop)
-          .groupBy("id").agg(min("cluster").as("cluster")))
+          .groupBy("id").agg(min("cluster").as("cluster")))._1
       val s = sumLabels(labels)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       i += 1
     }
-    require(converged, s"labelPropagation did not converge in $maxIter rounds " +
-      "(high-diameter graph — use alternatingStar)")
+    Iterate.require(converged, s"labelPropagation did not converge in $maxIter rounds " +
+      "(high-diameter graph — use alternatingStar)", edges, labels)
     edges.unpersist(blocking = false)
     labels
   }
 
-  /** Alternating large-star/small-star (Kiveris et al. SoCC'14): same
-    * output contract as [[labelPropagation]], O(log n) rounds on any graph.
-    *
-    * large-star(u): every strictly-larger neighbor of u is rewired to
-    * m(u) = min(Γ(u) ∪ u). small-star(u): u and its smaller neighbors are
-    * rewired to m(u), computed over the smaller neighbors only. Each
-    * half-round is one groupBy-min plus one join on the edge list; both
-    * preserve connectivity, and the fixpoint is a star forest whose
-    * centers are the component minima.
-    */
-  /** Driver-closure ceiling (round-17): a symmetrized pair set at or under
-    * this many rows is closed with an exact union-find ON THE DRIVER
-    * instead of O(log n) star rounds, each of which costs two checkpoint
-    * actions' worth of shuffle scheduling regardless of how little data
-    * moves. Driver-heap budget at the ceiling (round-18 advice — the old
-    * "few hundred MB" note under-counted): the collected tuple array (8M
+  /** Driver-closure ceiling: a symmetrized pair set at or under this many
+    * rows is closed with an exact union-find ON THE DRIVER instead of
+    * O(log n) star rounds, each of which costs two checkpoint actions'
+    * worth of shuffle scheduling regardless of how little data moves.
+    * Driver-heap budget at the ceiling: the collected tuple array (8M
     * Tuple2$mcJJ$sp objects ≈ 0.3 GiB), the union-find HashMap of up to
     * 16M boxed-Long entries (≈ 1 GiB with entry objects), and the result
     * array live SIMULTANEOUSLY — roughly 1.5–2 GiB transient, the same
     * size class as a large broadcast hash relation (Spark caps those at
     * 8 GiB), against the 24g driver. The result returns via
     * `createDataset` (a LocalRelation, driver-resident until consumed) —
-    * one more output-sized copy. Intermediate Map/Seq copies were dropped
-    * in round 18; raising the ceiling needs a re-count of this budget.
-    * Same labels by construction: component = minimum member id, exactly.
-    * Near-dup PAIR sets are pairs-of-duplicates, not corpus rows, so even
+    * one more output-sized copy. Raising the ceiling needs a re-count of
+    * this budget. Same labels by construction: component = minimum member
+    * id, exactly. Near-dup PAIR sets are pairs-of-duplicates, not corpus rows, so even
     * 100 TB corpora commonly land under this; past it the distributed
     * large-star/small-star loop runs unchanged. Overridable per call so
     * the parity spec can force the distributed path on small graphs.
@@ -128,11 +113,11 @@ object Cluster {
 
   /** Exact min-label connected components via union-find, materialized
     * straight into the result rows — no intermediate Map/Seq copies on the
-    * driver (round-18 advice: at the 8M-row ceiling each extra boxed copy
-    * is hundreds of MB of heap held at the peak). Unions always point the
-    * larger root at the smaller and every member starts as its own root,
-    * so each component's root IS its minimum member id — the exact label
-    * contract. Pure, for the driver-closure regime and its spec.
+    * driver (at the 8M-row ceiling each extra boxed copy is hundreds of MB
+    * of heap held at the peak). Unions always point the larger root at the
+    * smaller and every member starts as its own root, so each component's
+    * root IS its minimum member id — the exact label contract. Pure, for
+    * the driver-closure regime and its spec.
     */
   private[graft] def unionFindMinLabels(edges: Array[(Long, Long)])
       : Array[(Long, Long)] = {
@@ -157,6 +142,16 @@ object Cluster {
     out
   }
 
+  /** Alternating large-star/small-star (Kiveris et al. SoCC'14): same
+    * output contract as [[labelPropagation]], O(log n) rounds on any graph.
+    *
+    * large-star(u): every strictly-larger neighbor of u is rewired to
+    * m(u) = min(Γ(u) ∪ u). small-star(u): u and its smaller neighbors are
+    * rewired to m(u), computed over the smaller neighbors only. Each
+    * half-round is one groupBy-min plus one join on the edge list; both
+    * preserve connectivity, and the fixpoint is a star forest whose
+    * centers are the component minima.
+    */
   def alternatingStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50,
       // observer for scale probes: (round, edge count after the round,
@@ -166,19 +161,25 @@ object Cluster {
       onRound: (Int, Long, Double) => Unit = (_, _, _) => (),
       driverClosureCeiling: Long = DriverClosureCeiling): DataFrame = {
     val spark = pairs.sparkSession
-    val chain = new CheckpointChain(spark)
-    val nodesChain = new CheckpointChain(spark)
+    val chain = new Iterate.Chain
+    val nodesChain = new Iterate.Chain
+    // Convergence probe: the star fixpoint is literally an UNCHANGED edge
+    // set, so probe the edge set itself — (count, Σ xxhash64(src,dst)) in
+    // exact decimal, observed on the checkpoint job that writes it.
+    // Unchanged fingerprint on a changed set is a ~2^-64 hash-sum
+    // collision. (A per-src label sum is no fixpoint certificate here: the
+    // src population itself shifts between rounds, so a coincidental equal
+    // sum could exit early with wrong labels.)
+    def fingerprinted(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+      val (out, m) = chain.next(df, count(lit(1)).as("n"),
+        sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")).as("h"))
+      (out, (m("n").asInstanceOf[Long], Option(m("h").asInstanceOf[java.math.BigDecimal])
+        .getOrElse(java.math.BigDecimal.ZERO)))
+    }
     // Symmetrize ONCE — `pairs` is typically an expensive plan (an LSH /
     // blocked-Jaccard pipeline); the checkpoint is the barrier that keeps
-    // it from running twice for nodes + edges. The initial fingerprint
-    // rides the same job as an observed metric (round-17).
-    val obs0 = org.apache.spark.sql.Observation()
-    var edges = chain.next(symmetricEdges(pairs, aCol, bCol)
-      .observe(obs0, count(lit(1)).as("n"),
-        sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")).as("h")))
-    val fp0 = (obs0.get("n").asInstanceOf[Long],
-      Option(obs0.get("h").asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO))
+    // it from running twice for nodes + edges.
+    var (edges, prevFp) = fingerprinted(symmetricEdges(pairs, aCol, bCol))
     // Driver-closure regime: the symmetrized pair set fits the bounded
     // collect — close it exactly with union-find, no star rounds at all.
     // Node universe = edge endpoints, identical to the distributed path's
@@ -186,7 +187,7 @@ object Cluster {
     // NOTE: `onRound` does not fire on this path (there are no rounds to
     // observe); probes that need per-round telemetry must force the
     // distributed loop via driverClosureCeiling = 0.
-    if (fp0._1 <= driverClosureCeiling) {
+    if (prevFp._1 <= driverClosureCeiling) {
       import spark.implicits._
       val es = edges.select(col("src"), col("dst"))
         .as[(Long, Long)].collect() // bounded by driverClosureCeiling
@@ -199,7 +200,7 @@ object Cluster {
     }
     // All nodes ever seen: star rounds can drop a component minimum from
     // the `src` side once it only appears as a star center's target.
-    val nodes = nodesChain.next(edges.select(col("src").as("id")).distinct())
+    val nodes = nodesChain.next(edges.select(col("src").as("id")).distinct())._1
 
     def edgeLabels: DataFrame =
       edges.groupBy("src").agg(least(col("src"), min(col("dst"))).as("cluster"))
@@ -209,15 +210,6 @@ object Cluster {
       nodes.join(edgeLabels.withColumnRenamed("cluster", "c"), Seq("id"), "left")
         .select(col("id"), coalesce(col("c"), col("id")).as("cluster"))
 
-    // Convergence probe: the star fixpoint is literally an UNCHANGED edge
-    // set, so probe the edge set itself — (count, Σ xxhash64(src,dst)) in
-    // exact decimal. Unchanged fingerprint on a changed set is a ~2^-64
-    // hash-sum collision; this replaces the round-5 per-src label sum,
-    // whose equality over a set whose src population itself shifts between
-    // rounds was not a fixpoint certificate (a coincidental equal sum
-    // could exit early with wrong labels). Since round 17 the aggregation
-    // rides each checkpoint job as an observed metric — zero extra passes.
-    var prevFp = fp0
     var converged = prevFp._1 == 0L // no edges at all = already a fixpoint
     var i = 0
     while (!converged && i < maxIter) {
@@ -229,7 +221,7 @@ object Cluster {
       val large = edges.join(mLarge, "src")
         .filter(col("dst") > col("src"))
         .select(col("dst").as(aCol), col("m").as(bCol))
-      edges = chain.next(symmetricEdges(large, aCol, bCol))
+      edges = chain.next(symmetricEdges(large, aCol, bCol))._1
       // small-star: per node u over its smaller-or-equal neighbors N,
       // m = min(N); rewire u and N to m
       val directed = edges.filter(col("dst") < col("src"))
@@ -237,23 +229,16 @@ object Cluster {
       val small = directed.join(mSmall, "src")
         .select(col("dst").as(aCol), col("m").as(bCol))
         .union(mSmall.select(col("src").as(aCol), col("m").as(bCol)))
-      // the fingerprint rides the small-star checkpoint job as an observed
-      // metric (round-17) — the standalone edgeFingerprint() pass per round
-      // was a third job re-reading the table the checkpoint just wrote
-      val obs = org.apache.spark.sql.Observation()
-      edges = chain.next(symmetricEdges(small, aCol, bCol)
-        .observe(obs, count(lit(1)).as("n"),
-          sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")).as("h")))
-      val fp = (obs.get("n").asInstanceOf[Long],
-        Option(obs.get("h").asInstanceOf[java.math.BigDecimal])
-          .getOrElse(java.math.BigDecimal.ZERO))
+      val (e, fp) = fingerprinted(symmetricEdges(small, aCol, bCol))
+      edges = e
       converged = fp._1 == prevFp._1 && fp._2.compareTo(prevFp._2) == 0
       prevFp = fp
       i += 1
       onRound(i, fp._1, (System.nanoTime() - roundT0) / 1e9)
     }
-    require(converged, s"alternatingStar did not converge in $maxIter rounds")
-    val out = chain.next(currentLabels) // frees the final edge round too
+    Iterate.require(converged, s"alternatingStar did not converge in $maxIter rounds",
+      edges, nodes)
+    val out = chain.next(currentLabels)._1 // frees the final edge round too
     nodesChain.release()
     out
   }

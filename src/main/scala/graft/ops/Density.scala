@@ -85,7 +85,7 @@ object Density {
     // Pin the (corpus-sized, narrow) result BEFORE releasing the neighbor
     // graph — returning the lazy plan and unpersisting would re-run the
     // pairwise join once per downstream action. Same rolling-materialization
-    // discipline as the closure's CheckpointChain.
+    // discipline as the closure's checkpoint chain ([[Iterate.Chain]]).
     val pinned = out.localCheckpoint()
     edges.unpersist(blocking = false)
     coreFlags.unpersist(blocking = false)

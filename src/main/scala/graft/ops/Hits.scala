@@ -25,21 +25,20 @@ import org.apache.spark.storage.StorageLevel
   * in/out-degree d keeps d·Scale < 2^63 up to d ≈ 9·10⁶ — far past any
   * realistic per-node degree in a curation graph. Past it, Long overflow
   * flips signs — and that IS detected: every half-step's rescale
-  * aggregate also takes min(score) and raise_error()s on a negative
-  * (scores are sums of non-negatives, so any negative is an overflow),
-  * turning the silent-garbage mode into a loud failure (round-10 advice).
+  * aggregate also takes min(score) and [[checkOverflow]] refuses a
+  * negative (scores are sums of non-negatives, so any negative is an
+  * overflow), turning the silent-garbage mode into a loud failure.
   *
   * Scale shape: two regimes on the same arithmetic. Node-sized score
   * tables broadcast into edge copies pre-partitioned by each half-step's
   * GROUP key (src / dst) — the broadcast join preserves that
   * partitioning, so every per-round groupBy runs on co-located data and
   * the edge-sized shuffle is paid twice TOTAL, not twice per round. Past
-  * the broadcast ceiling (1 M nodes — [[PageRank.BcastNodeCeiling]]; the
-  * table is re-broadcast every half-step) the keyed-join form runs
-  * unchanged, including the overflow guard: `rescaled` is shared by both
-  * regimes, so the raise_error projection is regime-independent.
-  * Per-round localCheckpoint cuts the 2·iters-join lineage; output
-  * sealed, all edge pins released ([[Pins]]).
+  * the broadcast ceiling ([[Iterate.BcastNodeCeiling]]; the table is
+  * re-broadcast every half-step) the keyed-join form runs unchanged,
+  * including the overflow guard: `rescaled` is shared by both regimes.
+  * Each score lives on its own [[Iterate.Chain]], checkpointed every
+  * half-step; output sealed, all pins released ([[Pins]]).
   */
 object Hits {
 
@@ -50,10 +49,10 @@ object Hits {
     */
   def rescaleDivisor(mx: Long): Long = math.max(1L, (mx + Scale - 1L) / Scale)
 
-  /** Overflow guard (round-18: driver-side, fed by the observed min — the
-    * old in-plan assert_true shape): scores are sums of non-negatives, so
-    * a negative min can ONLY mean a Long sum sign-flipped — the ~9.2e6
-    * per-node degree budget (scaladoc) was exceeded. Loud, never silent.
+  /** Overflow guard, fed by the observed min: scores are sums of
+    * non-negatives, so a negative min can ONLY mean a Long sum
+    * sign-flipped — the ~9.2e6 per-node degree budget (scaladoc) was
+    * exceeded. Loud, never silent.
     */
   def checkOverflow(mn: Long): Unit =
     require(mn >= 0, s"graft hits: half-step Long sum overflowed " +
@@ -67,7 +66,7 @@ object Hits {
     * mass.
     */
   def run(edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, bcastNodeCeiling: Long = PageRank.BcastNodeCeiling)
+      iters: Int, bcastNodeCeiling: Long = Iterate.BcastNodeCeiling)
       : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val edges = edgesDf
@@ -78,93 +77,64 @@ object Hits {
       .union(edges.select(col("dst").as("v")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Broadcast regime (score tables are node-sized): pre-partition the
-    // edge table ONCE by each half-step's GROUP key and broadcast the
-    // score side — the broadcast join preserves the edge partitioning, so
-    // every groupBy lands on already-co-located data and the per-half-step
-    // edge-sized shuffle disappears (2·iters shuffles → 2, paid once).
-    // Past the broadcast ceiling the keyed-join form below runs unchanged.
-    // Ceiling = PageRank's 1M-node figure, NOT the 32M edge-payload
-    // threshold Triangles/RandomWalk use: the score table is a row-per-node
-    // hashed relation (~64 B/row driver-side), and it is re-broadcast
-    // 2·iters times (once per half-step) — 1M nodes ≈ 64 MB per broadcast
-    // is the most the driver should absorb every half-step. 32M would have
-    // meant two ~2 GiB collects+broadcasts per round: an OOM cliff.
-    // (bcastNodeCeiling is a test knob: the fallback-parity spec pins the
-    // keyed-join regime to the broadcast regime's exact output.)
+    // Broadcast regime: pre-partition the edge table ONCE by each
+    // half-step's GROUP key and broadcast the score side, so every groupBy
+    // lands on already-co-located data (2·iters edge shuffles → 2, paid
+    // once). The ceiling is the row-per-node figure, NOT the 32M
+    // edge-payload threshold: the score table is re-broadcast 2·iters
+    // times, and 32M nodes would mean two ~2 GiB collects+broadcasts per
+    // round.
     val bcastScores = nodes.count() <= bcastNodeCeiling
-    val edgesByDst = if (bcastScores)
-      edges.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-      else edges
-    val edgesBySrc = if (bcastScores)
-      edges.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-      else edges
+    def edgesBy(key: String): DataFrame = if (bcastScores)
+      edges.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK) else edges
+    val (edgesByDst, edgesBySrc) = (edgesBy("dst"), edgesBy("src"))
     def scoreSide(s: DataFrame): DataFrame =
       if (bcastScores) broadcast(s) else s
 
     // integer max-rescale: x -> x DIV max(1, ceil(max(x)/Scale)). The
-    // max/min aggregate RIDES the checkpoint action as observed metrics
-    // (round-18, same pattern as KCore's surviving-edge count): the old
-    // form ran a separate 1-row aggregate job per half-step and attached
-    // the divisor via a broadcast crossJoin — one aggregate job + one
-    // broadcast build per half-step, both gone now that the divisor is a
-    // driver-side literal. Arithmetic is unchanged (same integer DIV on
-    // the same Long max).
-    // The raw scores are pinned FIRST: the rescale projection re-reads
-    // them, and without the pin each half-step would double-evaluate its
-    // join lineage (measured 7.9 s → 40+ s at sf0.1 when the pin sat
-    // after the rescale instead of before the fan-out).
-    def rescaled(scores: DataFrame, c: String): DataFrame = {
-      // localCheckpoint, NOT a lazy persist (round-17 finding): each
-      // half-step reads its predecessor TWICE (next half-step's join +
-      // the final output join), so without an eager cut the logical tree
-      // doubles per half-step — and AQE renders the plan string on every
-      // stage update (AdaptiveSparkPlanExec.onUpdatePlan → explainString),
-      // which turned 2^(2·iters) nested copies into ~80 s of pure driver
-      // string building at sf0.1. The PageRank/LabelProp lazy chains are
-      // safe because their fan-out is 1; fan-out-2 iteration must stay
-      // checkpointed.
-      val obs = org.apache.spark.sql.Observation()
-      val pinned = scores
-        .observe(obs, max(col(c)).as("_mx"), min(col(c)).as("_mn"))
-        .localCheckpoint() // eager: obs is complete when this returns
-      // min rides the same observation as max (no extra pass): scores are
-      // sums of non-negatives, so min < 0 can ONLY mean a Long sum
-      // sign-flipped — the degree budget (scaladoc) was exceeded.
-      val mn = Option(obs.get("_mn")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      checkOverflow(mn)
-      val mx = Option(obs.get("_mx")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val div = rescaleDivisor(mx)
+    // max/min aggregate rides the checkpoint job as observed metrics, so
+    // the divisor is a driver-side literal (no aggregate job per
+    // half-step). The raw scores are pinned BEFORE the rescale projection
+    // re-reads them, or each half-step would evaluate its join lineage
+    // twice. The pin is a checkpoint, not a lazy persist: each half-step
+    // reads its predecessor TWICE (next half-step's join + the output
+    // join), so without an eager cut the logical tree doubles per
+    // half-step, and AQE renders the plan string on every stage update —
+    // 2^(2·iters) nested copies were ~80 s of driver time at sf0.1.
+    def rescaled(chain: Iterate.Chain, scores: DataFrame, c: String): DataFrame = {
+      val (pinned, m) = chain.next(scores, max(col(c)).as("_mx"), min(col(c)).as("_mn"))
+      checkOverflow(m("_mn").asInstanceOf[Long])
+      val div = rescaleDivisor(m("_mx").asInstanceOf[Long])
       pinned.select(col("v"), expr(s"$c DIV ${div}L").as(c))
     }
 
-    var hub = nodes.select(col("v"), lit(Scale).as("h")).localCheckpoint()
+    val (hubChain, authChain) = (new Iterate.Chain, new Iterate.Chain)
+    var hub = hubChain.next(nodes.select(col("v"), lit(Scale).as("h")))._1
     var auth: DataFrame = null
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       // authority half-step: a(v) = Σ_{u→v} h(u), absent in-edges → 0
       val aRaw = edgesByDst
         .join(scoreSide(hub.withColumnRenamed("v", "src")), "src")
         .groupBy(col("dst").as("v")).agg(sum("h").as("a"))
-      // each rescaled() output is a cheap projection over its internal
-      // pin, so no further checkpoints are needed: auth feeds the hub
-      // half-step (and, in the last round, the output join) straight off
-      // the pinned table
-      auth = rescaled(
+      auth = rescaled(authChain,
         nodes.join(aRaw, Seq("v"), "left")
           .select(col("v"), coalesce(col("a"), lit(0L)).as("a")), "a")
       // hub half-step: h(v) = Σ_{v→w} a(w), absent out-edges → 0
       val hRaw = edgesBySrc
         .join(scoreSide(auth.withColumnRenamed("v", "dst")), "dst")
         .groupBy(col("src").as("v")).agg(sum("a").as("h"))
-      hub = rescaled(
+      hub = rescaled(hubChain,
         nodes.join(hRaw, Seq("v"), "left")
           .select(col("v"), coalesce(col("h"), lit(0L)).as("h")), "h")
     }
-    Pins.sealOutput(
+    val out = Pins.sealOutput(
       hub.join(auth, "v")
         .select(col("v").as("node_id"), col("h").as("hub_scaled"),
           col("a").as("auth_scaled")),
       edges, nodes, edgesByDst, edgesBySrc)
+    hubChain.release()
+    authChain.release()
+    out
   }
 
   /** In-memory reference for tests (same integer arithmetic). */

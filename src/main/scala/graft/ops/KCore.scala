@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape per round: one map-side-combined degree aggregation over
   * the surviving edges and one semi-join to drop edges touching peeled
   * nodes — both keyed equi-shuffles, nothing quadratic; lineage cut with
-  * CheckpointChain every 4 rounds.
+  * an [[Iterate.Chain]] checkpoint every round.
   */
 object KCore {
 
@@ -31,9 +31,8 @@ object KCore {
     */
   def run(edgesDf: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int,
-      bcastNodeCeiling: Long = PageRank.BcastNodeCeiling): DataFrame = {
+      bcastNodeCeiling: Long = Iterate.BcastNodeCeiling): DataFrame = {
     require(rounds >= 1 && k >= 1, s"need rounds >= 1 and k >= 1")
-    val spark = edgesDf.sparkSession
     val dir = edgesDf.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     var edges = dir
@@ -46,20 +45,14 @@ object KCore {
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var edgeCount = edges.count()
-    // Broadcastability decided ONCE, from ROUND 1's keep table (round-18,
-    // tightening the round-17 rule): the keep table only ever SHRINKS
-    // (peeling is monotone — dropping edges can only lower surviving
-    // degrees), so "round-1 keep count under the ceiling" certifies every
-    // later round's keep table too. Deciding from keep1 instead of the
-    // full distinct-src node count (a) deletes the up-front distinct+count
-    // pass over the edge list entirely — round 1's keep0.count() below
-    // materializes a table every round needs anyway — and (b) keeps the
-    // broadcast regime for graphs whose NODE count exceeds the ceiling but
-    // whose degree-≥-k core never does (the round-17 rule permanently
-    // demoted that boundary regime to keyed joins).
+    // Broadcastability is decided ONCE, from round 1's keep table: peeling
+    // is monotone (dropping edges can only lower surviving degrees), so the
+    // keep table only shrinks and "round-1 keep count under the ceiling"
+    // certifies every later round too. This needs no separate node-count
+    // pass, and keeps the broadcast regime for graphs whose node count
+    // exceeds the ceiling but whose degree-≥-k core does not.
     var bcastKeep = false
-    var chain = List(edges)
-    val ckpt = new CheckpointChain(spark)
+    val chain = new Iterate.Chain
     var i = 1
     var stable = false
     while (i <= rounds && !stable) {
@@ -75,28 +68,22 @@ object KCore {
       if (i == 1) bcastKeep = keep0.count() <= bcastNodeCeiling
       val keep = if (bcastKeep) broadcast(keep0) else keep0
       // drop every edge with a peeled endpoint (two semi-joins); the
-      // surviving-edge count rides the same checkpoint job as an observed
-      // metric (round-17) instead of a second count() action per round.
-      // Both probes key the broadcast on the SAME `v` column (no alias):
-      // the two exchanges then canonicalize identically and ReuseExchange
-      // builds the keep relation once per round instead of twice.
-      val obs = org.apache.spark.sql.Observation()
-      val next0 = edges
+      // surviving-edge count rides the checkpoint job. Both probes key the
+      // broadcast on the SAME `v` column (no alias): the two exchanges then
+      // canonicalize identically and ReuseExchange builds the keep relation
+      // once per round instead of twice.
+      // The cut is EVERY round (PageRank and LabelProp cut every 4 or 8): each
+      // round references the previous edge plan THREE times (degree agg +
+      // both semi-joins), so the un-cut logical plan grows 3^rounds and
+      // Catalyst analysis, not execution, dominates within a handful of
+      // rounds.
+      val (next, m) = chain.next(edges
         .join(keep, col("src") === col("v"), "left_semi")
         .join(keep, col("dst") === col("v"), "left_semi")
-        .select("src", "dst")
-        .observe(obs, count(lit(1)).as("n"))
-      // cut lineage EVERY round (not every 4 like PageRank/LabelProp):
-      // each round references the previous edge plan THREE times (degree
-      // agg + both semi-joins), so the un-cut logical plan grows 3^rounds
-      // and Catalyst analysis/rendering — not execution — dominates wall
-      // clock within a handful of rounds. Fan-out 1 ops can afford lazy
-      // cuts; fan-out 3 cannot.
-      val next = ckpt.next(next0)
-      val nextCount = obs.get("n").asInstanceOf[Long]
+        .select("src", "dst"), count(lit(1)).as("n"))
+      val nextCount = m("n").asInstanceOf[Long]
       keep0.unpersist(false)
-      chain.foreach(_.unpersist(false))
-      chain = Nil
+      edges.unpersist(false)
       edges = next
       // early exit: peeling is idempotent once no edge was dropped, so the
       // remaining rounds are identity maps — the result is EXACTLY the

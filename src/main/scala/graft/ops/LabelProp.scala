@@ -16,18 +16,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design (identical to PageRank's): the symmetrized edge list is
   * shuffled ONCE onto dst and persisted; each round joins the nodes-sized
-  * label table (broadcast under the same 1M-node cutoff) and aggregates
-  * per (dst, label) with map-side combine — zero per-round edge shuffles on
-  * the broadcast path. The argmax is `max(struct(cnt, -label))`, a single
-  * aggregate, not a per-group sort.
-  *
-  * Lineage/plan-depth posture differs per regime (round-18 doc fix): the
-  * broadcast regime builds a LAZY O(rounds)-deep chain (each round consumed
-  * exactly once by the next round's broadcast build; depth bounded by the
-  * fixed-rounds contract), cut with an eager localCheckpoint every
-  * [[PageRank.BcastChainCut]] rounds so live broadcasts stay bounded; the
-  * keyed-join fallback regime is a materializing loop whose lineage is cut
-  * with CheckpointChain every 4 rounds, keeping ITS plan depth O(1).
+  * label table (broadcast under [[Iterate.BcastNodeCeiling]]) and
+  * aggregates per (dst, label) with map-side combine — zero per-round
+  * edge shuffles on the broadcast path. The argmax is
+  * `max(struct(cnt, -label))`, a single aggregate, not a per-group sort.
+  * Rounds run through [[Iterate.fixedRounds]]: a lazy chain cut every
+  * [[Iterate.BcastChainCut]] rounds in the broadcast regime, a
+  * materializing loop cut every [[Iterate.KeyedCut]] rounds in the keyed
+  * regime.
   */
 object LabelProp {
 
@@ -36,10 +32,9 @@ object LabelProp {
     * (node_id, community) for every node incident to an edge.
     */
   def run(edgesDf: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, bcastNodeCeiling: Long = PageRank.BcastNodeCeiling)
+      rounds: Int, bcastNodeCeiling: Long = Iterate.BcastNodeCeiling)
       : DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edgesDf.sparkSession
     val dir = edgesDf.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val edges = dir
@@ -50,65 +45,27 @@ object LabelProp {
     val nodes = edges.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
-    require(n > 0, "empty graph")
+    Iterate.require(n > 0, "empty graph", edges, nodes)
     val broadcastLabels = n <= bcastNodeCeiling
+    val side: DataFrame => DataFrame = if (broadcastLabels) broadcast(_) else identity
+    // on the dst-pre-partitioned copy the two-level aggregate runs
+    // exchange-free: hash(dst) satisfies both the (dst, label) and the dst
+    // clustering
     val edgesD = edges
-      .repartition(if (broadcastLabels) col("dst") else col("src"))
+      .repartition(col(if (broadcastLabels) "dst" else "src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgesD.count()
-
-    var lab = nodes.withColumn("label", col("v"))
-    val chainCut = new CheckpointChain(spark)
-    if (broadcastLabels) {
-      // LAZY broadcast chain (round-17, same rationale as PageRank): each
-      // round consumes the previous label table exactly once via its
-      // broadcast build, the two-level aggregate runs exchange-free on the
-      // dst-pre-partitioned edge copy (hash(dst) satisfies both the
-      // (dst,label) and the dst clustering), so no per-round persist /
-      // count barrier is needed — one sealing action builds the nested
-      // broadcasts bottom-up, each exactly once. Cut every BcastChainCut
-      // rounds (round-18 advice) so live broadcasts stay bounded by one
-      // window, not `rounds`.
-      for (i <- 1 to rounds) {
-        lab = edgesD
-          .join(broadcast(lab.withColumnRenamed("v", "src")), "src")
-          .groupBy(col("dst"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("dst").as("v2"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-          .select(col("v2").as("v"), (-col("m.nl")).as("label"))
-        if (i % PageRank.BcastChainCut == 0 && i < rounds)
-          lab = chainCut.next(lab)
-      }
-    } else {
-      lab = lab.persist(StorageLevel.MEMORY_AND_DISK)
-      lab.count()
-      var chain = List(lab)
-      val ckpt = new CheckpointChain(spark)
-      for (i <- 1 to rounds) {
-        val next0 = edgesD.join(lab, edgesD("src") === lab("v"))
-          .groupBy(col("dst"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("dst").as("v2"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-          .select(col("v2").as("v"), (-col("m.nl")).as("label"))
-        val next =
-          if (i % 4 == 0) ckpt.next(next0)
-          else next0.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        chain.foreach(_.unpersist(false))
-        chain = if (i % 4 == 0) Nil else List(next)
-        lab = next
-      }
+    Iterate.fixedRounds(nodes.withColumn("label", col("v")), rounds, broadcastLabels) { lab =>
+      edgesD.join(side(lab.withColumnRenamed("v", "src")), "src")
+        .groupBy(col("dst"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy(col("dst").as("v2"))
+        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
+        .select(col("v2").as("v"), (-col("m.nl")).as("label"))
+    } { lab =>
+      Pins.sealOutput(lab.select(col("v").as("node_id"), col("label").as("community")),
+        edges, nodes, edgesD)
     }
-    // seal: materialize the final labeling, then release every pin the
-    // loop left behind (graph tables + the last round's frame); unpersist
-    // on a checkpoint-chain frame is a no-op
-    val out = Pins.sealOutput(
-      lab.select(col("v").as("node_id"), col("label").as("community")),
-      edges, nodes, edgesD, lab)
-    chainCut.release() // sealed — the last mid-chain cut's blocks can go
-    out
   }
 
   /** In-memory reference for tests (same synchronous min-tiebreak rule). */

@@ -18,33 +18,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design: the edge list is shuffled ONCE onto its join key and
   * persisted; each iteration is one shuffle (groupBy dst) + one broadcast-
-  * or sort-merge join against the (nodes-sized) rank table. Lineage is cut
-  * with localCheckpoint every few rounds (same rolling-chain pattern as
-  * ops.Cluster) so the plan does not grow with iterations.
+  * or sort-merge join against the (nodes-sized) rank table, run by
+  * [[Iterate.fixedRounds]], which cuts lineage so the plan does not grow
+  * with iterations.
   */
 object PageRank {
 
   val Scale: Long = 1000000000000L // 1e12 mass units
-
-  /** Broadcast-regime ceiling for ROW-PER-NODE score/label tables that are
-    * re-broadcast every iteration (~64 B/row in the driver-built hashed
-    * relation → 1M nodes ≈ 64 MB per round): shared by PageRank, PPR,
-    * HITS and LabelProp. Edge-payload broadcasts (array-packed, 8–16
-    * B/row, built once) use the separate 32M figure in
-    * Triangles/RandomWalk. Overridable per call as a test knob so the
-    * keyed-join fallback regime is parity-testable on small graphs.
-    */
-  val BcastNodeCeiling: Long = 1000000L
-
-  /** Broadcast-regime lazy chains are cut with an eager localCheckpoint
-    * every this-many rounds (round-18 advice): each uncut round keeps two
-    * node-sized broadcasts (rank + contrib) referenced until the sealing
-    * action, so the cut bounds live broadcasts to ≤ 2·BcastChainCut
-    * tables (~1 GiB at the 1M-node ceiling) instead of 2·iters. Shared by
-    * PageRank.run/personalized and LabelProp.run (one table per round
-    * there).
-    */
-  val BcastChainCut: Int = 8
 
   /** Run `iters` fixed iterations over a directed edge list (srcCol,
     * dstCol). The node universe is the SOURCE side: every node must have
@@ -54,34 +34,69 @@ object PageRank {
     * sink-bearing inputs first. Returns (node_id, rank_scaled).
     */
   def run(edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, bcastNodeCeiling: Long = BcastNodeCeiling): DataFrame = {
+      iters: Int, bcastNodeCeiling: Long = Iterate.BcastNodeCeiling): DataFrame =
+    rank(edgesDf, srcCol, dstCol, None, iters, bcastNodeCeiling)
+
+  /** PERSONALIZED PageRank: the teleport mass lands only on `seeds`
+    * (one column `v`, each a graph node), so ranks measure proximity to
+    * the seed set — the "relevance to a trusted corpus" signal behind
+    * seed-expanded curation (find pages close to known-good ones). Same
+    * integer contract as [[run]]: init = Scale DIV |S| on seeds (0
+    * elsewhere), per-round r(v) = b(v) + ⌊17·Σ contrib⌋/20 with the
+    * per-NODE base b(v) = (3·Scale/20) DIV |S| on seeds and 0 elsewhere.
+    * [[run]] is the case where every node is a seed.
+    */
+  def personalized(edgesDf: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, iters: Int,
+      bcastNodeCeiling: Long = Iterate.BcastNodeCeiling): DataFrame =
+    rank(edgesDf, srcCol, dstCol, Some(seeds), iters, bcastNodeCeiling)
+
+  private def rank(edgesDf: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame], iters: Int, bcastNodeCeiling: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edgesDf.sparkSession
     val edges = edgesDf
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE node-stats pass replaces three separate edge-list passes
-    // (deg aggregation, nodes distinct, dangling-check dst-distinct +
-    // anti-join — round-17, guide §1.2 "remove unnecessary passes"):
-    // per node, `d` = out-degree (each edge contributes one src tag) and
-    // `_src` records whether the node ever appears as a source — a node
-    // seen only as dst is exactly a dangling sink.
-    val stats = edges.select(col("src").as("v"), lit(1).as("_s"))
+    val seedSet = seeds.map(_.select(col("v").cast("long").as("v")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val nSeeds = seedSet.map(_.count())
+    // ONE node-stats pass for degree, node universe, dangling check and
+    // seed membership: per node, `d` = out-degree (each edge contributes
+    // one src tag) and `_src` records whether the node ever appears as a
+    // source — a node seen only as dst is exactly a dangling sink. The
+    // seed flag rides the same aggregate via a broadcast left join.
+    val nodeStats = edges.select(col("src").as("v"), lit(1).as("_s"))
       .unionAll(edges.select(col("dst").as("v"), lit(0).as("_s")))
       .groupBy("v").agg(sum("_s").as("d"), max("_s").as("_src"))
+    val stats = seedSet.fold(nodeStats)(s =>
+        nodeStats.join(broadcast(s.withColumn("_sd", lit(1))), Seq("v"), "left"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val isSeed = if (seeds.isEmpty) lit(true) else col("_sd").isNotNull
     val cnts = stats.agg(
-      count(when(col("_src") === 1, 1)).as("n"),
-      count(when(col("_src") === 0, 1)).as("nd")).head()
-    val n = cnts.getLong(0)
-    val nDangling = cnts.getLong(1)
-    require(n > 0, "empty graph")
-    require(nDangling == 0L, s"$nDangling node(s) have in-edges but no " +
+      count(when(col("_src") === 1, 1)),
+      count(when(col("_src") === 0, 1)),
+      count(when(isSeed && col("_src") === 1, 1))).head()
+    val (n, nDangling, nSeedsInGraph) = (cnts.getLong(0), cnts.getLong(1), cnts.getLong(2))
+    val pins = edges +: stats +: seedSet.toSeq
+    // refusal order: a dangling sink, then the seed set, then an empty
+    // graph (an empty seed set on an empty graph is refused for its seeds)
+    Iterate.require(nDangling == 0L, s"$nDangling node(s) have in-edges but no " +
       "out-edges — PageRank's contract requires out-degree >= 1 for every " +
-      "node; symmetrize the edge list (or drop edges into sinks) first")
-    val deg = stats.select(col("v").as("src"), col("d"))
-    val nodes = stats.select(col("v"))
+      "node; symmetrize the edge list (or drop edges into sinks) first", pins: _*)
+    nSeeds.foreach { ns =>
+      Iterate.require(ns > 0, "personalized pagerank needs a non-empty seed set", pins: _*)
+      Iterate.require(nSeedsInGraph == ns, s"${ns - nSeedsInGraph} seed(s) are not " +
+        "graph nodes — the teleport mass would silently vanish; intersect the " +
+        "seed set first", pins: _*)
+    }
+    Iterate.require(n > 0, "empty graph", pins: _*)
+    val teleport = nSeeds.getOrElse(n)
+    val base = (Scale * 3L / 20L) / teleport
+    // node universe + per-node base and initial rank in ONE node-sized table
+    val nodes = stats.select(col("v"),
+      when(isSeed, lit(base)).otherwise(lit(0L)).as("b"),
+      when(isSeed, lit(Scale / teleport)).otherwise(lit(0L)).as("r"))
     // Partitioning choice is keyed to HOW the per-iteration join runs:
     //  - rank table broadcastable (the common shape — node table orders of
     //    magnitude smaller than the edge list): the join needs NO edge
@@ -92,209 +107,35 @@ object PageRank {
     //  - rank table too big to broadcast: partition on SRC so the
     //    sort-merge join co-locates against the rank table instead, and
     //    pay the groupBy shuffle.
-    // Cutoff: a (long, long) row costs ~64 B in the driver-built hashed
-    // relation, so 1M nodes ≈ 64 MB re-broadcast per iteration — about the
-    // most a driver should absorb every round. The lazy chain below keeps
-    // every broadcast in its window referenced until the chain is cut, so
-    // live-broadcast accumulation is bounded by BcastChainCut rounds'
-    // tables (2 per round — rank + contrib), NOT by `iters`: at the 1M
-    // ceiling that is ≤ 2·8·64 MB ≈ 1 GiB transient, reclaimed at each
-    // cut (round-18 advice fix — the round-17 chain pinned iters×2
-    // broadcasts until the seal). The round-7 10M cutoff risked ~640
-    // MB/round re-broadcasts and driver memory pressure at the threshold.
     val broadcastRanks = n <= bcastNodeCeiling
-    // one prepared, co-partitioned edge table reused by every iteration;
+    val side: DataFrame => DataFrame = if (broadcastRanks) broadcast(_) else identity
     // deg is node-sized, so in the broadcast regime the attach join moves
     // no edge bytes (only the repartition onto dst does)
     val edgesD = edges
-      .join(if (broadcastRanks) broadcast(deg) else deg, "src")
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
+      .join(side(stats.select(col("v").as("src"), col("d"))), "src")
+      .repartition(col(if (broadcastRanks) "dst" else "src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgesD.count()
-    val init = Scale / n
-    val base = (Scale * 3L / 20L) / n
-
-    var pr = nodes.withColumn("r", lit(init))
-    val chainCut = new CheckpointChain(spark)
-    if (broadcastRanks) {
-      // LAZY broadcast chain (round-17 optimization, guide §1.2/§2.4):
-      // with node-sized rank tables every round is (edgesD ⋈ bcast(pr))
-      // → exchange-free groupBy on the pre-partitioned dst → nodes ⟕
-      // bcast(contrib). Each round's table is consumed exactly ONCE (by
-      // the next round's broadcast build), so nothing needs a per-round
-      // persist/count barrier: one sealing action at the end builds the
-      // nested broadcasts bottom-up, each exactly once. Measured on q76
-      // (sf0.1): 47 jobs → ~1/round, 5.2 s → well under half — the old
-      // loop spent most of its time in per-round count() actions, AQE
-      // stage jobs and persist/unpersist churn, not in rank arithmetic.
-      // Plan depth is O(iters), bounded by the fixed-rounds contract;
-      // the >1M-node regime keeps the materializing loop below.
-      // Every BcastChainCut rounds the chain is cut with an eager
-      // localCheckpoint (round-18 advice): the sealing action otherwise
-      // references EVERY window's broadcasts at once (2 per round), so an
-      // uncut chain at the node ceiling with high iteration counts pins
-      // iters×2×~64 MB on the driver and every executor. The cut bounds
-      // live broadcasts to one window's worth and lets ContextCleaner
-      // reclaim the superseded ones mid-query.
-      for (i <- 1 to iters) {
-        // integer division (DIV), NOT `/`: Spark's `/` is double division,
-        // whose truncation can land one off when the rounded quotient
-        // crosses an integer boundary
-        val contrib = edgesD
-          .join(broadcast(pr.withColumnRenamed("v", "src")), "src")
-          .select(col("dst").as("v"), expr("r DIV d").as("c"))
-          .groupBy("v")
-          .agg(sum("c").as("s"))
-        // LEFT join back onto the full node set: the aggregation only
-        // yields nodes with in-edges, so a zero-in-degree node would
-        // vanish from the rank table after round 1 (and stop contributing
-        // from round 2). runRef keeps it at `base`; coalesce(s, 0)
-        // matches that exactly. contrib is node-sized — broadcast it so
-        // the outer join moves neither side.
-        pr = nodes.join(broadcast(contrib), Seq("v"), "left")
-          .select(col("v"),
-            (lit(base) + expr("(17 * coalesce(s, 0)) DIV 20")).as("r"))
-        if (i % BcastChainCut == 0 && i < iters) pr = chainCut.next(pr)
-      }
-    } else {
-      pr = pr.persist(StorageLevel.MEMORY_AND_DISK)
-      pr.count()
-      var chain = List(pr)
-      val ckpt = new CheckpointChain(spark)
-      for (i <- 1 to iters) {
-        val contrib = edgesD.join(pr, edgesD("src") === pr("v"))
-          .select(col("dst").as("v"), expr("r DIV d").as("c"))
-          .groupBy("v")
-          .agg(sum("c").as("s"))
-        val next0 = nodes.join(contrib, Seq("v"), "left")
-          .select(col("v"),
-            (lit(base) + expr("(17 * coalesce(s, 0)) DIV 20")).as("r"))
-        // cut lineage every 4 rounds (CheckpointChain frees the superseded
-        // checkpoint's RDD blocks, which Dataset.unpersist cannot reach);
-        // otherwise persist is enough
-        val next =
-          if (i % 4 == 0) ckpt.next(next0)
-          else next0.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        chain.foreach(_.unpersist(false))
-        chain = if (i % 4 == 0) Nil else List(next)
-        pr = next
-      }
+    Iterate.fixedRounds(nodes.select(col("v"), col("r")), iters, broadcastRanks) { pr =>
+      // integer division (DIV), NOT `/`: Spark's `/` is double division,
+      // whose truncation can land one off when the rounded quotient
+      // crosses an integer boundary
+      val contrib = edgesD
+        .join(side(pr.withColumnRenamed("v", "src")), "src")
+        .select(col("dst").as("v"), expr("r DIV d").as("c"))
+        .groupBy("v")
+        .agg(sum("c").as("s"))
+      // LEFT join back onto the full node set: the aggregation only
+      // yields nodes with in-edges, so a zero-in-degree node would
+      // vanish from the rank table after round 1 (and stop contributing
+      // from round 2). runRef keeps it at `base`; coalesce(s, 0)
+      // matches that exactly.
+      nodes.join(side(contrib), Seq("v"), "left")
+        .select(col("v"), (col("b") + expr("(17 * coalesce(s, 0)) DIV 20")).as("r"))
+    } { pr =>
+      Pins.sealOutput(pr.select(col("v").as("node_id"), col("r").as("rank_scaled")),
+        pins :+ edgesD: _*)
     }
-    // seal: materialize the final ranks, then release the pins the loop
-    // left behind (edge tables + the last round's frame)
-    val out = Pins.sealOutput(
-      pr.select(col("v").as("node_id"), col("r").as("rank_scaled")),
-      edges, stats, edgesD, pr)
-    chainCut.release() // sealed — the last mid-chain cut's blocks can go
-    out
-  }
-
-  /** PERSONALIZED PageRank: the teleport mass lands only on `seeds`
-    * (one column `v`, each a graph node), so ranks measure proximity to
-    * the seed set — the "relevance to a trusted corpus" signal behind
-    * seed-expanded curation (find pages close to known-good ones). Same
-    * integer contract as [[run]]: init = Scale DIV |S| on seeds (0
-    * elsewhere), per-round r(v) = b(v) + ⌊17·Σ contrib⌋/20 with the
-    * per-NODE base b(v) = (3·Scale/20) DIV |S| on seeds and 0 elsewhere
-    * — the only structural change from run() is that the base is a
-    * node-attributed column instead of a constant. Same broadcast-regime
-    * plan: edges pre-partitioned on dst, rank table broadcast, zero
-    * per-iteration edge shuffles.
-    */
-  def personalized(edgesDf: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, iters: Int,
-      bcastNodeCeiling: Long = BcastNodeCeiling): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edgesDf.sparkSession
-    val edges = edgesDf
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedSet = seeds.select(col("v").cast("long").as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSeeds = seedSet.count()
-    require(nSeeds > 0, "personalized pagerank needs a non-empty seed set")
-    val init = Scale / nSeeds
-    val b = (Scale * 3L / 20L) / nSeeds
-    // ONE node-stats pass for degree + node universe + dangling + seed
-    // membership (round-17 — same fused-prep rationale as [[run]]; the
-    // seed flag rides the same aggregate via a broadcast left join before
-    // the groupBy, so the seed-membership guard needs no extra pass)
-    val stats = edges.select(col("src").as("v"), lit(1).as("_s"))
-      .unionAll(edges.select(col("dst").as("v"), lit(0).as("_s")))
-      .groupBy("v").agg(sum("_s").as("d"), max("_s").as("_src"))
-      .join(broadcast(seedSet.withColumn("_sd", lit(1))), Seq("v"), "left")
-      .withColumn("_isSeed", coalesce(col("_sd"), lit(0)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cnts = stats.agg(
-      count(when(col("_src") === 1, 1)).as("n"),
-      count(when(col("_src") === 0, 1)).as("nd"),
-      count(when(col("_isSeed") === 1 && col("_src") === 1, 1)).as("ns")).head()
-    val n = cnts.getLong(0)
-    require(cnts.getLong(1) == 0L, s"${cnts.getLong(1)} node(s) have " +
-      "in-edges but no out-edges — symmetrize the edge list (or drop sink " +
-      "edges) first")
-    val nSeedsInGraph = cnts.getLong(2)
-    require(nSeedsInGraph == nSeeds,
-      s"${nSeeds - nSeedsInGraph} seed(s) are not graph nodes — the " +
-        "teleport mass would silently vanish; intersect the seed set first")
-    val deg = stats.select(col("v").as("src"), col("d"))
-    // node universe + per-node base/init in ONE node-sized table
-    val nodes = stats.select(col("v"),
-      when(col("_isSeed") === 1, lit(b)).otherwise(lit(0L)).as("b"),
-      when(col("_isSeed") === 1, lit(init)).otherwise(lit(0L)).as("r0"))
-    val broadcastRanks = n <= bcastNodeCeiling
-    val edgesD = edges
-      .join(if (broadcastRanks) broadcast(deg) else deg, "src")
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesD.count()
-    var pr = nodes.select(col("v"), col("r0").as("r"))
-    val chainCut = new CheckpointChain(spark)
-    if (broadcastRanks) {
-      // lazy broadcast chain — same structure and rationale as [[run]],
-      // including the every-BcastChainCut-rounds cut that bounds live
-      // broadcasts (the only arithmetic difference is the per-node base
-      // column)
-      for (i <- 1 to iters) {
-        val contrib = edgesD
-          .join(broadcast(pr.withColumnRenamed("v", "src")), "src")
-          .select(col("dst").as("v"), expr("r DIV d").as("c"))
-          .groupBy("v")
-          .agg(sum("c").as("s"))
-        pr = nodes.join(broadcast(contrib), Seq("v"), "left")
-          .select(col("v"),
-            (col("b") + expr("(17 * coalesce(s, 0)) DIV 20")).as("r"))
-        if (i % BcastChainCut == 0 && i < iters) pr = chainCut.next(pr)
-      }
-    } else {
-      pr = pr.persist(StorageLevel.MEMORY_AND_DISK)
-      pr.count()
-      var chain = List(pr)
-      val ckpt = new CheckpointChain(spark)
-      for (i <- 1 to iters) {
-        val contrib = edgesD.join(pr, edgesD("src") === pr("v"))
-          .select(col("dst").as("v"), expr("r DIV d").as("c"))
-          .groupBy("v")
-          .agg(sum("c").as("s"))
-        val next0 = nodes.join(contrib, Seq("v"), "left")
-          .select(col("v"),
-            (col("b") + expr("(17 * coalesce(s, 0)) DIV 20")).as("r"))
-        val next =
-          if (i % 4 == 0) ckpt.next(next0)
-          else next0.persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        chain.foreach(_.unpersist(false))
-        chain = if (i % 4 == 0) Nil else List(next)
-        pr = next
-      }
-    }
-    val out = Pins.sealOutput(
-      pr.select(col("v").as("node_id"), col("r").as("rank_scaled")),
-      edges, stats, edgesD, seedSet, pr)
-    chainCut.release() // sealed — the last mid-chain cut's blocks can go
-    out
   }
 
   /** JVM twin of [[personalized]] for tests. */

@@ -28,16 +28,17 @@ import graft.functions.Hashing
   */
 object RandomWalk {
 
-  /** One walk of `steps` steps from every node of the symmetrized graph.
-    * Returns (walk_id, step, node) — step 0 is the start node itself.
-    */
   /** Broadcast ceiling for the adjacency-ARRAY table: edge-payload rows
     * (~16 B/edge packed in arrays, built ONCE — not re-broadcast per
-    * step), hence 32M edges ≈ 512 MB, not PageRank's per-round
-    * 1M-node figure. Overridable as a test knob (fallback-parity spec).
+    * step), hence 32M edges ≈ 512 MB, not the per-round
+    * [[Iterate.BcastNodeCeiling]]. Overridable as a test knob
+    * (fallback-parity spec).
     */
   val BcastEdgeCeiling: Long = 32L * 1000 * 1000
 
+  /** One walk of `steps` steps from every node of the symmetrized graph.
+    * Returns (walk_id, step, node) — step 0 is the start node itself.
+    */
   def walks(edgesDf: DataFrame, srcCol: String, dstCol: String,
       steps: Int, seed: String = "rw",
       bcastEdgeCeiling: Long = BcastEdgeCeiling): DataFrame = {
@@ -62,11 +63,12 @@ object RandomWalk {
       var frontier = adjTbl.select(col("cur").as("walk_id"), col("cur"))
       var out = frontier.select(col("walk_id"), lit(0).as("step"),
         col("cur").as("node"))
+      val stepPins = Seq.newBuilder[DataFrame]
       for (t <- 1 to steps) {
         val pick = Hashing.hash60(
           concat(col("walk_id").cast("string"), lit(":"), lit(t.toString)),
           seed) % size(col("_nb"))
-        // localCheckpoint per step (round-17): each step is referenced by
+        // localCheckpoint per step: each step is referenced by
         // BOTH the next step's join and its own union branch, and the
         // self-join re-aliasing gives every branch's adjacency-broadcast
         // occurrence fresh expression ids — exchange reuse never fires
@@ -78,11 +80,15 @@ object RandomWalk {
           .select(col("walk_id"),
             element_at(col("_nb"), (pick + 1).cast("int")).as("cur"))
           .localCheckpoint()
+        stepPins += frontier
         out = out.unionByName(
           frontier.select(col("walk_id"), lit(t).as("step"),
             col("cur").as("node")))
       }
-      return Pins.sealOutput(out, edges, adjTbl)
+      // the sealed walks no longer read the step checkpoints
+      val walks = Pins.sealOutput(out, edges, adjTbl)
+      Iterate.release(stepPins.result(): _*)
+      return walks
     }
     val adjW = Window.partitionBy("src").orderBy("dst")
     val adj = edges
@@ -115,9 +121,7 @@ object RandomWalk {
         frontier.select(col("walk_id"), lit(t).as("step"),
           col("cur").as("node")))
     }
-    adj.unpersist(false)
-    deg.unpersist(false)
-    edges.unpersist(false)
+    Iterate.release(adj, deg, edges)
     out
   }
 }

@@ -18,10 +18,13 @@ object GraftBridge {
     * are invisible to `Dataset.unpersist`), without guessing from
     * `getPersistentRDDs` diffs, which would mis-claim any UNRELATED cache
     * that happens to first materialize during the checkpoint action.
+    * Only the plan's root counts: a frame derived from a checkpoint does
+    * not own the checkpoint it reads.
     */
   def checkpointRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+      case _ => None
     }
 
   /** Stop the streaming state-store maintenance pool. Must run after the

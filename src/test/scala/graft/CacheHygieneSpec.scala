@@ -17,9 +17,12 @@ class CacheHygieneSpec extends SparkSuite {
   //   NaiveBayes train/eval, q62 Boilerplate, q88 mooreLewis-family
   //   round-9 additions: q184 HITS / q193 BFS (graph loop pins), q187
   //   bigram barrier, q195 postings barrier
+  //   the other iteration-driver loops: q153 LabelProp, q158 KCore,
+  //   q163 RandomWalk, q221 personalized PageRank, q49 Cluster closure
   private val prefixes =
-    Set("q26", "q27", "q50", "q61", "q62", "q76", "q87", "q88", "q150",
-      "q159", "q184", "q187", "q193", "q195")
+    Set("q26", "q27", "q49", "q50", "q61", "q62", "q76", "q87", "q88",
+      "q150", "q153", "q158", "q159", "q163", "q184", "q187", "q193",
+      "q195", "q221")
 
   test("representative gates leave no cached tables behind") {
     // suites share one session (and its cache manager); earlier suites may

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.ops.{Hits, KCore, LabelProp, PageRank, RandomWalk}
+import graft.ops.{Hits, Iterate, KCore, LabelProp, PageRank, RandomWalk}
 
 /** Broadcast-regime vs keyed-join-fallback parity for the iterative graph
   * ops. Every gate and probe so far exercised only the broadcast branch
@@ -44,7 +44,7 @@ class GraphFallbackParitySpec extends SparkSuite {
     // every BcastChainCut rounds; gate iteration counts (≤ 8) never cross
     // it, so this pins the cut path explicitly — 11 rounds crosses one
     // cut, and the result must equal the in-memory reference exactly.
-    assert(PageRank.BcastChainCut <= 10,
+    assert(Iterate.BcastChainCut <= 10,
       "test assumes the cut fires within 11 rounds")
     val symSeq = (edges ++ edges.map(_.swap)).distinct
     val sym = symSeq.toDF("src", "dst")
