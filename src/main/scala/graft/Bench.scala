@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every gate query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON metric line. Queries run in sorted name order for
   * stable, comparable output; failures count -1 s and are listed.
@@ -444,32 +442,10 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = GateSession.sfDir
+    val cpus = GateSession.cpus
     val hostStart = hostStat()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Belt-and-braces vs the round-1 parse failure: even if a state store
-      // provider survives a query, its maintenance task never fires mid-bench.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      // Whole-stage-codegen compile cache, sized for a long-lived driver
-      // serving hundreds of distinct queries (the production posture — and
-      // exactly what this bench is). The default 100 entries thrashes:
-      // ~30-70 generated sources per gate means by the time a same-family
-      // gate arrives, its shared stage code has been evicted and janino
-      // recompiles it (measured: a 12-gate sequence repeated in one JVM
-      // recompiles EVERY source on the second pass at the default, and
-      // zero with the cache sized up — ~10 ms/compile, ~1000 compiles per
-      // 24 gates). Scale-independent (driver-side JVM cache, bounded by
-      // entry count), parameterized for smaller drivers.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateSession.start()
     // NO untimed warmup block — deliberately (round-11 finding). The old
     // warmup (a 20k-row aggregate(zip_with)+md5+window pass plus three
     // throwaway streaming queries) was A/B-measured against an otherwise
@@ -665,14 +641,10 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] $steadyPath write failed: $e") }
     }
-    // Orderly teardown BEFORE emitting the metric line: stop any streaming
-    // query that is still registered, then the state-store maintenance pool,
-    // then the session — so no late thread can spew errors after (or into)
-    // the one line the driver parses. Metric line is the FINAL stdout line.
-    spark.streams.active.foreach { q => try q.stop() catch { case _: Throwable => () } }
-    try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-    catch { case _: Throwable => () }
-    try spark.stop() catch { case _: Throwable => () } // metric line must still print
+    // Orderly teardown BEFORE emitting the metric line, so no late thread
+    // can write after (or into) the one line the driver parses. Metric line
+    // is the FINAL stdout line.
+    GateSession.stop(spark)
     System.out.flush()
     val line = metricJson(merged, shortKey, sfDir, wallSec, calibStart,
       calibEnd, retimeDetail, contJson)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,7 @@ object Verify {
       case Some(p) => val ps = p.split(','); n => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same long-lived-driver codegen-cache sizing as Bench (Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateSession.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -47,11 +35,6 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Same orderly teardown as Bench: no streaming/state-store thread may
-    // outlive the RpcEnv (round-1 stdout pollution).
-    spark.streams.active.foreach { st => try st.stop() catch { case _: Throwable => () } }
-    try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-    catch { case _: Throwable => () }
-    spark.stop()
+    GateSession.stop(spark)
   }
 }

@@ -28,9 +28,9 @@ object Cooccur {
     * two-sided self-equi-join — the grouped form shuffles the table once
     * and does the quadratic work as per-row array math (k is the per-key
     * item count; for bounded-k data like order lines this measured ~35%
-    * faster than the self-join at sf0.1, EdgeBuildProbe). For UNBOUNDED k
-    * use [[itemPairs]]'s cap contract instead — this helper is for edge
-    * lists where every pair is wanted.
+    * faster than the self-join at sf0.1). For UNBOUNDED k use
+    * [[itemPairs]]'s cap contract instead — this helper is for edge lists
+    * where every pair is wanted.
     *
     * The bounded-k assumption is SELF-ENFORCING (round-14 explode audit,
     * the editDistancePairs/gapFillHourly refuse-loudly pattern): the
@@ -40,7 +40,8 @@ object Cooccur {
     * multi-TB row, an executor OOM, not a slow query. Keys past
     * `maxItemsPerKey` (default 2048 ≈ 2M pairs ≈ 32 MB per row buffer)
     * refuse loudly with the [[itemPairs]] routing in the message; callers
-    * who have measured their key bound can raise it explicitly.
+    * who have measured their key bound can raise it explicitly (cost near
+    * the cap: PLANS.md "coedges near-cap probe"; pinned by CooccurSkewSpec).
     */
   /** `packIds = true` (round-18, guide §2.3 "narrower types"): when the
     * caller KNOWS every item id fits [0, 2^31) — a per-dataset domain

@@ -54,7 +54,7 @@ object Pins {
     * GC-pressures a 100 GiB heap, so checkpoint blocks from dozens of
     * prior gates accumulate in the block manager and inflate later gates
     * (round-10: q154 read 7 s isolated vs 14 s in-bench behind 150 gates'
-    * leftovers). Harness loops (Bench/Verify/ProfileSeq) call this between
+    * leftovers). Harness loops (Bench/Verify/Profile) call this between
     * gates; safe there because gates are self-contained — nothing crosses
     * the boundary except the driver-side result already counted/written.
     */

@@ -129,7 +129,8 @@ object GraphQueries {
       |  ON c.node_id = d.v
       |ORDER BY node_id""".stripMargin) { (s, dir) =>
     // grouped pair build, not the self-join: one shuffle + per-row array
-    // pairs (order lines bound k) — see Cooccur.coedges / EdgeBuildProbe.
+    // pairs (order lines bound k) — see Cooccur.coedges, PLANS.md "coedges
+    // near-cap probe" and CooccurSkewSpec.
     // packIds: partkeys are dense positive ints well under 2^31 at every
     // TPC-H scale this dataset ships (the in-plan guard refuses loudly if
     // that ever changes), so the quadratic pair build + distinct runs on

@@ -485,7 +485,7 @@ object StreamingQueries {
     * registered timer (`closed_by='timer'`) only once the watermark passes
     * its `last + gap` close, and a session still open when the drain's
     * watermark stops advancing is NOT emitted. The timer arithmetic is
-    * ms-grained and pinned empirically (tools/TwsTimerProbe): a timer at
+    * ms-grained, pinned by StreamingSpec's session-timer fixture: a timer at
     * `ceil(close_us/1000)` fires iff it is `<=` the final watermark
     * `floor(max_ts_us/1000) - delay_ms` — including the exact-boundary
     * case. The oracle replays sessionization AND that firing rule.
@@ -782,7 +782,7 @@ object StreamingQueries {
   }
 
   /** Streaming-dedup LATE-INPUT filter (q204): completes q203's contract
-    * with the admission side, fully pinned by DedupGateRepro — batch N
+    * with the admission side (PLANS.md round-9 probe record; q210) — batch N
     * filters its inputs against batch N−1's watermark (one batch BEHIND
     * the eviction watermark: Spark's dual late/eviction watermark
     * design), the comparison is FULL µs precision on the row, and the
@@ -994,7 +994,7 @@ object StreamingQueries {
   }
 
   /** Sub-watermark ADMISSION (q210): the corner q203's probe saw behave
-    * "inconsistently" until DedupGateRepro resolved it — Spark's dedup
+    * "inconsistently" until PLANS.md's round-9 repro resolved it — Spark's dedup
     * late-input filter runs against the PREVIOUS batch's planning
     * watermark (one batch behind eviction), so a row BELOW the current
     * batch's eviction watermark is still ADMITTED (and emitted as

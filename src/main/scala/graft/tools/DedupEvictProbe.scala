@@ -12,12 +12,12 @@ import org.apache.spark.sql.types.StructType
   *  2. Eviction runs at batch END against the batch's PLANNING watermark,
   *     inclusive at the ms boundary — so same-batch duplicates still
   *     drop; re-admission starts the next batch.
-  *  3. (Resolved via DedupGateRepro) The operator carries TWO watermark
-  *     values per batch: late INPUT filtering uses the PREVIOUS batch's
-  *     watermark, eviction uses the CURRENT batch's. This probe's
+  *  3. (Resolved; pinned by q204 and q210) The operator carries TWO
+  *     watermark values per batch: late INPUT filtering uses the PREVIOUS
+  *     batch's watermark, eviction uses the CURRENT batch's. This probe's
   *     sub-watermark rows were all in the SECOND batch — whose
   *     late-filter watermark was still the first batch's 0 — hence
-  *     admitted; the repro's third-batch late rows (new key or not) are
+  *     admitted; third-batch late rows (new key or not) are
   *     dropped by the second batch's watermark. q203's fixture keeps
   *     every row above both values, so the gate rests only on findings
   *     1–2.

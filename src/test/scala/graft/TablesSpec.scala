@@ -244,4 +244,9 @@ class TablesSpec extends SparkSuite {
     assert(out.schema("value").dataType === DoubleType)
     assert(out.agg(sum("event_id")).head().getLong(0) === 3L)
   }
+
+  test("the driver's entry() smoke contract: the flagship query returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+    graft.ops.Pins.releaseAll(spark)
+  }
 }
