@@ -24,8 +24,8 @@ object SingleFile {
     * in, restore the backup so the target is never observed missing.
     *
     * WRITER-SIDE ONLY (single-writer contract): call from the component
-    * that OWNS the file's read-modify-write cycle (the streaming manifest
-    * fold, batch discover) before reading its own state back. A pure
+    * that OWNS the file's read-modify-write cycle (the streaming CDC
+    * merge, batch discover) before reading its own state back. A pure
     * READER must not call this — a reader resurrecting the backup races
     * an in-flight replace (between its two renames) and can make the
     * writer's rename-in fail; readers use [[readablePath]] instead, which
@@ -89,49 +89,42 @@ object SingleFile {
     f.delete(bak, false)
   }
 
-  /** Atomically replace `target` with `df` as a single parquet file. */
-  def writeParquetAtomic(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
+  /** Replace `target` with the single file `write` stages into the tmp
+    * dir it is given: its `part-*` file, or an empty file when it wrote
+    * none (an empty DataFrame yields no JSON part file).
+    */
+  private def staged(spark: SparkSession, target: String)(write: String => Unit): Unit = {
     val tgt = new HPath(target)
     val tmp = new HPath(target + ".tmpdir")
     val f = fs(spark, tgt)
     f.delete(tmp, true)
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val part = f.globStatus(new HPath(tmp, "part-*.parquet")).head.getPath
+    write(tmp.toString)
+    val part = Option(f.globStatus(new HPath(tmp, "part-*"))).flatMap(_.headOption)
+      .map(_.getPath).getOrElse {
+        val empty = new HPath(tmp, "part-00000")
+        f.create(empty).close()
+        empty
+      }
     replaceWith(f, tgt, part)
     f.delete(tmp, true)
   }
 
-  /** Write `df` as a single JSONL file at `target`. */
-  def writeJsonl(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
-    val tgt = new HPath(target)
-    val tmp = new HPath(target + ".tmpdir")
-    val f = fs(spark, tgt)
-    f.delete(tmp, true)
-    df.coalesce(1).write.mode(SaveMode.Overwrite).json(tmp.toString)
-    // an empty DataFrame yields no part file — emit a zero-byte file then
-    val parts = f.globStatus(new HPath(tmp, "part-*"))
-    if (parts.nonEmpty) replaceWith(f, tgt, parts.head.getPath)
-    else {
-      val bak = new HPath(target + ".bak")
-      if (tgt.getParent != null) f.mkdirs(tgt.getParent)
-      recover(f, tgt) // a crashed prior replace may have left only the backup
-      f.create(tgt).close() // create() overwrites in place — no delete window
-      f.delete(bak, false) // only after the new target exists
-    }
-    f.delete(tmp, true)
-  }
+  /** Atomically replace `target` with `df` as a single parquet file. */
+  def writeParquetAtomic(df: DataFrame, target: String): Unit =
+    staged(df.sparkSession, target)(df.coalesce(1).write.mode(SaveMode.Overwrite).parquet)
 
-  /** Driver-side small text write (summary.yaml, *.json docs). */
-  def writeText(spark: SparkSession, target: String, text: String): Unit = {
-    val tgt = new HPath(target)
-    val f = fs(spark, tgt)
-    if (tgt.getParent != null) f.mkdirs(tgt.getParent)
-    val out = f.create(tgt, true)
-    out.write(text.getBytes("UTF-8"))
-    out.close()
-  }
+  /** Atomically replace `target` with `df` as a single JSONL file. */
+  def writeJsonl(df: DataFrame, target: String): Unit =
+    staged(df.sparkSession, target)(df.coalesce(1).write.mode(SaveMode.Overwrite).json)
+
+  /** Atomically replace `target` with a driver-side small text
+    * (summary.yaml, *.json docs).
+    */
+  def writeText(spark: SparkSession, target: String, text: String): Unit =
+    staged(spark, target) { tmp =>
+      val out = fs(spark, new HPath(tmp)).create(new HPath(tmp, "part-00000"))
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
 
   def readText(spark: SparkSession, target: String): Option[String] = {
     val tgt = new HPath(target)

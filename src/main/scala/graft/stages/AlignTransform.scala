@@ -1,7 +1,6 @@
 package graft.stages
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{GlobalStats, Schemas, StatsDoc}
@@ -103,62 +102,16 @@ object AlignTransform {
     org.apache.spark.sql.types.FloatType)
 
   /** Full stage: read raw episodes under `dataDir`, transform, write one
-    * parquet per episode into `outDir` (file-per-episode contract,
-    * SURVEY §7.3 hard part 3): a single partitioned write job + a
-    * metadata-only rename pass.
+    * parquet per episode into `outDir` through [[Episodes.writePerEpisode]]
+    * (an episode whose rows were ALL filtered still gets an empty file).
+    * Returns the written paths.
     */
   def run(spark: SparkSession, dataDir: String, outDir: String,
       statsPath: Option[String], normalize: Boolean = true): Seq[String] = {
     val stats = statsPath.flatMap(p => SingleFile.readText(spark, p)).flatMap(StatsDoc.parse)
-    val files = Episodes.listEpisodeFiles(spark, dataDir)
+    val files = Episodes.list(spark, dataDir).uris
     if (files.isEmpty) return Nil
-    val raw = Episodes.readRaw(spark, files)
-    val out = transformFrames(raw, stats, normalize)
-      .withColumn("_ep_name",
-        regexp_extract(col(Episodes.SrcFileCol), "(episode_\\d+\\.parquet)", 1))
-      .drop(Episodes.SrcFileCol, Episodes.OrdCol, Episodes.EpIdxCol, Episodes.ChunkCol)
-    val written = writePerEpisode(spark, out, outDir)
-    // Episodes whose rows were ALL filtered still get an (empty) output
-    // file — the reference writes one parquet per input unconditionally
-    // (align_transform_refactored.py:158-160).
-    val writtenNames = written.map(_.split("/").last).toSet
-    val emptyOnes = files.map(_.split("/").last).filterNot(writtenNames)
-    if (emptyOnes.nonEmpty) {
-      val emptySchema = org.apache.spark.sql.types.StructType(
-        Schemas.episodeSchema.fields)
-      // repartition(1): a 0-partition empty frame writes no part file at all
-      val emptyDf = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-        .repartition(1)
-      emptyOnes.foreach(n => SingleFile.writeParquetAtomic(emptyDf, s"$outDir/$n"))
-    }
-    (written ++ emptyOnes.map(n => s"$outDir/$n")).sorted
-  }
-
-  /** Write one parquet file per `_ep_name` value: partitioned write, then
-    * rename `part-*` → `<outDir>/<episode name>`. Rename count = #episodes
-    * (metadata ops only); the data move is one distributed job.
-    */
-  def writePerEpisode(spark: SparkSession, df: DataFrame, outDir: String): Seq[String] = {
-    val tmp = s"$outDir/.stage_tmp"
-    df.repartition(col("_ep_name"))
-      .sortWithinPartitions("_ep_name", "frame_index")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("_ep_name")
-      .option("compression", "zstd")
-      .parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new HPath(outDir).getFileSystem(conf)
-    val dirs = Option(fs.globStatus(new HPath(s"$tmp/_ep_name=*"))).map(_.toSeq).getOrElse(Nil)
-    val written = graft.io.ParallelFs.mapParallel(dirs) { st =>
-      val name = st.getPath.getName.stripPrefix("_ep_name=")
-      val part = fs.globStatus(new HPath(st.getPath, "part-*.parquet")).head.getPath
-      val target = new HPath(s"$outDir/$name")
-      fs.delete(target, false)
-      fs.rename(part, target)
-      target.toString
-    }
-    fs.delete(new HPath(tmp), true)
-    written.sorted
+    Episodes.writePerEpisode(transformFrames(Episodes.readRaw(spark, files), stats, normalize),
+      outDir, sources = files)
   }
 }

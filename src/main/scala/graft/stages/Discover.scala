@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.{Schemas, Status}
-import graft.io.SingleFile
+import graft.io.{Episodes, SingleFile}
+import graft.io.Episodes.Cameras
 import graft.ops.Fingerprint
 
 /** Stage 1 — Discover (reference steps/discover_refactored.py:79-170):
@@ -36,36 +37,11 @@ object Discover {
       stabilityMinBytes: Long = Fingerprint.StabilityMinBytes,
       stabilityPauseMs: Long = Fingerprint.StabilityPauseMs)
 
-  /** Camera dir names under the per-chunk videos dir (reference CAMERAS). */
-  val Cameras: Seq[String] = Seq("observation.images.front", "observation.images.wrist")
-
   import graft.core.Models.EpisodeManifestRow
 
   private def utcNow(): String =
     java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
       .format(java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC))
-
-  /** Driver-side listing (S12-S13): chunks + per-chunk episode parquets,
-    * with the `--since` mtime predicate (P7) and `--only-chunks` subset (P8)
-    * applied during listing (pushdown into the source).
-    */
-  def listEpisodes(spark: SparkSession, dataRoot: String, cfg: Config): Seq[(String, String)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new HPath(dataRoot)
-    val fs = root.getFileSystem(conf)
-    def glob(p: String) =
-      Option(fs.globStatus(new HPath(p))).map(_.toSeq).getOrElse(Nil)
-    val chunks = cfg.onlyChunks match {
-      case Some(set) => set.toSeq.sorted
-      case None => glob(s"$dataRoot/data/chunk-*")
-        .filter(_.isDirectory).map(_.getPath.getName.stripPrefix("chunk-")).sorted
-    }
-    chunks.flatMap { chunk =>
-      glob(s"$dataRoot/data/chunk-$chunk/episode_*.parquet")
-        .filter(st => cfg.sinceNs.forall(s => st.getModificationTime * 1000000L >= s))
-        .map(st => (chunk, st.getPath.toString)).sortBy(_._2)
-    }
-  }
 
   /** Distributed fingerprint pass (T7 → executor parallelism): for each
     * (chunk, parquet) compute the combined parquet+videos fingerprint,
@@ -75,7 +51,7 @@ object Discover {
       files: Seq[(String, String)], cfg: Config): DataFrame = {
     import spark.implicits._
     val hconf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val rootStr = dataRoot
+    val videosRoot = s"$dataRoot/videos"
     val nowStr = utcNow()
     val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism * 2))
     spark.createDataset(files).repartition(parts).mapPartitions { it =>
@@ -83,14 +59,14 @@ object Discover {
       it.map { case (chunk, pqUri) =>
         val pq = new HPath(pqUri)
         val fs = pq.getFileSystem(conf)
-        episodeIndex(pqUri) match {
+        Episodes.indexOf(pqUri) match {
           case None =>
             EpisodeManifestRow(-1L, chunk, pqUri, null, null, exists_front = false,
               exists_wrist = false, 0L, null, Fingerprint.Algo, nowStr,
               Status.Error, """{"reason": "bad_episode_name"}""")
           case Some(idx) =>
-            val vFront = new HPath(f"$rootStr/videos/chunk-$chunk/${Cameras(0)}/episode_$idx%06d.mp4")
-            val vWrist = new HPath(f"$rootStr/videos/chunk-$chunk/${Cameras(1)}/episode_$idx%06d.mp4")
+            val Seq(vFront, vWrist) =
+              Cameras.map(cam => new HPath(Episodes.videoPath(videosRoot, chunk, cam, idx)))
             val existsFront = fs.exists(vFront)
             val existsWrist = fs.exists(vWrist)
             val present = Seq(pq) ++ (if (existsFront) Seq(vFront) else Nil) ++
@@ -126,10 +102,6 @@ object Discover {
     }.toDF()
   }
 
-  /** Episode index parsed from an `episode_<n>.parquet` file name. */
-  private def episodeIndex(uri: String): Option[Long] =
-    "episode_(\\d+)\\.parquet".r.findFirstMatchIn(new HPath(uri).getName).map(_.group(1).toLong)
-
   private def jsonStr(s: String): String =
     if (s == null) "null"
     else "\"" + s.flatMap {
@@ -146,20 +118,9 @@ object Discover {
   def orphanVideos(spark: SparkSession, dataRoot: String, chunks: Seq[String],
       parquetKeys: DataFrame): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new HPath(dataRoot).getFileSystem(conf)
-    val vids = chunks.flatMap { chunk =>
-      Cameras.flatMap { cam =>
-        Option(fs.globStatus(new HPath(s"$dataRoot/videos/chunk-$chunk/$cam/episode_*.mp4")))
-          .map(_.toSeq).getOrElse(Nil)
-          .flatMap { st =>
-            "episode_(\\d+)\\.mp4".r.findFirstMatchIn(st.getPath.getName)
-              .map(m => (chunk, m.group(1).toLong, cam, st.getPath.toString, st.getLen))
-          }
-      }
-    }
     val nowStr = utcNow()
-    val vidDf = vids.toDF("chunk", "episode_index", "cam", "uri", "bytes")
+    val vidDf = Episodes.listVideos(spark, s"$dataRoot/videos", chunks)
+      .toDF("chunk", "episode_index", "cam", "uri", "bytes")
     vidDf.join(parquetKeys, Seq("chunk", "episode_index"), "left_anti")
       .select(
         col("episode_index"), col("chunk"),
@@ -193,17 +154,8 @@ object Discover {
       else None
     }
 
-    val files = listEpisodes(spark, dataRoot, cfg)
-    val chunks = {
-      val fromFiles = files.map(_._1).distinct
-      cfg.onlyChunks.map(_.toSeq.sorted).getOrElse {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new HPath(dataRoot).getFileSystem(conf)
-        Option(fs.globStatus(new HPath(s"$dataRoot/data/chunk-*")))
-          .map(_.toSeq.filter(_.isDirectory).map(_.getPath.getName.stripPrefix("chunk-")))
-          .getOrElse(fromFiles).sorted
-      }
-    }
+    val Episodes.Listing(chunks, files) =
+      Episodes.list(spark, s"$dataRoot/data", cfg.sinceNs, cfg.onlyChunks)
 
     var cur = fingerprintEpisodes(spark, dataRoot, files, cfg)
     // the (chunk, episode) key of every fingerprinted row (-1 for a bad
@@ -211,7 +163,7 @@ object Discover {
     // so the anti-joins below do not re-run the fingerprint pass
     val curKeys = {
       import spark.implicits._
-      files.map { case (chunk, uri) => (chunk, episodeIndex(uri).getOrElse(-1L)) }.distinct
+      files.map { case (chunk, uri) => (chunk, Episodes.indexOf(uri).getOrElse(-1L)) }.distinct
         .toDF("chunk", "episode_index")
     }
 

@@ -1,9 +1,7 @@
 package graft.stages
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Schemas
 import graft.functions.Hashing
 import graft.io.{Episodes, SingleFile}
 
@@ -14,10 +12,11 @@ import graft.io.{Episodes, SingleFile}
   * link/copy placement.
   *
   * Spark shape: split assignment is a column expression over the seeded
-  * portable hash (no driver loop); the partitioned layout is ONE
-  * partitionBy write job + metadata renames; the index is a small DataFrame
-  * aggregation, written as one sorted partition with the split counts
-  * observed on that write (no separate count query). Video placement
+  * portable hash (no driver loop); the partitioned layout is
+  * [[Episodes.writePerEpisode]] (one partitionBy write job + metadata
+  * renames, dropping the files of episodes gone from `normDir`); the
+  * index is a small DataFrame aggregation, written as one sorted partition
+  * with the split counts observed on that write (no separate count query). Video placement
   * (symlink/hardlink/copy/manifest-only, materialize_refactored.py:29-47)
   * runs executor-side in mapPartitions — which requires a SHARED
   * filesystem (NFS/HDFS-mounted paths): links are created on whichever
@@ -34,7 +33,7 @@ object Materialize {
       chunkId: String = "000",
       videosRoot: Option[String] = None,
       videoSourceChunkId: String = "000",
-      views: Seq[String] = Discover.Cameras,
+      views: Seq[String] = Episodes.Cameras,
       linkVideos: String = "symlink") {
     require(math.abs(train + validation + test - 1.0) <= 1e-9,
       "train+val+test must equal 1.0")
@@ -46,56 +45,23 @@ object Materialize {
 
   def run(spark: SparkSession, normDir: String, outDir: String,
       cfg: Config = Config()): DataFrame = {
-    val files = Episodes.listEpisodeFiles(spark, normDir)
-    require(files.nonEmpty, s"No episode_*.parquet found under $normDir")
+    val files = Episodes.list(spark, normDir).uris
+    require(files.nonEmpty, s"No episode files found under $normDir")
 
     // one scan over all normalized episodes; episode identity from filename
     // (materialize_refactored.py:94-97)
-    val raw = spark.read.schema(Schemas.episodeSchema).parquet(files: _*)
-      .withColumn("_ep_idx",
-        regexp_extract(input_file_name(), "episode_(\\d+)\\.parquet", 1).cast("long"))
-      .withColumn("_ep_name",
-        regexp_extract(input_file_name(), "(episode_\\d+\\.parquet)", 1))
-
-    val stamped = raw
-      .withColumn("split", splitCol(col("_ep_idx"), cfg))
-      .withColumn("chunk", lit(cfg.chunkId))
-
-    // single partitioned write → split=<s>/chunk=<c>/_ep_name=<n>/part-*,
-    // then metadata renames to the exact file-per-episode layout
-    val tmp = s"$outDir/.mat_tmp"
-    stamped
-      .repartition(col("split"), col("_ep_name"))
-      .sortWithinPartitions("_ep_name", "frame_index")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("split", "chunk", "_ep_name")
-      .option("compression", "zstd")
-      .parquet(tmp)
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new HPath(outDir).getFileSystem(conf)
-    val parts = Option(fs.globStatus(new HPath(s"$tmp/split=*/chunk=*/_ep_name=*")))
-      .map(_.toSeq).getOrElse(Nil)
-    graft.io.ParallelFs.mapParallel(parts) { st =>
-      val epName = st.getPath.getName.stripPrefix("_ep_name=")
-      val chunkDir = st.getPath.getParent
-      val splitDir = chunkDir.getParent
-      val target = new HPath(
-        s"$outDir/${splitDir.getName}/${chunkDir.getName}/$epName")
-      val part = fs.globStatus(new HPath(st.getPath, "part-*.parquet")).head.getPath
-      fs.mkdirs(target.getParent)
-      fs.delete(target, false)
-      fs.rename(part, target)
-    }
-    fs.delete(new HPath(tmp), true)
+    val raw = Episodes.readRaw(spark, files)
+    val epIdx = col(Episodes.EpIdxCol)
+    Episodes.writePerEpisode(
+      raw.withColumn("split", splitCol(epIdx, cfg)).withColumn("chunk", lit(cfg.chunkId)),
+      outDir, dirs = Seq("split", "chunk"))
 
     // dataset index (A13-A14): one row per episode with paths + row counts.
-    // `split`/`chunk` were consumed by partitionBy, so recompute split from
-    // the same deterministic hash — identical by construction.
     // persisted for the index write: with video placement the write reads
     // the index twice (link candidates + the final path join), and without
     // the barrier the full-corpus groupBy would run once per consumer
-    val index = raw.groupBy(col("_ep_idx").as("episode_index"), col("_ep_name"))
+    val index = raw.groupBy(epIdx.as("episode_index"),
+        Episodes.nameCol(col(Episodes.SrcFileCol)).as("_ep_name"))
       .agg(count(lit(1)).as("num_rows"))
       .withColumn("split", splitCol(col("episode_index"), cfg))
       .withColumn("chunk", lit(cfg.chunkId))
@@ -167,13 +133,11 @@ object Materialize {
         val placed = candidates.as[(Long, String, String)].mapPartitions { it =>
           import java.nio.file.{Files, Paths}
           it.flatMap { case (ep, split, view) =>
-            val srcP = Paths.get(vroot, s"chunk-$srcChunk", view, f"episode_$ep%06d.mp4")
+            val srcP = Paths.get(Episodes.videoPath(vroot, srcChunk, view, ep))
             if (!Files.exists(srcP)) None
             else {
-              val relPath = s"split=$split/chunk=$chunkId/videos/$view/" +
-                f"episode_$ep%06d.mp4"
-              val dstP = Paths.get(outRoot, s"split=$split", s"chunk=$chunkId",
-                "videos", view, f"episode_$ep%06d.mp4")
+              val relPath = s"split=$split/chunk=$chunkId/videos/$view/${Episodes.videoName(ep)}"
+              val dstP = Paths.get(outRoot, relPath)
               if (linkMode != "manifest-only") {
                 Files.createDirectories(dstP.getParent)
                 Files.deleteIfExists(dstP)

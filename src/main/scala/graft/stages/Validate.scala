@@ -144,20 +144,9 @@ object Validate {
         "video_front_uri", "video_wrist_uri", "parquet_exists").cache()
 
     val present = withExists.filter(col("parquet_exists"))
-    // Hybrid read strategy:
-    //  - small actionable delta (the common CDC case): explicit file list —
-    //    reads ONLY the delta, driver memory bounded by the threshold;
-    //  - huge delta (first scan / full re-validate): per-directory globs so
-    //    driver state is O(#directories), not O(#episodes). The glob may
-    //    read extra non-manifest files; they are dropped after the cheap
-    //    per-episode aggregation by the join below.
-    val ExplicitListMax = 100000
-    val listed = present.select("parquet_uri").as[String].limit(ExplicitListMax + 1).collect()
-    val readPaths: Seq[String] =
-      if (listed.length <= ExplicitListMax) listed.toSeq.sorted
-      else
-        present.select(regexp_replace(col("parquet_uri"), "/[^/]+$", "").as("dir"))
-          .distinct().as[String].collect().sorted.map(d => s"$d/episode_*.parquet").toSeq
+    // the delta's files, read as an explicit list: the scan's file index
+    // holds one entry per file whichever way the paths are given
+    val readPaths = present.select("parquet_uri").as[String].collect().toSeq.sorted
 
     // `input_file_name()` is a scheme-qualified, percent-ENCODED URI;
     // manifest URIs (Hadoop Path.toString) keep raw chars and may lack the
@@ -183,7 +172,6 @@ object Validate {
       if (readPaths.isEmpty) missing
       else {
         val aggs = episodeAggregates(Episodes.readRaw(spark, readPaths))
-        // inner join: drops any globbed file the manifest doesn't know
         verdicts(aggs, meta, cfg)
           .join(present.select(col("parquet_uri").as("src_uri"), col("chunk").as("m_chunk"),
               col("video_front_uri"), col("video_wrist_uri")),
@@ -197,8 +185,9 @@ object Validate {
           .unionByName(missing)
       }
 
+    // one sorted partition: one part file per sink, no range sampling
     val results = (if (cfg.skipVideo) combined else addVideoChecks(spark, combined, cfg))
-      .orderBy("episode_index").cache()
+      .repartition(1).sortWithinPartitions("episode_index").cache()
 
     // the summary counts ride the first sink write
     val counts = Observation()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.{Schemas, Status}
 
 /** Streaming manifest maintenance — the optional streaming mode of the
@@ -61,34 +61,11 @@ object DiscoverStream {
     */
   def fold(spark: SparkSession, deltaDir: String, manifestPath: String,
       checkpointDir: String, queryName: String = "discover_fold"): StreamingQuery =
-    spark.readStream.schema(deltaSchema).json(deltaDir)
-      .writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        // Heal a crashed previous replace (target renamed aside but the new
-        // file never renamed in) BEFORE reading the base: a checkpoint-
-        // replayed batch must merge onto the surviving snapshot, never onto
-        // an accidentally-empty one.
-        graft.io.SingleFile.recoverAtomic(ss, manifestPath)
-        val withDel = batch.withColumn("_del", isDeleted)
-        val p = new org.apache.hadoop.fs.Path(manifestPath)
-        val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
-        val base =
-          if (fs.exists(p)) ss.read.parquet(manifestPath)
-          else ss.createDataFrame(
-            ss.sparkContext.emptyRDD[org.apache.spark.sql.Row], withDel.schema)
-        val merged = graft.ops.Upsert.latestWins(base, withDel,
-          keys = Seq("chunk", "episode_index"),
-          versionCols = Seq("discovered_at", "_seq"),
-          deleteCol = "_del", dropTombstones = false)
-        graft.io.SingleFile.writeParquetAtomic(merged, manifestPath)
-        ()
-      }
-      .start()
+    IncrementalMerge.run(spark,
+      spark.readStream.schema(deltaSchema).json(deltaDir).withColumn("_del", isDeleted),
+      manifestPath, keys = Seq("chunk", "episode_index"),
+      versionCols = Seq("discovered_at", "_seq"), deleteCol = "_del",
+      queryName = queryName, checkpointDir = Some(checkpointDir))
 
   /** The queryable manifest: tombstoned episodes filtered out, lineage
     * columns dropped — same column set as the batch manifest.

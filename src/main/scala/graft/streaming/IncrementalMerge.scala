@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.io.SingleFile
 
 /** Streaming CDC apply: a change stream merged into a parquet base
   * snapshot micro-batch by micro-batch via `foreachBatch` +
@@ -21,26 +23,35 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object IncrementalMerge {
 
-  /** Start the merge query (AvailableNow). `basePath` must exist with the
-    * change-stream schema; every micro-batch atomically replaces it with
-    * the merged snapshot.
+  /** Start the merge query (AvailableNow): every micro-batch atomically
+    * replaces the snapshot at `basePath` with the merged one. A missing
+    * base starts empty, and a replace that crashed between its two renames
+    * is healed before the base is read, so a checkpoint-replayed batch
+    * merges onto the surviving snapshot, never onto an accidentally-empty
+    * one. `checkpointDir` makes the query resumable across runs.
     */
   def run(spark: SparkSession, changes: DataFrame, basePath: String,
       keys: Seq[String], versionCols: Seq[String], deleteCol: String,
-      queryName: String): StreamingQuery =
-    changes.writeStream
+      queryName: String, checkpointDir: Option[String] = None): StreamingQuery = {
+    val writer = changes.writeStream
       .queryName(queryName)
       .outputMode("update")
       .trigger(Trigger.AvailableNow())
+    checkpointDir.fold(writer)(writer.option("checkpointLocation", _))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
-        val base = ss.read.parquet(basePath)
+        SingleFile.recoverAtomic(ss, basePath)
+        val p = new HPath(basePath)
+        val base =
+          if (p.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(p)) ss.read.parquet(basePath)
+          else ss.createDataFrame(ss.sparkContext.emptyRDD[Row], batch.schema)
         val merged = graft.ops.Upsert.latestWins(
           base, batch, keys, versionCols, deleteCol, dropTombstones = false)
-        graft.io.SingleFile.writeParquetAtomic(merged, basePath)
+        SingleFile.writeParquetAtomic(merged, basePath)
         ()
       }
       .start()
+  }
 
   /** The queryable state of a merged base: tombstones filtered out (NULL
     * in the tombstone column is "not deleted", not a delete).

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.core.{FeatureStats, GlobalStats, Schemas, StatsDoc}
 import graft.io.Episodes
@@ -77,22 +78,55 @@ class AlignTransformSpec extends SparkSuite {
     assert(out.select("action").head().getSeq[Float](0) === frames.head.action)
   }
 
+  /** `body`'s result and the Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit =
+      org.apache.spark.sql.graft.GraftBridge.waitListenerBusEmpty(spark.sparkContext, 60000)
+    drain()
+    spark.sparkContext.addSparkListener(counter)
+    try { val out = body; drain(); (out, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(counter)
+  }
+
   test("full run writes one parquet per episode with the original name") {
-    val root = tmpDir("align_run")
+    // episodes 5 and 6: all rows have 7-wide vectors -> every row filtered
+    // -> the output files must still exist, empty (reference writes
+    // unconditionally)
+    def corpus(allFiltered: Seq[Long]): String = {
+      val root = tmpDir("align_run")
+      dataset(spark, root, Map(0L -> cleanFrames(0, 8), 3L -> cleanFrames(3, 5)) ++
+        allFiltered.map(e => e -> Defects.wrongWidth(e, 4)))
+      root
+    }
+    val oneFiltered = corpus(Seq(5L))
+    val root = corpus(Seq(5L, 6L))
     val outDir = tmpDir("align_out")
-    // episode 5: all rows have 7-wide vectors -> every row filtered -> the
-    // output file must still exist, empty (reference writes unconditionally)
-    dataset(spark, root, Map(0L -> cleanFrames(0, 8), 3L -> cleanFrames(3, 5),
-      5L -> Defects.wrongWidth(5, 4)))
-    val written = AlignTransform.run(spark, s"$root/data", outDir, None)
-    assert(written.map(_.split("/").last).sorted ===
-      Seq("episode_000000.parquet", "episode_000003.parquet", "episode_000005.parquet"))
+    // the output of an episode no longer in the input
+    Files.copy(Paths.get(s"$root/data/chunk-000/episode_000000.parquet"),
+      Paths.get(s"$outDir/episode_000009.parquet"))
+
+    val (_, oneFilteredJobs) =
+      jobsOf(AlignTransform.run(spark, s"$oneFiltered/data", tmpDir("align_out1"), None))
+    val (written, jobs) = jobsOf(AlignTransform.run(spark, s"$root/data", outDir, None))
+    val names = Seq(0, 3, 5, 6).map(e => f"episode_$e%06d.parquet")
+    assert(written.map(_.split("/").last) === names)
+    assert(new java.io.File(outDir).list().filter(_.endsWith(".parquet")).sorted.toSeq === names)
+    // one empty file is written and copied: no job per all-filtered episode
+    assert(jobs === oneFilteredJobs)
     val ep0 = spark.read.parquet(written.head)
     assert(ep0.columns.toSet === Schemas.RequiredEpisodeCols.toSet)
     assert(ep0.count() === 8)
-    val ep5 = spark.read.parquet(s"$outDir/episode_000005.parquet")
-    assert(ep5.count() === 0)
-    assert(ep5.columns.toSet === Schemas.RequiredEpisodeCols.toSet)
+    Seq(5, 6).foreach { e =>
+      val empty = spark.read.parquet(f"$outDir/episode_$e%06d.parquet")
+      assert(empty.count() === 0)
+      assert(empty.schema === ep0.schema)
+      assert(empty.columns.toSeq === Schemas.episodeSchema.fieldNames.toSeq)
+    }
   }
 
   test("stats doc round-trip: render → parse") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.functions._
 import graft.core.Status
+import graft.io.Episodes
 import graft.stages.Discover
 
 /** Stage 1 oracle tests: CDC statuses across fresh scan / re-scan / change /
@@ -73,11 +74,10 @@ class DiscoverSpec extends SparkSuite {
     val root = tmpDir("disc_since")
     dataset(spark, root, Map(0L -> cleanFrames(0, 5)))
     // future cutoff → nothing listed
-    val files = Discover.listEpisodes(spark, root,
-      Discover.Config(sinceNs = Some(System.currentTimeMillis() * 1000000L + 86400L * 1000000000L)))
+    val files = Episodes.list(spark, s"$root/data",
+      sinceNs = Some(System.currentTimeMillis() * 1000000L + 86400L * 1000000000L)).files
     assert(files.isEmpty)
-    val none = Discover.listEpisodes(spark, root,
-      Discover.Config(onlyChunks = Some(Set("doesnotexist"))))
+    val none = Episodes.list(spark, s"$root/data", onlyChunks = Some(Set("doesnotexist"))).files
     assert(none.isEmpty)
   }
 

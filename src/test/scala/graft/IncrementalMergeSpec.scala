@@ -50,4 +50,28 @@ class IncrementalMergeSpec extends SparkSuite {
     assert(got.toSeq == oneShot.toSeq)
     assert(got.toSeq == Seq((1L, "upd1b"), (3L, "base3"), (4L, "new4")))
   }
+
+  test("a base left renamed aside by a crashed replace is healed, not lost") {
+    val dir = tmpDir("incmerge_heal")
+    val basePath = s"$dir/base.parquet"
+    val changesDir = s"$dir/changes"
+    graft.io.SingleFile.writeParquetAtomic(
+      frame(Seq((1L, "base1", -1L, false), (2L, "base2", -1L, false))), basePath)
+    // a crash between the replace's two renames leaves only the backup
+    val fs = new org.apache.hadoop.fs.Path(basePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(new org.apache.hadoop.fs.Path(basePath), new org.apache.hadoop.fs.Path(s"$basePath.bak"))
+    graft.io.SingleFile.writeParquetAtomic(frame(Seq((2L, "upd2", 10L, false))),
+      s"$changesDir/b1.parquet")
+
+    val stream = spark.readStream
+      .schema("k BIGINT, payload STRING, ver BIGINT, deleted BOOLEAN")
+      .parquet(changesDir)
+    IncrementalMerge.run(spark, stream, basePath, Seq("k"), Seq("ver"), "deleted",
+      "inc_merge_heal_spec").awaitTermination()
+
+    val got = IncrementalMerge.liveView(spark, basePath, "deleted")
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(got.toSeq == Seq((1L, "base1"), (2L, "upd2")))
+  }
 }

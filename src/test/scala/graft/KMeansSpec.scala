@@ -25,7 +25,7 @@ class KMeansSpec extends SparkSuite {
         id -> (cid, d)
       }
       cent = out.groupBy(_._2._1).map { case (cid, members) =>
-        val ss = members.keys.map(sv).toSeq
+        val ss = members.keys.toSeq.map(sv)
         cid -> ss.head.indices.map(i =>
           math.floor(ss.map(_(i)).sum.toDouble / ss.size).toLong)
       }
@@ -60,6 +60,19 @@ class KMeansSpec extends SparkSuite {
     val got = KMeans.lloydAssign(df, "vec_id", "embedding", k = 2, iters = 1)
       .filter(col("vec_id") === 2L).collect()
     assert(got.head.getLong(1) == 0L)
+  }
+
+  test("duplicate vectors each count toward their cluster's mean") {
+    import spark.implicits._
+    // ids 2 and 3 are equal: cluster 0's update is floor((0 + 1e6 + 1e6) / 3)
+    val vecs: Map[Long, Seq[Double]] = Map(
+      0L -> Seq(0.0), 1L -> Seq(10.0), 2L -> Seq(1.0), 3L -> Seq(1.0))
+    val df = vecs.toSeq.map { case (id, v) => (id, v.map(_.toFloat)) }
+      .toDF("vec_id", "embedding")
+    val got = KMeans.lloydAssign(df, "vec_id", "embedding", k = 2, iters = 2)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got(0L) == (0L, 666666L * 666666L))
+    assert(got == refLloyd(vecs, 2, 2))
   }
 
   test("a cluster that loses all members drops out of the next assignment") {

@@ -43,11 +43,13 @@ class MaterializeSpec extends SparkSuite {
       assert(manifest.contains(s""""$s": ${counts.getOrElse(s, 0)}"""))
     }
 
-    // split column in written files matches directory
+    // a materialized file holds the normalized file's columns, nothing more
     val sample = rows.head
     val df = spark.read.parquet(
       Paths.get(outDir, sample.getAs[String]("parquet_path")).toString)
-    assert(df.columns.contains("frame_index"))
+    val ep = sample.getAs[Long]("episode_index")
+    val normalized = spark.read.parquet(f"$root/data/chunk-000/episode_$ep%06d.parquet")
+    assert(df.columns.toSeq === normalized.columns.toSeq)
 
     // symlinked videos for episodes 0 and 1
     Seq(0L, 1L).foreach { ep =>

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -107,13 +108,38 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(placed === Set(0L, 1L, 2L, 3L))
   }
 
+  test("a rerun drops the outputs of a deleted episode and adds a new one") {
+    val root = tmpDir("e2e_rerun")
+    val outRoot = s"$root/out"
+    // episode 4 has no videos, so no video link of it lands under dataset/
+    dataset(spark, root, Map(0L -> cleanFrames(0, 10), 1L -> cleanFrames(1, 12),
+      4L -> cleanFrames(4, 8)), videosFor = Set(0L, 1L))
+    cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
+    Files.delete(Paths.get(s"$root/data/chunk-000/episode_000004.parquet"))
+    dataset(spark, root, Map(7L -> cleanFrames(7, 9)))
+    cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
+
+    def episodeFiles(dir: String): Seq[String] = {
+      val stream = Files.walk(Paths.get(dir))
+      try stream.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("episode_")).toSeq.sorted
+      finally stream.close()
+    }
+    assert(episodeFiles(s"$outRoot/normalized") ===
+      Seq(0, 1, 7).map(e => f"episode_$e%06d.parquet"))
+    assert(!episodeFiles(s"$outRoot/dataset").exists(_.startsWith("episode_000004.")))
+    val indexed = spark.read.parquet(s"$outRoot/dataset/dataset_index.parquet")
+      .select("episode_index").collect().map(_.getLong(0)).toSet
+    assert(indexed === Set(0L, 1L, 7L))
+  }
+
   /** Spark jobs per stage call under this suite's session (local[4], 4
     * shuffle partitions) on the golden corpus. Jobs are set by the plans,
     * not by timing, so a count that moves means a plan changed: an extra
     * action, a re-executed subplan or a schema-inference job.
     */
   private val jobBudget = Map(
-    "discover" -> 4, "validate" -> 10, "stats" -> 3,
+    "discover" -> 4, "validate" -> 9, "stats" -> 3,
     "align_transform" -> 4, "materialize" -> 10)
 
   test("stage calls: pinned job counts, one fingerprint pass, no cached table left") {

@@ -54,7 +54,7 @@ class R10PropertySpec extends SparkSuite {
           id -> (cid, d)
         }
         cent = ref.groupBy(_._2._1).map { case (cid, ms) =>
-          val ss = ms.keys.map(sv).toSeq
+          val ss = ms.keys.toSeq.map(sv)
           cid -> ss.head.indices.map(i =>
             math.floor(ss.map(_(i)).sum.toDouble / ss.size).toLong)
         }

@@ -63,4 +63,27 @@ class SingleFileSpec extends SparkSuite {
     SingleFile.recoverAtomic(spark, tgt)
     assert(readIds(tgt) == Set(5L))
   }
+
+  private def leftovers(tgt: String): Seq[String] = {
+    val fs = new HPath(tgt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(".bak", ".tmpdir").map(tgt + _).filter(p => fs.exists(new HPath(p)))
+  }
+
+  test("writeText replaces an existing target through the staged protocol") {
+    val tgt = s"${tmpDir("sf_text")}/summary.yaml"
+    SingleFile.writeText(spark, tgt, "total: 1\n")
+    SingleFile.writeText(spark, tgt, "total: 2\n")
+    assert(SingleFile.readText(spark, tgt).contains("total: 2\n"))
+    assert(leftovers(tgt).isEmpty, "temp or backup file left behind")
+  }
+
+  test("writeText after a crashed replace (only the backup present) heals and writes") {
+    val tgt = s"${tmpDir("sf_text_crash")}/global_stats.json"
+    SingleFile.writeText(spark, tgt, "{\"v\": 1}")
+    val fs = new HPath(tgt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(new HPath(tgt), new HPath(tgt + ".bak"))
+    SingleFile.writeText(spark, tgt, "{\"v\": 2}")
+    assert(SingleFile.readText(spark, tgt).contains("{\"v\": 2}"))
+    assert(leftovers(tgt).isEmpty, "temp or backup file left behind")
+  }
 }

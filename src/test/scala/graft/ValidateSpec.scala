@@ -96,7 +96,7 @@ class ValidateSpec extends SparkSuite {
     */
   private def writeManifest(path: String, statusOf: Long => String): Unit = {
     import spark.implicits._
-    val files = Episodes.listEpisodeFiles(spark, s"$root/data") :+
+    val files = Episodes.list(spark, s"$root/data").uris :+
       s"$root/data/chunk-000/episode_000099.parquet"
     val mdf = files.map { f =>
       val ep = "episode_(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong
