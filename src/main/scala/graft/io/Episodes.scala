@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Schemas
@@ -115,40 +115,33 @@ object Episodes {
     readRaw(spark, list(spark, dataDir).uris)
 
   /** Write one zstd parquet per episode of `df` (rows carrying
-    * [[SrcFileCol]]) as `<outDir>/<d>=<v>/…/<episode name>`, one level per
-    * partition column in `dirs`, holding the data columns only. One
-    * partitioned write job, then a parallel metadata-only rename pass
-    * (file-per-episode contract, SURVEY §7.3 hard part 3). Each episode
-    * file in `sources` that got no rows gets a zero-row file with the
-    * episode schema (flat layout only; the reference writes one file per
-    * input unconditionally, align_transform_refactored.py:158-160).
-    *
-    * The call owns its output set: after the renames it deletes every
-    * episode file in its layout that it did not write, so a rerun drops
-    * deleted episodes, and a crash leaves extra files, never a missing
-    * live one. Returns the written paths, sorted.
+    * [[SrcFileCol]]) as `<outDir>/<episode name>`, holding the data
+    * columns only. One partitioned write job, then a parallel
+    * metadata-only rename pass (file-per-episode contract, SURVEY §7.3
+    * hard part 3). Each episode file in `sources` that got no rows gets a
+    * zero-row file with the episode schema (the reference writes one file
+    * per input unconditionally, align_transform_refactored.py:158-160).
+    * The call owns its output set ([[dropUnwritten]]). Returns the written
+    * paths, sorted.
     */
-  def writePerEpisode(df: DataFrame, outDir: String, dirs: Seq[String] = Nil,
-      sources: Seq[String] = Nil): Seq[String] = {
+  def writePerEpisode(df: DataFrame, outDir: String, sources: Seq[String] = Nil): Seq[String] = {
     val spark = df.sparkSession
     val tmp = new HPath(outDir, ".stage_tmp")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val name = "_ep_name"
-    val keys = dirs :+ name
     df.select(df.columns.filterNot(ProvenanceCols).map(c => col(s"`$c`")).toSeq :+
         nameCol(col(SrcFileCol)).as(name): _*)
-      .repartition(keys.map(col): _*)
-      .sortWithinPartitions((keys :+ "frame_index").map(col): _*)
+      .repartition(col(name))
+      .sortWithinPartitions(name, "frame_index")
       .write.mode(SaveMode.Overwrite)
-      .partitionBy(keys: _*)
+      .partitionBy(name)
       .option("compression", "zstd")
       .parquet(tmp.toString)
 
     // staged part file → target, one per written episode
-    val tmpRoot = fs.makeQualified(tmp).toUri.getPath + "/"
-    val staged = glob(spark, s"$tmp/${keys.map(k => s"$k=*").mkString("/")}").map { st =>
-      val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).replace(s"$name=", "")
-      (fs.globStatus(new HPath(st.getPath, "part-*.parquet")).head.getPath, new HPath(outDir, rel))
+    val staged = glob(spark, s"$tmp/$name=*").map { st =>
+      (fs.globStatus(new HPath(st.getPath, "part-*.parquet")).head.getPath,
+        new HPath(outDir, st.getPath.getName.stripPrefix(s"$name=")))
     }
     val empties = sources.map(new HPath(_).getName).filterNot(staged.map(_._2.getName).toSet)
     val stagedEmpties = if (empties.isEmpty) Nil else {
@@ -164,17 +157,32 @@ object Episodes {
       }
     }
     val moves = staged ++ stagedEmpties
-    moves.map(_._2.getParent).distinct.foreach(fs.mkdirs)
-    ParallelFs.mapParallel(moves) { case (part, target) =>
-      fs.delete(target, false)
-      if (!fs.rename(part, target)) throw new java.io.IOException(s"rename failed: $part -> $target")
-    }
+    fs.mkdirs(new HPath(outDir))
+    ParallelFs.mapParallel(moves) { case (part, target) => replace(fs, part, target) }
 
-    val written = moves.map(m => fs.makeQualified(m._2)).toSet
-    val stale = glob(spark, s"$outDir/${(dirs.map(d => s"$d=*") :+ "episode_*.parquet").mkString("/")}")
-      .map(_.getPath).filterNot(written)
-    ParallelFs.mapParallel(stale)(fs.delete(_, false))
+    dropUnwritten(spark, s"$outDir/episode_*.parquet", moves.map(m => fs.makeQualified(m._2)).toSet)
     fs.delete(tmp, true)
     moves.map(_._2.toString).sorted
+  }
+
+  /** Move the staged file `part` onto `target`: the target path only ever
+    * holds a whole file.
+    */
+  def replace(fs: FileSystem, part: HPath, target: HPath): Unit = {
+    fs.delete(target, false)
+    if (!fs.rename(part, target)) throw new java.io.IOException(s"rename failed: $part -> $target")
+  }
+
+  /** A per-episode writer owns its output set: after its placements it
+    * deletes every file matching `pattern` (qualified paths) that it did
+    * not write, so a rerun drops deleted episodes' outputs, and a crash,
+    * which stops before this step, leaves extra files, never a missing
+    * live one. Returns the deleted paths.
+    */
+  def dropUnwritten(spark: SparkSession, pattern: String, written: Set[HPath]): Seq[HPath] = {
+    val stale = glob(spark, pattern).map(_.getPath).filterNot(written)
+    val fs = new HPath(pattern).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParallelFs.mapParallel(stale)(fs.delete(_, false))
+    stale
   }
 }

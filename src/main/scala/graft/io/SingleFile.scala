@@ -71,13 +71,14 @@ object SingleFile {
     * fatal for read-modify-write state like the streaming manifest fold,
     * whose checkpoint-replayed batch would then rebuild from empty.)
     * A failed rename of the new file in restores the backup before
-    * throwing, so the caller observes the old version, not a hole.
+    * throwing, so the caller observes the old version, not a hole. The
+    * old version may be a directory of part files (a plain Spark write).
     */
   private def replaceWith(f: FileSystem, tgt: HPath, part: HPath): Unit = {
     val bak = new HPath(tgt.toString + ".bak")
     if (tgt.getParent != null) f.mkdirs(tgt.getParent)
     recover(f, tgt)
-    f.delete(bak, false)
+    f.delete(bak, true)
     val hadOld = f.exists(tgt)
     if (hadOld) renameOrThrow(f, tgt, bak)
     try renameOrThrow(f, part, tgt)
@@ -86,7 +87,7 @@ object SingleFile {
         if (hadOld) recover(f, tgt) // put the old version back before failing
         throw e
     }
-    f.delete(bak, false)
+    f.delete(bak, true)
   }
 
   /** Replace `target` with the single file `write` stages into the tmp

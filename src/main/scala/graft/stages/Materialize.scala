@@ -1,27 +1,33 @@
 package graft.stages
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileUtil, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+import graft.core.Schemas
 import graft.functions.Hashing
 import graft.io.{Episodes, SingleFile}
+import graft.io.Episodes.Cameras
 
 /** Stage 5 — Materialize (reference steps/materialize_refactored.py:57-154):
   * deterministic hash split into train/val/test, Hive-style
-  * `split=<s>/chunk=<c>` layout with one zstd parquet per episode, a
-  * dataset index table, a `_manifest.json` bookkeeping doc, and video
-  * link/copy placement.
+  * `split=<s>/chunk=000` layout with one parquet per episode, a dataset
+  * index, a `_manifest.json` bookkeeping doc, and video placement.
   *
-  * Spark shape: split assignment is a column expression over the seeded
-  * portable hash (no driver loop); the partitioned layout is
-  * [[Episodes.writePerEpisode]] (one partitionBy write job + metadata
-  * renames, dropping the files of episodes gone from `normDir`); the
-  * index is a small DataFrame aggregation, written as one sorted partition
-  * with the split counts observed on that write (no separate count query). Video placement
-  * (symlink/hardlink/copy/manifest-only, materialize_refactored.py:29-47)
-  * runs executor-side in mapPartitions — which requires a SHARED
-  * filesystem (NFS/HDFS-mounted paths): links are created on whichever
-  * machine the task runs, so on a cluster the videosRoot/outDir must
-  * resolve identically on every executor.
+  * Spark shape: the layout is placed, not re-encoded, and no frame is
+  * read. The split is a column over the normalized file list; one
+  * executor-side `mapPartitions` pass reads each file's parquet footer
+  * (row count, column names), copies the file byte for byte into its
+  * split dir (staged copy + rename), places its videos (symlink/hardlink/
+  * copy/manifest-only, materialize_refactored.py:29-47) and emits its
+  * index row. The index is written from that pass as one sorted file,
+  * with the split counts observed on the write. Videos are placed on
+  * local paths, so on a cluster videosRoot/outDir must be a SHARED
+  * filesystem that resolves identically on every executor.
   */
 object Materialize {
 
@@ -30,14 +36,16 @@ object Materialize {
       train: Double = 0.8,
       validation: Double = 0.1,
       test: Double = 0.1,
-      chunkId: String = "000",
       videosRoot: Option[String] = None,
-      videoSourceChunkId: String = "000",
-      views: Seq[String] = Episodes.Cameras,
       linkVideos: String = "symlink") {
     require(math.abs(train + validation + test - 1.0) <= 1e-9,
       "train+val+test must equal 1.0")
+    require(Seq("symlink", "hardlink", "copy", "manifest-only").contains(linkVideos),
+      s"Unknown link method: $linkVideos (symlink|hardlink|copy|manifest-only)")
   }
+
+  /** The chunk of the output layout and of the source videos. */
+  private val Chunk = "000"
 
   /** The split column for an episode-index column (F4–F6). */
   def splitCol(epIdx: org.apache.spark.sql.Column, cfg: Config): org.apache.spark.sql.Column =
@@ -45,42 +53,62 @@ object Materialize {
 
   def run(spark: SparkSession, normDir: String, outDir: String,
       cfg: Config = Config()): DataFrame = {
+    import spark.implicits._
     val files = Episodes.list(spark, normDir).uris
     require(files.nonEmpty, s"No episode files found under $normDir")
+    val hconf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val tmp = s"$outDir/.stage_tmp"
+    // a local file list: one task per file, up to the default parallelism
+    val placed = files.toDF("uri").select(col("uri"), splitCol(Episodes.indexCol(col("uri")), cfg))
+      .as[(String, String)].mapPartitions { it =>
+        val conf = hconf.value
+        val outFs = new HPath(outDir).getFileSystem(conf)
+        it.flatMap { case (uri, split) =>
+          val src = new HPath(uri)
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(src, conf))
+          val (rows, names) = try (reader.getRecordCount,
+              reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq)
+            finally reader.close()
+          require(names == Schemas.episodeSchema.fieldNames.toSeq,
+            s"$uri: columns ${names.mkString(", ")} are not the episode schema's")
+          Option.when(rows > 0) { // an all-filtered episode is not indexed
+            val ep = Episodes.indexOf(uri).getOrElse(
+              throw new IllegalArgumentException(s"$uri: not an episode file name"))
+            val dir = s"split=$split/chunk=$Chunk"
+            val staged = new HPath(tmp, src.getName)
+            FileUtil.copy(src.getFileSystem(conf), src, outFs, staged, false, true, conf)
+            Episodes.replace(outFs, staged, new HPath(s"$outDir/$dir", src.getName))
+            val Seq(front, wrist) = Cameras.map(view => placeVideo(
+              cfg.videosRoot.map(Episodes.videoPath(_, Chunk, view, ep)), outDir,
+              s"$dir/videos/$view/${Episodes.videoName(ep)}", cfg.linkVideos))
+            (ep, rows, split, Chunk, s"$dir/${src.getName}", front, wrist)
+          }
+        }
+      }.toDF(Seq("episode_index", "num_rows", "split", "chunk", "parquet_path") ++
+        Cameras.map(view => s"$view.path"): _*)
 
-    // one scan over all normalized episodes; episode identity from filename
-    // (materialize_refactored.py:94-97)
-    val raw = Episodes.readRaw(spark, files)
-    val epIdx = col(Episodes.EpIdxCol)
-    Episodes.writePerEpisode(
-      raw.withColumn("split", splitCol(epIdx, cfg)).withColumn("chunk", lit(cfg.chunkId)),
-      outDir, dirs = Seq("split", "chunk"))
-
-    // dataset index (A13-A14): one row per episode with paths + row counts.
-    // persisted for the index write: with video placement the write reads
-    // the index twice (link candidates + the final path join), and without
-    // the barrier the full-corpus groupBy would run once per consumer
-    val index = raw.groupBy(epIdx.as("episode_index"),
-        Episodes.nameCol(col(Episodes.SrcFileCol)).as("_ep_name"))
-      .agg(count(lit(1)).as("num_rows"))
-      .withColumn("split", splitCol(col("episode_index"), cfg))
-      .withColumn("chunk", lit(cfg.chunkId))
-      .withColumn("parquet_path",
-        concat(lit("split="), col("split"), lit(s"/chunk=${cfg.chunkId}/"), col("_ep_name")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // video placement (S18) + per-view index paths
-    val withVideos = placeVideos(spark, index, outDir, cfg).drop("_ep_name")
     val splits = Observation()
     val indexPath = s"$outDir/dataset_index.parquet"
     SingleFile.writeParquetAtomic(
-      withVideos.observe(splits,
+      placed.observe(splits,
           count_if(col("split") === "train").as("train"),
           count_if(col("split") === "val").as("val"),
           count_if(col("split") === "test").as("test"))
         .repartition(1).sortWithinPartitions("episode_index"),
       indexPath)
-    index.unpersist()
+    val index = spark.read.schema(placed.schema).parquet(indexPath)
+
+    // the stage owns its layout: an episode file it did not place goes,
+    // with its video links (not listed: the Hadoop local filesystem does
+    // not see a link whose source is gone)
+    val outFs = new HPath(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val written = index.select("parquet_path").as[String].collect()
+      .map(rel => outFs.makeQualified(new HPath(outDir, rel))).toSet
+    Episodes.dropUnwritten(spark, s"$outDir/split=*/chunk=*/episode_*.parquet", written)
+      .foreach(stale => Episodes.indexOf(stale.getName).foreach(ep => Cameras.foreach(view =>
+        Files.deleteIfExists(Paths.get(stale.getParent.toUri.getPath, "videos", view,
+          Episodes.videoName(ep))))))
+    outFs.delete(new HPath(tmp), true)
 
     val Seq(train, validation, test) = Observed.longs(splits, "train", "val", "test")
     val manifest =
@@ -91,78 +119,33 @@ object Materialize {
          |  "seed": ${q(cfg.seed)},
          |  "fractions": {"train": ${cfg.train}, "val": ${cfg.validation}, "test": ${cfg.test}},
          |  "counts": {"train": $train, "val": $validation, "test": $test},
-         |  "chunk": ${q(cfg.chunkId)},
-         |  "views": ${cfg.views.map(q).mkString("[", ", ", "]")},
+         |  "chunk": ${q(Chunk)},
+         |  "views": ${Cameras.map(q).mkString("[", ", ", "]")},
          |  "link_videos": ${q(cfg.linkVideos)}
          |}""".stripMargin
     SingleFile.writeText(spark, s"$outDir/_manifest.json", manifest)
+    index
+  }
 
-    spark.read.schema(withVideos.schema).parquet(indexPath)
+  /** Replaces the video at `rel` under `outDir` with a link to (or a copy
+    * of) `src`, or with nothing when `src` is absent. Returns `rel` when
+    * `src` exists, placed or not (manifest-only), else null.
+    */
+  private def placeVideo(src: Option[String], outDir: String, rel: String, mode: String): String = {
+    val dst = Paths.get(outDir.stripPrefix("file:"), rel)
+    Files.deleteIfExists(dst)
+    src.map(Paths.get(_)).filter(Files.exists(_)).map { srcP =>
+      if (mode != "manifest-only") {
+        Files.createDirectories(dst.getParent)
+        mode match {
+          case "symlink" => Files.createSymbolicLink(dst, dst.getParent.relativize(srcP.toAbsolutePath))
+          case "hardlink" => Files.createLink(dst, srcP)
+          case "copy" => Files.copy(srcP, dst)
+        }
+      }
+      rel
+    }.orNull
   }
 
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  /** Link/copy source videos into the layout; adds `<view>.path` columns.
-    * All four reference modes (symlink relative / hardlink / copy /
-    * manifest-only).
-    *
-    * Executor-side: the (episode × view) candidates are a DataFrame, the
-    * link/copy side effects run in `mapPartitions` (idempotent — delete
-    * then create — so task retries are safe), and the placed paths come
-    * back as rows that pivot into one column per view and join onto the
-    * index. No `collect()` of the index, no literal maps in the plan: at
-    * 10M episodes this is a normal distributed job, not a driver loop.
-    */
-  private def placeVideos(spark: SparkSession, index: DataFrame, outDir: String,
-      cfg: Config): DataFrame = {
-    import spark.implicits._
-    def addPathCol(df: DataFrame, view: String, c: org.apache.spark.sql.Column): DataFrame =
-      df.withColumn(s"${view}_path_tmp".replace(".", "_"), c)
-        .withColumnRenamed(s"${view}_path_tmp".replace(".", "_"), s"$view.path")
-    cfg.videosRoot match {
-      case None =>
-        cfg.views.foldLeft(index)((df, view) =>
-          addPathCol(df, view, lit(null).cast("string")))
-      case Some(vroot) =>
-        val linkMode = cfg.linkVideos
-        val chunkId = cfg.chunkId
-        val srcChunk = cfg.videoSourceChunkId
-        val outRoot = outDir.stripPrefix("file:")
-        val candidates = index.select(col("episode_index"), col("split"))
-          .crossJoin(cfg.views.toDF("view")) // |views| rows — broadcast NLJ
-        val placed = candidates.as[(Long, String, String)].mapPartitions { it =>
-          import java.nio.file.{Files, Paths}
-          it.flatMap { case (ep, split, view) =>
-            val srcP = Paths.get(Episodes.videoPath(vroot, srcChunk, view, ep))
-            if (!Files.exists(srcP)) None
-            else {
-              val relPath = s"split=$split/chunk=$chunkId/videos/$view/${Episodes.videoName(ep)}"
-              val dstP = Paths.get(outRoot, relPath)
-              if (linkMode != "manifest-only") {
-                Files.createDirectories(dstP.getParent)
-                Files.deleteIfExists(dstP)
-                linkMode match {
-                  case "symlink" =>
-                    Files.createSymbolicLink(dstP, dstP.getParent.relativize(srcP.toAbsolutePath))
-                  case "hardlink" => Files.createLink(dstP, srcP)
-                  case "copy" => Files.copy(srcP, dstP)
-                  case other => throw new IllegalArgumentException(s"Unknown link method: $other")
-                }
-              }
-              Some((ep, view, relPath))
-            }
-          }
-        }.toDF("episode_index", "view", "rel_path")
-        // one path column per view (explicit pivot values: no discovery job)
-        val pivoted = placed.groupBy("episode_index")
-          .pivot("view", cfg.views)
-          .agg(first("rel_path"))
-          .withColumnRenamed("episode_index", "_pv_ep")
-        val joined = index
-          .join(pivoted, col("episode_index") === col("_pv_ep"), "left")
-          .drop("_pv_ep")
-        cfg.views.foldLeft(joined)((df, view) =>
-          addPathCol(df, view, col(s"`$view`")).drop(col(s"`$view`")))
-    }
-  }
 }

@@ -1,6 +1,6 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Schemas, Status}
@@ -191,8 +191,9 @@ object Validate {
 
     // the summary counts ride the first sink write
     val counts = Observation()
-    results.observe(counts, count(lit(1)).as("total"), count_if(col("ok")).as("ok"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/episodes.parquet")
+    SingleFile.writeParquetAtomic(
+      results.observe(counts, count(lit(1)).as("total"), count_if(col("ok")).as("ok")),
+      s"$outDir/episodes.parquet")
     SingleFile.writeJsonl(
       results.filter(!col("ok")).withColumn("issues", to_json(col("issues"))),
       s"$outDir/failures.jsonl")

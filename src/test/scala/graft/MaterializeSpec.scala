@@ -45,11 +45,13 @@ class MaterializeSpec extends SparkSuite {
 
     // a materialized file holds the normalized file's columns, nothing more
     val sample = rows.head
-    val df = spark.read.parquet(
-      Paths.get(outDir, sample.getAs[String]("parquet_path")).toString)
+    val placed = Paths.get(outDir, sample.getAs[String]("parquet_path"))
     val ep = sample.getAs[Long]("episode_index")
-    val normalized = spark.read.parquet(f"$root/data/chunk-000/episode_$ep%06d.parquet")
-    assert(df.columns.toSeq === normalized.columns.toSeq)
+    val source = Paths.get(f"$root/data/chunk-000/episode_$ep%06d.parquet")
+    assert(spark.read.parquet(placed.toString).columns.toSeq ===
+      spark.read.parquet(source.toString).columns.toSeq)
+    // ... and is that file, byte for byte
+    assert(Files.readAllBytes(placed).sameElements(Files.readAllBytes(source)))
 
     // symlinked videos for episodes 0 and 1
     Seq(0L, 1L).foreach { ep =>
@@ -87,6 +89,31 @@ class MaterializeSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Materialize.Config(train = 0.5, validation = 0.2, test = 0.2)
     }
+    val e = intercept[IllegalArgumentException](Materialize.Config(linkVideos = "bogus"))
+    assert(e.getMessage.contains("bogus"))
+  }
+
+  test("copy and hardlink modes place regular files with the source's bytes") {
+    val root = tmpDir("mat_cp")
+    dataset(spark, root, Map(0L -> cleanFrames(0, 4)), videosFor = Set(0L))
+    val source = Paths.get(s"$root/videos/chunk-000/observation.images.front/episode_000000.mp4")
+    Seq("copy", "hardlink").foreach { mode =>
+      val outDir = tmpDir(s"mat_${mode}_out")
+      val r = Materialize.run(spark, s"$root/data/chunk-000", outDir,
+        Materialize.Config(videosRoot = Some(s"$root/videos"), linkVideos = mode)).collect().head
+      val placed = Paths.get(outDir, r.getAs[String]("observation.images.front.path"))
+      assert(Files.isRegularFile(placed) && !Files.isSymbolicLink(placed), mode)
+      assert(Files.readAllBytes(placed).sameElements(Files.readAllBytes(source)), mode)
+    }
+  }
+
+  test("an episode file with other columns is refused, naming the file") {
+    import spark.implicits._
+    val dir = tmpDir("mat_bad_cols")
+    graft.io.SingleFile.writeParquetAtomic(Seq((0L, 1.0)).toDF("frame_index", "x"),
+      s"$dir/episode_000003.parquet")
+    val e = intercept[Exception](Materialize.run(spark, dir, tmpDir("mat_bad_cols_out")))
+    assert(e.getMessage.contains("episode_000003.parquet"))
   }
 
   test("manifest-only mode places no files but still indexes") {

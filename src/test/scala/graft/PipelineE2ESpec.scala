@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
@@ -111,11 +111,13 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
   test("a rerun drops the outputs of a deleted episode and adds a new one") {
     val root = tmpDir("e2e_rerun")
     val outRoot = s"$root/out"
-    // episode 4 has no videos, so no video link of it lands under dataset/
     dataset(spark, root, Map(0L -> cleanFrames(0, 10), 1L -> cleanFrames(1, 12),
-      4L -> cleanFrames(4, 8)), videosFor = Set(0L, 1L))
+      4L -> cleanFrames(4, 8)), videosFor = Set(0L, 1L, 4L))
     cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
+    // episode 4 goes with its videos: its placed links now dangle
     Files.delete(Paths.get(s"$root/data/chunk-000/episode_000004.parquet"))
+    Seq("front", "wrist").foreach(cam => Files.delete(
+      Paths.get(s"$root/videos/chunk-000/observation.images.$cam/episode_000004.mp4")))
     dataset(spark, root, Map(7L -> cleanFrames(7, 9)))
     cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
 
@@ -140,7 +142,7 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     */
   private val jobBudget = Map(
     "discover" -> 4, "validate" -> 9, "stats" -> 3,
-    "align_transform" -> 4, "materialize" -> 10)
+    "align_transform" -> 4, "materialize" -> 3)
 
   test("stage calls: pinned job counts, one fingerprint pass, no cached table left") {
     val outRoot = s"$root/out_stages"
@@ -192,9 +194,15 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
         Seq("action", Schemas.ObsStateStorage), Some(s"$validateOut/validated_episodes.jsonl")))
       val normalized = stage("align_transform")(AlignTransform.run(spark, s"$root/data",
         s"$outRoot/normalized", Some(statsOut)))
+      executions.synchronized(executions.clear())
       val index = stage("materialize")(Materialize.run(spark, s"$outRoot/normalized",
         s"$outRoot/dataset", Materialize.Config(videosRoot = Some(s"$root/videos"))))
       assert(counted.toMap === jobBudget)
+      // materialize places the normalized files: it scans none of them
+      val scans = executions.synchronized(executions.toSeq).flatMap(qe =>
+        collect(qe.executedPlan) { case s: FileSourceScanExec => s.relation.location.rootPaths })
+      assert(scans.nonEmpty, "the index read-back is recorded")
+      assert(!scans.flatten.exists(_.toString.contains(s"$outRoot/normalized")), scans)
 
       assert(delta.count() === 5)
       assert((total, ok, fail) === ((5L, 3L, 2L)))

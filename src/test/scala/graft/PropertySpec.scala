@@ -79,7 +79,7 @@ class PropertySpec extends SparkSuite {
     import spark.implicits._
     val docGen = Gen.listOfN(60,
       Gen.zip(Gen.chooseNum(0.0, 1.0), Gen.chooseNum(1L, 500L)))
-    check("budget", Prop.forAll(docGen, Gen.chooseNum(0L, 20000L)) { (rows, budget) =>
+    check("budget", Prop.forAllNoShrink(docGen, Gen.chooseNum(0L, 20000L)) { (rows, budget) =>
       val df = rows.zipWithIndex
         .map { case ((sc, tk), i) => (i.toLong, sc, tk) }
         .toDF("doc_id", "score", "tokens")
@@ -131,7 +131,7 @@ class PropertySpec extends SparkSuite {
       Gen.chooseNum(Long.MinValue, Long.MaxValue),
       Gen.oneOf(0L, -1L, 1L, Long.MinValue, Long.MaxValue))
     check("bloom-no-false-neg",
-      Prop.forAll(Gen.nonEmptyListOf(keyGen).map(_.distinct)) { keys =>
+      Prop.forAllNoShrink(Gen.nonEmptyListOf(keyGen).map(_.distinct)) { keys =>
         val df = keys.toDF("k")
         val sketch = graft.ops.BloomJoin.buildSketch(
           df, col("k"), keys.size.toLong, 0.03).get

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Randomized properties for the round-10 exact kernels, via the raw
   * ScalaCheck harness (PropertySpec's pattern). Spark-bound properties run
-  * few, small cases — each case is a full job.
+  * few, small cases — each case is a full job — and do not shrink: a
+  * failing case is reported as drawn, not after hundreds more jobs.
   */
 class R10PropertySpec extends SparkSuite {
 
@@ -21,7 +22,7 @@ class R10PropertySpec extends SparkSuite {
 
   test("triangles: engine == in-memory reference on random graphs") {
     import spark.implicits._
-    check("triangles", Prop.forAll(edgeGen) { edges =>
+    check("triangles", Prop.forAllNoShrink(edgeGen) { edges =>
       val got = graft.ops.Triangles
         .perNode(edges.toDF("src", "dst"), "src", "dst")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -34,7 +35,7 @@ class R10PropertySpec extends SparkSuite {
     val vecsGen = Gen.listOfN(12,
         Gen.listOfN(3, Gen.chooseNum(-5.0, 5.0)))
       .map(_.zipWithIndex.map { case (v, i) => i.toLong -> v })
-    check("kmeans", Prop.forAll(vecsGen, Gen.oneOf(1, 2)) { (vecs, iters) =>
+    check("kmeans", Prop.forAllNoShrink(vecsGen, Gen.oneOf(1, 2)) { (vecs, iters) =>
       val df = vecs.map { case (id, v) => (id, v.map(_.toFloat)) }
         .toDF("vec_id", "embedding")
       val got = graft.ops.KMeans.lloydAssign(df, "vec_id", "embedding", 2, iters)
@@ -69,7 +70,7 @@ class R10PropertySpec extends SparkSuite {
         Gen.zip(Gen.chooseNum(0L, 50L), Gen.chooseNum(1L, 20L)))
       .map(_.map { case (s, len) => (s, s + len) })
       .suchThat(_.nonEmpty)
-    check("sweep", Prop.forAll(ivGen) { ivs =>
+    check("sweep", Prop.forAllNoShrink(ivGen) { ivs =>
       val got = graft.ops.Sweep
         .peakConcurrency(ivs.toDF("s", "e"), "s", "e").head()
       val events = ivs.flatMap { case (s, e) => Seq((s, 1), (e, -1)) }
@@ -86,7 +87,7 @@ class R10PropertySpec extends SparkSuite {
     import spark.implicits._
     val rowsGen = Gen.nonEmptyListOf(
       Gen.zip(Gen.chooseNum(0L, 9L), Gen.chooseNum(1L, 5L)))
-    check("wmedian", Prop.forAll(rowsGen) { rows =>
+    check("wmedian", Prop.forAllNoShrink(rowsGen) { rows =>
       val df = rows.map { case (v, w) => ("g", v, w) }.toDF("grp", "v", "w")
       val got = graft.ops.Quantiles.weightedMedian(df, "grp", "v", "w").head()
       val tot = rows.map(_._2).sum
@@ -101,7 +102,7 @@ class R10PropertySpec extends SparkSuite {
     import spark.implicits._
     val seriesGen = Gen.nonEmptyListOf(Gen.chooseNum(0L, 50L))
       .suchThat(_.size >= 2)
-    check("cusum", Prop.forAll(seriesGen) { series =>
+    check("cusum", Prop.forAllNoShrink(seriesGen) { series =>
       val df = series.zipWithIndex.map { case (n, i) => (i.toLong, n) }
         .toDF("p", "n")
       val got = graft.ops.TimeSeries.cusum(df, "p", "n", 1, 20)
@@ -119,7 +120,7 @@ class R10PropertySpec extends SparkSuite {
     val sampGen = Gen.zip(
       Gen.nonEmptyListOf(Gen.chooseNum(0, 6).map(_.toDouble)),
       Gen.nonEmptyListOf(Gen.chooseNum(0, 6).map(_.toDouble)))
-    check("mw", Prop.forAll(sampGen) { case (a, b) =>
+    check("mw", Prop.forAllNoShrink(sampGen) { case (a, b) =>
       val df = (a.map(("a", _)) ++ b.map(("b", _))).toDF("g", "v")
       val ra = graft.ops.RankTest.mannWhitney(df, col("v"), col("g") === "a").head()
       val rb = graft.ops.RankTest.mannWhitney(df, col("v"), col("g") === "b").head()

@@ -17,7 +17,9 @@ class SingleFileSpec extends SparkSuite {
   test("writeParquetAtomic replaces and leaves no backup behind") {
     val dir = tmpDir("sf_atomic")
     val tgt = s"$dir/state.parquet"
+    Seq(0L).toDF("id").write.parquet(tgt) // a directory of part files
     SingleFile.writeParquetAtomic(Seq(1L, 2L).toDF("id"), tgt)
+    assert(readIds(tgt) == Set(1L, 2L))
     SingleFile.writeParquetAtomic(Seq(3L).toDF("id"), tgt)
     assert(readIds(tgt) == Set(3L))
     val fs = new HPath(tgt).getFileSystem(spark.sparkContext.hadoopConfiguration)
