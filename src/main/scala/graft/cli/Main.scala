@@ -74,7 +74,7 @@ object Main {
             Map("ignoreNullFields" -> "false")).as("j"))
           .toLocalIterator().forEachRemaining(r => println(r.getString(0)))
       } else
-        println(s"discover: ${delta.count()} delta rows → $manifestOut")
+        println(s"discover: ${delta.count()} delta rows -> $manifestOut")
 
     case "validate" :: manifest :: metaDir :: outDir :: rest =>
       val cfg = Validate.Config(
@@ -83,7 +83,7 @@ object Main {
         // reference CLI default is video checks ON (neura.py:89)
         skipVideo = rest.contains("--skip-video"))
       val (total, ok, fail) = Validate.run(spark, manifest, metaDir, outDir, cfg)
-      println(s"validate: total=$total ok=$ok fail=$fail → $outDir")
+      println(s"validate: total=$total ok=$ok fail=$fail -> $outDir")
 
     case "stats" :: statsJsonl :: outJson :: rest =>
       val features = flag(rest, "--features")
@@ -91,12 +91,12 @@ object Main {
         .getOrElse(Seq("action", Schemas.ObsStateStorage))
       val gs = Stats.run(spark, statsJsonl, outJson, features,
         flag(rest, "--valid-ids"))
-      println(s"stats: episodes_used=${gs.episodesUsed} total_frames=${gs.totalFrames} → $outJson")
+      println(s"stats: episodes_used=${gs.episodesUsed} total_frames=${gs.totalFrames} -> $outJson")
 
     case "align-transform" :: dataDir :: outDir :: rest =>
       val written = AlignTransform.run(spark, dataDir, outDir,
         flag(rest, "--stats"), normalize = !rest.contains("--no-normalize"))
-      println(s"align-transform: ${written.size} episodes → $outDir")
+      println(s"align-transform: ${written.size} episodes -> $outDir")
 
     case "materialize" :: normDir :: outDir :: rest =>
       val cfg = Materialize.Config(
@@ -107,7 +107,7 @@ object Main {
         videosRoot = flag(rest, "--videos-root"),
         linkVideos = flag(rest, "--link").getOrElse("symlink"))
       val index = Materialize.run(spark, normDir, outDir, cfg)
-      println(s"materialize: ${index.count()} episodes indexed → $outDir")
+      println(s"materialize: ${index.count()} episodes indexed -> $outDir")
 
     case "pipeline" :: dataRoot :: outRoot :: rest =>
       val manifest = s"$outRoot/manifest/episodes.parquet"
@@ -131,7 +131,7 @@ object Main {
         graft.io.SingleFile.writeText(spark, statsOut,
           graft.core.StatsDoc.render(gs,
             Seq("action", Schemas.ObsStateStorage), "Recomputed from raw frames."))
-        println(s"stats: recomputed from frames → $statsOut")
+        println(s"stats: recomputed from frames -> $statsOut")
       }
       run(spark, List("align-transform", s"$dataRoot/data", normDir, "--stats", statsOut))
       run(spark, List("materialize", normDir, matDir,

@@ -1,6 +1,6 @@
 package graft.core
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -29,9 +29,6 @@ final case class GlobalStats(
     features: Map[String, FeatureStats])
 
 object StatsDoc {
-  private val mapper = new ObjectMapper()
-    .configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-
   private def floats(n: JsonNode): Option[Seq[Double]] =
     if (n == null || n.isNull) None
     else if (n.isNumber) Some(Seq(n.asDouble()))
@@ -66,7 +63,7 @@ object StatsDoc {
   /** Tolerant parse of the whole document; None on malformed JSON. */
   def parse(text: String): Option[GlobalStats] =
     Try {
-      val root = mapper.readTree(text)
+      val root = Json.tree(text)
       require(root != null && root.isObject)
       val meta = Option(root.get("meta"))
       val features = root.properties().asScala
@@ -89,14 +86,14 @@ object StatsDoc {
     sb.append("  \"meta\": {\n")
     sb.append(s"""    "episodes_used": ${gs.episodesUsed},\n""")
     sb.append(s"""    "total_frames": ${gs.totalFrames},\n""")
-    sb.append(s"""    "source": ${mapper.writeValueAsString(gs.source)},\n""")
-    sb.append(s"""    "features": ${featureOrder.map(mapper.writeValueAsString).mkString("[", ", ", "]")},\n""")
-    sb.append(s"""    "note": ${mapper.writeValueAsString(note)}\n""")
+    sb.append(s"""    "source": ${Json.quote(gs.source)},\n""")
+    sb.append(s"""    "features": ${featureOrder.map(Json.quote).mkString("[", ", ", "]")},\n""")
+    sb.append(s"""    "note": ${Json.quote(note)}\n""")
     sb.append("  }")
     featureOrder.filter(gs.features.contains).foreach { k =>
       val f = gs.features(k)
       sb.append(",\n")
-      sb.append(s"""  ${mapper.writeValueAsString(k)}: {\n""")
+      sb.append(s"""  ${Json.quote(k)}: {\n""")
       sb.append(s"""    "count": ${f.count},\n""")
       sb.append(s"""    "mean": ${vec(f.mean)},\n""")
       sb.append(s"""    "std": ${vec(f.std)},\n""")

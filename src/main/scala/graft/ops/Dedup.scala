@@ -368,7 +368,7 @@ object Dedup {
     * shuffles up to bands × Σ bucket² rows, and moving the token payload
     * through that shuffle is the dominant byte cost at corpus scale — the
     * payload re-joins AFTER the distinct, when only |unique pairs| rows
-    * remain (measured on the 10k-duplicate-spam ScaleProbe entry).
+    * remain (PLANS.md, Round-8, "Candidate distinct narrowed").
     */
   private def bandedShingles(df: DataFrame, idCol: String, shinglesCol: String,
       bands: Int, rowsPerBand: Int, seed: String,

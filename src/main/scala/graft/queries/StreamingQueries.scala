@@ -593,8 +593,9 @@ object StreamingQueries {
   /** Stream-stream LEFT OUTER interval join (q199): views left-joined to
     * same-user clicks in the following 30 minutes; a view with NO click
     * emits its null row only once the state watermark PROVES no match can
-    * arrive. The emission rule is pinned empirically (OuterJoinProbe, 7
-    * boundary cases incl. sub-ms): nulls are a MULTI-batch phenomenon
+    * arrive. The emission rule is pinned by StreamingSpec's q199 test (7
+    * boundary cases incl. sub-ms; PLANS.md, Round 9, "Round-9 late
+    * addition: q199"): nulls are a MULTI-batch phenomenon
     * (batch N evicts with the watermark derived from batches < N — a
     * single-batch drain can never emit one; the two-batch drain plus the
     * engine's final NO-DATA batch bring every view under the FULL-data
@@ -661,9 +662,10 @@ object StreamingQueries {
   }
 
   /** Stream-stream FULL OUTER interval join (q200): q199's left side plus
-    * the symmetric click-side nulls. OuterJoinProbe pins the click rule:
-    * eviction keys off the GLOBAL min watermark (not the per-side one),
-    * with the click's join allowance of 0 and the same extra −1 ms —
+    * the symmetric click-side nulls. StreamingSpec's q200 test pins the
+    * click rule: eviction keys off the GLOBAL min watermark (not the
+    * per-side one), with the click's join allowance of 0 and the same
+    * extra −1 ms —
     * an unmatched click emits iff `c_us ≤ (wm_ms − 1) · 1000`, verified
     * at 1 min / 2 ms / 1 ms / 0.5 ms / exact / +1 ms boundaries.
     */
@@ -731,13 +733,13 @@ object StreamingQueries {
   /** dropDuplicatesWithinWatermark EVICTION + RE-ADMISSION (q203): q134
     * gates the dedup happy path; this gates what happens when a key's
     * state AGES OUT — the duplicate that arrives after expiry is a fresh
-    * first-seen and emits AGAIN. Contract pinned by tools/DedupEvictProbe:
+    * first-seen and emits AGAIN. Contract pinned by StreamingSpec's q203
+    * eviction test (PLANS.md, Round 9, "q203 (final round-9 gate)"):
     * state expiry = floor_ms(first_ts) + delay_ms; eviction runs at batch
     * END against the batch's PLANNING watermark, inclusive (expiry ≤ wm),
     * so same-batch duplicates still drop and re-admission starts the next
-    * batch; duplicates do NOT extend expiry. The probe also found a
-    * sub-watermark admission corner it could NOT pin consistently (rows
-    * below the watermark admitted in one shape, late-dropped in another),
+    * batch; duplicates do NOT extend expiry. Rows below the watermark
+    * follow a separate late-input rule (one batch behind; q204, q210),
     * so this fixture keeps EVERY row above the watermark of its batch —
     * the gate certifies eviction/re-admission, not late-row admission.
     * Fixture: one row per (user, batch); batch-1 times spread over 49

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.{Schemas, Status}
+import graft.core.{Json, Schemas, Status}
 import graft.io.{Episodes, SingleFile}
 import graft.io.Episodes.Cameras
 import graft.ops.Fingerprint
@@ -86,7 +86,7 @@ object Discover {
             } catch {
               case e: Exception =>
                 fp = null; bytesTotal = 0L; isPending = false
-                err = s"""{"exception": "${e.getClass.getSimpleName}", "msg": ${jsonStr(e.getMessage)}}"""
+                err = s"""{"exception": "${e.getClass.getSimpleName}", "msg": ${Json.quote(e.getMessage)}}"""
             }
             val status0 = if (isPending) Status.Pending else Status.New
             val status =
@@ -101,15 +101,6 @@ object Discover {
       }
     }.toDF()
   }
-
-  private def jsonStr(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** Orphan-video detection (J3): videos whose (chunk, episode) has no
     * parquet — a distributed anti-join replacing the reference's Python

@@ -8,7 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.Schemas
+import graft.core.{Json, Schemas}
 import graft.functions.Hashing
 import graft.io.{Episodes, SingleFile}
 import graft.io.Episodes.Cameras
@@ -113,15 +113,15 @@ object Materialize {
     val Seq(train, validation, test) = Observed.longs(splits, "train", "val", "test")
     val manifest =
       s"""{
-         |  "source_parquet": ${q(normDir)},
-         |  "source_videos": ${cfg.videosRoot.map(q).getOrElse("null")},
-         |  "output": ${q(outDir)},
-         |  "seed": ${q(cfg.seed)},
+         |  "source_parquet": ${Json.quote(normDir)},
+         |  "source_videos": ${Json.quote(cfg.videosRoot.orNull)},
+         |  "output": ${Json.quote(outDir)},
+         |  "seed": ${Json.quote(cfg.seed)},
          |  "fractions": {"train": ${cfg.train}, "val": ${cfg.validation}, "test": ${cfg.test}},
          |  "counts": {"train": $train, "val": $validation, "test": $test},
-         |  "chunk": ${q(Chunk)},
-         |  "views": ${Cameras.map(q).mkString("[", ", ", "]")},
-         |  "link_videos": ${q(cfg.linkVideos)}
+         |  "chunk": ${Json.quote(Chunk)},
+         |  "views": ${Cameras.map(Json.quote).mkString("[", ", ", "]")},
+         |  "link_videos": ${Json.quote(cfg.linkVideos)}
          |}""".stripMargin
     SingleFile.writeText(spark, s"$outDir/_manifest.json", manifest)
     index
@@ -146,6 +146,4 @@ object Materialize {
       rel
     }.orNull
   }
-
-  private def q(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 }

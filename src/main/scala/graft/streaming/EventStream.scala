@@ -636,10 +636,10 @@ object EventStream {
 
   /** Two-micro-batch Append drain for operators whose OUTPUT only exists
     * across batches — stream-stream OUTER join null rows above all
-    * (OuterJoinProbe finding: the watermark for batch N derives from data
-    * through batch N−1, and state eviction — which is what EMITS outer
-    * nulls — runs against that lagged watermark, so a single-batch drain
-    * can never produce one). The events file splits by `event_id` parity
+    * (PLANS.md, Round 9, q199; StreamingSpec's q199 test: the watermark
+    * for batch N derives from data through batch N−1, and state
+    * eviction — which is what EMITS outer nulls — runs against that
+    * lagged watermark, so a single-batch drain can never produce one). The events file splits by `event_id` parity
     * (DuckDB-replayable, unlike a hash split); part 1's mtime is set
     * 10 s earlier so the file source's oldest-first ordering makes the
     * even half batch 1 deterministically. Sink is parquet (the memory

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Json
 
 /** Degenerate-input robustness sweep: run EVERY gate against a testdata
   * directory whose tables carry the real schemas but ZERO rows.
@@ -339,12 +340,12 @@ object EmptySweep {
     * production text-embedding models actually emit, 24× the committed
     * testdata's 64) by tiling the row's real values with a per-copy
     * perturbation (keeps magnitudes in-domain — width is the ONLY
-    * variable). Complements the targeted `ScaleProbe widedims` kernel
-    * probe: the SHAPE runs every embeddings consumer on the board —
-    * quantizers (PQ sub-vector split at 1536/m), IVF/LSH literal builds
-    * (planes×1536, k×1536 typedLits), dim-stats, projections — where a
-    * dims-driven assumption (codegen size, sub-block arithmetic, a
-    * hardcoded 64) would crash rather than refuse.
+    * variable). Complements the wide-dims kernel record (PLANS.md,
+    * Round-15, "Wide-dims probe"): the SHAPE runs every embeddings
+    * consumer on the board — quantizers (PQ sub-vector split at 1536/m),
+    * IVF/LSH literal builds (planes×1536, k×1536 typedLits), dim-stats,
+    * projections — where a dims-driven assumption (codegen size,
+    * sub-block arithmetic, a hardcoded 64) would crash rather than refuse.
     */
   def writeWideTables(spark: SparkSession, srcDir: String, outDir: String,
       n: Int = 20, wideDims: Int = 1536): Unit = {
@@ -424,8 +425,9 @@ object EmptySweep {
     "hotkey" -> ((s, src, out) => writeHotKeyTables(s, src, out)),
     "timewarp" -> ((s, src, out) => writeTimewarpTables(s, src, out)),
     "wide" -> ((s, src, out) => writeWideTables(s, src, out)),
-    // round-16 verdict #6: close the loop between the ScaleProbe widedims
-    // record (kernels linear to 4096 dims) and the full board — every gate
+    // round-16 verdict #6: close the loop between the wide-dims kernel
+    // record (PLANS.md, Round-16, "Wide-dims probe at 4096": kernels
+    // linear to 4096 dims) and the full board — every gate
     // at the 4096-dim embedding width, not just the ANN kernels
     "wide4096" -> ((s, src, out) =>
       writeWideTables(s, src, out, wideDims = 4096)))
@@ -459,14 +461,6 @@ object EmptySweep {
         }
     } finally graft.ops.Pins.releaseAll(spark)
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
-
   /** `battery` mode: run EVERY shape × EVERY gate and write the ledger as
     * SWEEPS.json — {shape: {gate: "PASS"|"LOUD: …"|"FAIL: …"}} plus a
     * per-shape summary. One diffable artifact instead of twelve PLANS.md
@@ -492,7 +486,7 @@ object EmptySweep {
     val gates = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.contains(only))
     val sb = new StringBuilder
-    sb.append(s"""{"src":"${jsonEscape(srcDir)}","gates_n":${gates.size},""")
+    sb.append(s"""{"src":${Json.quote(srcDir)},"gates_n":${gates.size},""")
     sb.append(s""""as_of_round":${newestCorrectnessRound()},""")
     sb.append(""""shapes":{""")
     val summaries = shapeWriters.zipWithIndex.map { case ((shape, writer), si) =>
@@ -514,7 +508,7 @@ object EmptySweep {
           val v = if (kind == "PASS") "PASS"
             else s"$kind: ${detail.take(160)}"
           if (gi > 0) sb.append(",")
-          sb.append(s""""$name":"${jsonEscape(v)}"""")
+          sb.append(s""""$name":${Json.quote(v)}""")
         }
         sb.append("}")
       } finally graft.io.TempDirs.deleteRecursively(dir)

@@ -43,11 +43,12 @@ class CliFlagsSpec extends SparkSuite {
   test("materialize: --train/--val/--test fractions reach the split assignment") {
     val root = buildRoot()
     val normDir = s"$root/norm"
-    cli.Main.run(spark,
-      List("align-transform", s"$root/data/chunk-000", normDir, "--no-normalize"))
+    val out = new java.io.ByteArrayOutputStream()
+    def cliRun(args: List[String]): Unit =
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(cli.Main.run(spark, args))
+    cliRun(List("align-transform", s"$root/data/chunk-000", normDir, "--no-normalize"))
     def splits(outDir: String, fracs: List[String]): Set[String] = {
-      cli.Main.run(spark,
-        List("materialize", normDir, outDir, "--seed", "7") ++ fracs)
+      cliRun(List("materialize", normDir, outDir, "--seed", "7") ++ fracs)
       spark.read.parquet(s"$outDir/dataset_index.parquet")
         .select("split").distinct().collect().map(_.getString(0)).toSet
     }
@@ -56,6 +57,10 @@ class CliFlagsSpec extends SparkSuite {
       List("--train", "1.0", "--val", "0.0", "--test", "0.0")) === Set("train"))
     assert(splits(s"$root/m2",
       List("--train", "0.0", "--val", "0.0", "--test", "1.0")) === Set("test"))
+    // the stage lines are plain ASCII, so any stdout encoding shows them
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(lines.size === 3, lines)
+    lines.foreach(l => assert(l.forall(_ < 128) && l.contains(" -> "), l))
   }
 
   test("discover: --all prints the FULL stored manifest, not the delta") {

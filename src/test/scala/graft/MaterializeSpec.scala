@@ -11,6 +11,10 @@ import graft.functions.Hashing
 class MaterializeSpec extends SparkSuite {
   import FixtureGen._
 
+  private def manifestOf(outDir: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      graft.io.SingleFile.readText(spark, s"$outDir/_manifest.json").get)
+
   test("deterministic split assignment, layout, index, manifest") {
     val root = tmpDir("mat_root")
     val outDir = tmpDir("mat_out")
@@ -34,13 +38,14 @@ class MaterializeSpec extends SparkSuite {
       assert(Seq("train", "val", "test").contains(split))
     }
 
-    // split counts sum to 20 and _manifest.json reflects them
-    val manifest = graft.io.SingleFile.readText(spark, s"$outDir/_manifest.json").get
-    assert(manifest.contains("\"seed\": \"42\""))
+    // split counts sum to 20 and _manifest.json, parsed, reflects them
+    val manifest = manifestOf(outDir)
+    assert(manifest.get("seed").asText === "42")
+    assert(manifest.get("source_videos").asText === s"$root/videos")
     val counts = rows.groupBy(_.getAs[String]("split")).view.mapValues(_.length).toMap
     assert(counts.values.sum === 20)
     Seq("train", "val", "test").foreach { s =>
-      assert(manifest.contains(s""""$s": ${counts.getOrElse(s, 0)}"""))
+      assert(manifest.get("counts").get(s).asLong === counts.getOrElse(s, 0).toLong)
     }
 
     // a materialized file holds the normalized file's columns, nothing more
@@ -65,6 +70,17 @@ class MaterializeSpec extends SparkSuite {
     // no videos for the rest
     val r5 = rows.find(_.getAs[Long]("episode_index") == 5L).get
     assert(r5.getAs[String]("observation.images.front.path") == null)
+  }
+
+  test("_manifest.json stays valid JSON when the seed holds a control character") {
+    val root = tmpDir("mat_tab")
+    val outDir = tmpDir("mat_tab_out")
+    dataset(spark, root, Map(0L -> cleanFrames(0, 3)))
+    Materialize.run(spark, s"$root/data/chunk-000", outDir,
+      Materialize.Config(seed = "s\t1"))
+    val manifest = manifestOf(outDir)
+    assert(manifest.get("seed").asText === "s\t1")
+    assert(manifest.get("source_videos").isNull)
   }
 
   test("split is stable under the seed and respects fractions roughly") {

@@ -90,7 +90,8 @@ class OpsSpec extends SparkSuite {
   test("simhashHammingPairs: caller columns named like old internals don't collide") {
     // regression: the chunked-join guard once used bare `_s` internally,
     // so a signature column named `_s` hit AMBIGUOUS_REFERENCE on the hot
-    // path (found by the 10k-spam ScaleProbe entry)
+    // path (PLANS.md, Round-8 continuation 2, "Robustness fix found by the
+    // probe")
     val sigs = spamDocs.select(col("doc_id"),
       when(col("doc_id") < 600, lit(0x2AAAL))
         .otherwise(shiftleft(col("doc_id"), 20)).as("_s"))

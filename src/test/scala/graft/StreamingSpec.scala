@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStream
 import graft.multimodal.Media
+import graft.queries.{Q, StreamingQueries}
 
 /** Streaming-equals-batch equivalence + multimodal plumbing tests. */
 class StreamingSpec extends SparkSuite {
@@ -70,6 +71,133 @@ class StreamingSpec extends SparkSuite {
       else Seq(first)
     }.toSet // user 99's single trailing session is open → never emitted
     assert(out === expected)
+  }
+
+  // Stream-stream outer joins drain in two micro-batches (even event_ids
+  // first) and evict on the min of both sides' watermarks, each
+  // floor_ms(max ts) − 2 h. Both fixtures carry a view and a click at max1
+  // in the first file and a later view in the second, so the final
+  // watermark is wm1 = floor_ms(max1) − 2 h.
+  private val joinWinUs = 1800L * 1000000L
+  private val joinBase = 1700000000L * 1000000L
+  private val max1Us = joinBase + 86400L * 1000000L
+  private val wm1Us = (max1Us / 1000L - 7200000L) * 1000L
+  private val joinSetters = Seq((990L, max1Us, 99L, "view"),
+    (992L, max1Us, 96L, "click"), (991L, max1Us + 3600L * 1000000L, 98L, "view"))
+
+  /** Runs `gate` on `rows` (event_id, ts_us, user_id, event_type) and
+    * returns its rows, the batch rule's matched (view, click) pairs, its
+    * unmatched views and clicks, and the final watermark in ms.
+    */
+  private def outerJoinRun(gate: Q, rows: Seq[(Long, Long, Long, String)]) = {
+    import spark.implicits._
+    val dir = tmpDir(gate.name)
+    graft.io.SingleFile.writeParquetAtomic(
+      rows.toDF("event_id", "ts_us", "user_id", "event_type")
+        .select(col("event_id"), expr("timestamp_micros(ts_us)").as("ts"),
+          col("user_id"), col("event_type"), lit(1.0).as("value"),
+          lit("{}").as("props")), s"$dir/events.parquet")
+    val out = gate.run(spark, dir).collect().map(r => r.toSeq.map {
+      case null => None
+      case v => Some(v.asInstanceOf[Long])
+    }).toSet
+    val (views, clicks) = rows.partition(_._4 == "view")
+    def hit(v: (Long, Long, Long, String), c: (Long, Long, Long, String)) =
+      v._3 == c._3 && c._2 >= v._2 && c._2 <= v._2 + joinWinUs
+    val pairs = for (v <- views; c <- clicks if hit(v, c)) yield (v, c)
+    val wmMs = Seq(views, clicks).map(s => Math.floorDiv(s.map(_._2).max, 1000L)).min - 7200000L
+    (out, pairs, views.filterNot(v => clicks.exists(hit(v, _))),
+      clicks.filterNot(c => views.exists(hit(_, c))), wmMs)
+  }
+
+  test("q199 outer stream join: an unmatched view's null row emits iff v_us <= (wm_ms - 1800001) * 1000") {
+    // the round-9 probe's view fixture (PLANS.md, Round 9, q199), pinned
+    // through the gate's own drain
+    val cases = Seq( // (user, v_us, emits): the view's window end vs wm1
+      (1L, wm1Us - joinWinUs - 60000000L, true), // 1 min before
+      (2L, wm1Us - joinWinUs, false),            // exactly at
+      (3L, wm1Us - joinWinUs + 1000L, false),    // 1 ms after
+      (4L, wm1Us - joinWinUs + 60000000L, false), // 1 min after
+      (5L, wm1Us - joinWinUs - 500L, false),     // 0.5 ms before
+      (6L, wm1Us - joinWinUs - 2000L, true),     // 2 ms before
+      (7L, wm1Us - joinWinUs - 1000L, true))     // 1 ms before
+    val rows = cases.map { case (u, v, _) => (u * 10L, v, u, "view") } ++ Seq(
+      (500L, joinBase, 50L, "view"), (501L, joinBase + 60000000L, 50L, "click"),
+      (600L, joinBase + 5000000L, 60L, "view"), (602L, joinBase + 6000000L, 60L, "click")) ++
+      joinSetters
+    val (out, pairs, lonelyViews, _, wmMs) =
+      outerJoinRun(StreamingQueries.q199OuterStreamJoin, rows)
+    assert(wmMs * 1000L === wm1Us)
+    val expected = pairs.map { case (v, c) => Seq(Some(v._3), Some(v._1), Some(c._1), Some(v._2)) } ++
+      lonelyViews.filter(_._2 <= (wmMs - 1800001L) * 1000L)
+        .map(v => Seq(Some(v._3), Some(v._1), None, Some(v._2)))
+    assert(out === expected.toSet)
+    cases.foreach { case (u, v, emits) =>
+      assert(out.contains(Seq(Some(u), Some(u * 10L), None, Some(v))) === emits, s"case $u")
+    }
+  }
+
+  test("q200 full outer stream join: an unmatched click's null row emits iff c_us <= (wm_ms - 1) * 1000") {
+    // the round-9 probe's click fixture (PLANS.md, Round 9, q200), pinned
+    // through the gate's own drain
+    val cases = Seq( // (user, c_us, emits): the click vs wm1
+      (11L, wm1Us - 60000000L, true), // 1 min before
+      (12L, wm1Us, false),            // exactly at
+      (13L, wm1Us + 1000L, false),    // 1 ms after
+      (14L, wm1Us - 500L, false),     // 0.5 ms before
+      (15L, wm1Us - 1000L, true),     // 1 ms before
+      (16L, wm1Us - 2000L, true))     // 2 ms before
+    val rows = cases.map { case (u, t, _) => (u * 10L, t, u, "click") } ++ Seq(
+      (500L, joinBase, 50L, "view"), (501L, joinBase + 60000000L, 50L, "click")) ++
+      joinSetters
+    val (out, pairs, lonelyViews, lonelyClicks, wmMs) =
+      outerJoinRun(StreamingQueries.q200FullOuterStreamJoin, rows)
+    assert(wmMs * 1000L === wm1Us)
+    val expected = pairs.map { case (v, c) => Seq(Some(v._3), Some(v._1), Some(c._1)) } ++
+      lonelyViews.filter(_._2 <= (wmMs - 1800001L) * 1000L)
+        .map(v => Seq(Some(v._3), Some(v._1), None)) ++
+      lonelyClicks.filter(_._2 <= (wmMs - 1L) * 1000L)
+        .map(c => Seq(Some(c._3), None, Some(c._1)))
+    assert(out === expected.toSet)
+    cases.foreach { case (u, _, emits) =>
+      assert(out.contains(Seq(Some(u), None, Some(u * 10L))) === emits, s"case $u")
+    }
+  }
+
+  test("q203 dedup eviction: a first-seen key re-admits iff floor_ms(first_ts) + delay <= wm1") {
+    // the round-9 probe's fixture (PLANS.md, Round 9, q203) through q203's
+    // drain and transform shape: each first-seen row in batch 1, a
+    // duplicate in batches 2 and 3; the setters put batch 2's planning
+    // watermark at wm1 = floor_ms(max1) − 1 h
+    val delayUs = 3600L * 1000000L
+    val wmUs = (max1Us / 1000L - delayUs / 1000L) * 1000L
+    val cases = Seq( // (user, first_ts, emissions): the state's expiry vs wm1
+      (101L, wmUs - delayUs - 60000000L, 2L), // 1 min below
+      (102L, wmUs - delayUs - 2000L, 2L),     // 2 ms below
+      (103L, wmUs - delayUs - 1000L, 2L),     // 1 ms below
+      (104L, wmUs - delayUs - 500L, 2L),      // 0.5 ms below (floored: 1 ms)
+      (105L, wmUs - delayUs, 2L),             // exactly at
+      (106L, wmUs - delayUs + 1000L, 1L))     // 1 ms above
+    val rows = cases.flatMap { case (u, t, _) => Seq((u * 30L, t, u),
+      (u * 30L + 1L, max1Us - 1000000L, u), (u * 30L + 2L, max1Us - 500000L, u))
+    } ++ Seq((900L, max1Us, 900L), (901L, max1Us + 1000000L, 901L),
+      (902L, max1Us + 2000000L, 902L))
+    import spark.implicits._
+    val df = rows.toDF("event_id", "ts_us", "user_id")
+      .select(col("user_id"), expr("timestamp_micros(ts_us)").as("ts"), col("event_id"))
+    val out = EventStream.runBatchedAppend(spark,
+      (0 to 2).map(b => df.filter(col("event_id") % 3 === b)),
+      d => d.withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("user_id")
+        .select("user_id"),
+      "t_dedup_evict")
+      .groupBy("user_id").agg(count(lit(1))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expected = rows.groupBy(_._3).map { case (u, rs) =>
+      u -> (if (Math.floorDiv(rs.map(_._2).min, 1000L) * 1000L + delayUs <= wmUs) 2L else 1L)
+    }
+    assert(out === expected)
+    cases.foreach { case (u, _, n) => assert(out(u) === n, s"case $u") }
   }
 
   test("transformWithState modal type equals the batch mode after a drain") {

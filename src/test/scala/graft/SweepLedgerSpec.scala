@@ -55,8 +55,9 @@ class SweepLedgerSpec extends AnyFunSuite {
     ("timewarp", 215, 3),
     ("wide", 216, 2),
     // round-16 verdict #6: the full board at the 4096-dim embedding width
-    // ScaleProbe's widedims record proved linear — closes the loop between
-    // the kernel probe and the board ledger
+    // the wide-dims kernel record proved linear (PLANS.md, Round-16,
+    // "Wide-dims probe at 4096") — closes the loop between that record
+    // and the board ledger
     ("wide4096", 216, 2))
 
   private lazy val root = {

@@ -1,12 +1,15 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graft.GraftBridge
 import graft.tools.{Explain, Profile}
 
 /** The cores of the two dev-tool mains, `tools.Profile` and
-  * `tools.Explain`, on one sf0.001 batch gate.
+  * `tools.Explain`, on one sf0.001 batch gate, and the ledger of every
+  * main in the program.
   */
 class ToolsSpec extends SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
@@ -68,5 +71,24 @@ class ToolsSpec extends SparkSuite {
       val e = intercept[IllegalArgumentException](refuse())
       assert(e.getMessage.contains("q99_no_such_gate"))
     }
+  }
+
+  test("main Scala defines exactly the CLI, Bench, Verify and the four dev tools") {
+    // a one-off probe belongs in a spec that asserts what it found, not in
+    // a main that nothing runs
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    val mains = Files.walk(root.toPath).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = new String(Files.readAllBytes(f), "UTF-8")
+        val pkg = "(?m)^package (\\S+)".r.findFirstMatchIn(src)
+          .fold("")(_.group(1).stripPrefix("graft").stripPrefix("."))
+        "def main\\(".r.findAllMatchIn(src).map { m =>
+          val obj = "object (\\w+)".r.findAllMatchIn(src.take(m.start)).toSeq.last.group(1)
+          if (pkg.isEmpty) obj else s"$pkg.$obj"
+        }
+      }.toSet
+    assert(mains === Set("cli.Main", "Bench", "Verify", "tools.Profile",
+      "tools.Explain", "tools.EmptySweep", "tools.InvarianceSweep"))
   }
 }
