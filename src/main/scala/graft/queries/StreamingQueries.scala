@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
@@ -29,12 +30,10 @@ object StreamingQueries {
       .orderBy("hour_start", "event_type")
   }
 
-  /** Streaming sessionization via session_window in Complete mode — must
-    * match the batch gaps-and-islands sessionization (q32's session
-    * boundaries re-derived as (start, end, count) tuples).
+  /** The 30-minute gap sessions of the events as (user, start, end =
+    * last + gap, count, exact cents sum): q34's and q77's oracle.
     */
-  val q34StreamingSessions: Q = Q(
-    "q34_streaming_sessions",
+  private val GapSessionsSql =
     """SELECT user_id, min(ts_us) AS session_start_us,
       |  max(ts_us) + 1800000000 AS session_end_us,
       |  count(*) AS n_events,
@@ -52,7 +51,14 @@ object StreamingQueries {
       |  )
       |)
       |GROUP BY user_id, session_id
-      |ORDER BY user_id, session_start_us""".stripMargin) { (s, dir) =>
+      |ORDER BY user_id, session_start_us""".stripMargin
+
+  /** Streaming sessionization via session_window in Complete mode — must
+    * match the batch gaps-and-islands sessionization (q32's session
+    * boundaries re-derived as (start, end, count) tuples).
+    */
+  val q34StreamingSessions: Q = Q(
+    "q34_streaming_sessions", GapSessionsSql) { (s, dir) =>
     EventStream.runToMemory(s, s"$dir/events.parquet",
       EventStream.sessionAgg, "q34_mem", OutputMode.Complete)
       .orderBy("user_id", "session_start_us")
@@ -183,25 +189,7 @@ object StreamingQueries {
     * stateful surface gated (mapGroupsWithState, dropDuplicates, FMGWS).
     */
   val q77FmgwsSessions: Q = Q(
-    "q77_fmgws_sessions",
-    """SELECT user_id, min(ts_us) AS session_start_us,
-      |  max(ts_us) + 1800000000 AS session_end_us,
-      |  count(*) AS n_events,
-      |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-      |FROM (
-      |  SELECT user_id, ts_us, value,
-      |    sum(CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS session_id
-      |  FROM (
-      |    SELECT user_id, event_id, value,
-      |      epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-      |      lag(epoch_us(CAST(ts AS TIMESTAMP)))
-      |        OVER (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) AS prev_us
-      |    FROM events
-      |  )
-      |)
-      |GROUP BY user_id, session_id
-      |ORDER BY user_id, session_start_us""".stripMargin) { (s, dir) =>
+    "q77_fmgws_sessions", GapSessionsSql) { (s, dir) =>
     EventStream.sessionsViaFMGWS(s, Tables.events(s, dir))
       .orderBy("user_id", "session_start_us")
   }
@@ -590,6 +578,41 @@ object StreamingQueries {
       .orderBy("user_id")
   }
 
+  /** Views `joinType`-joined to same-user clicks in the following 30
+    * minutes, both sides watermarked 2 hours: the interval join of q199,
+    * q200, q207 and q208, each of which selects its own output row.
+    */
+  private def viewClickJoin(d: DataFrame, joinType: String): DataFrame = {
+    val views = d.where(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
+        col("event_id").as("view_id"))
+      .withWatermark("v_ts", "2 hours")
+    val clicks = d.where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("c_ts", "2 hours")
+    views.join(clicks,
+      col("v_user") === col("c_user") &&
+        col("c_ts") >= col("v_ts") &&
+        col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
+      joinType)
+  }
+
+  /** q199's and q200's drain: `transform` over two micro-batches, the
+    * events with an even `event_id` first, then the odd ones (pmod, so a
+    * negative odd id is odd too). An `event_id` parity split, unlike a hash
+    * split, is DuckDB-replayable; the halves read through `Tables.events`,
+    * so the staged files hold normalized ts.
+    */
+  private def parityDrain(s: SparkSession, dir: String, queryName: String)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val events = Tables.events(s, dir)
+    val parity = pmod(col("event_id"), lit(2))
+    EventStream.runBatchedAppend(s,
+      Seq(events.where(parity === 0), events.where(parity === 1)),
+      transform, queryName)
+  }
+
   /** Stream-stream LEFT OUTER interval join (q199): views left-joined to
     * same-user clicks in the following 30 minutes; a view with NO click
     * emits its null row only once the state watermark PROVES no match can
@@ -640,24 +663,9 @@ object StreamingQueries {
       |UNION ALL
       |SELECT user_id, view_id, click_id, view_us FROM nulls
       |ORDER BY user_id, view_id, click_id""".stripMargin) { (s, dir) =>
-    EventStream.runTwoBatchAppend(s, s"$dir/events.parquet",
-      d => {
-        val views = d.where(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-            col("event_id").as("view_id"))
-          .withWatermark("v_ts", "2 hours")
-        val clicks = d.where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("c_ts", "2 hours")
-        views.join(clicks,
-          col("v_user") === col("c_user") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-          .select(col("v_user").as("user_id"), col("view_id"),
-            col("click_id"), unix_micros(col("v_ts")).as("view_us"))
-      }, "q199_outer")
+    parityDrain(s, dir, "q199_outer")(viewClickJoin(_, "left_outer")
+      .select(col("v_user").as("user_id"), col("view_id"),
+        col("click_id"), unix_micros(col("v_ts")).as("view_us")))
       .orderBy("user_id", "view_id", "click_id")
   }
 
@@ -709,24 +717,9 @@ object StreamingQueries {
       |UNION ALL SELECT user_id, view_id, click_id FROM vnull
       |UNION ALL SELECT user_id, view_id, click_id FROM cnull
       |ORDER BY user_id, view_id, click_id""".stripMargin) { (s, dir) =>
-    EventStream.runTwoBatchAppend(s, s"$dir/events.parquet",
-      d => {
-        val views = d.where(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-            col("event_id").as("view_id"))
-          .withWatermark("v_ts", "2 hours")
-        val clicks = d.where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("c_ts", "2 hours")
-        views.join(clicks,
-          col("v_user") === col("c_user") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
-          "full_outer")
-          .select(coalesce(col("v_user"), col("c_user")).as("user_id"),
-            col("view_id"), col("click_id"))
-      }, "q200_full_outer")
+    parityDrain(s, dir, "q200_full_outer")(viewClickJoin(_, "full_outer")
+      .select(coalesce(col("v_user"), col("c_user")).as("user_id"),
+        col("view_id"), col("click_id")))
       .orderBy("user_id", "view_id", "click_id")
   }
 
@@ -920,22 +913,10 @@ object StreamingQueries {
       |    AND c.us >= v.us AND c.us <= v.us + 1800000000)
       |ORDER BY view_id""".stripMargin) { (s, dir) =>
     EventStream.runToMemory(s, s"$dir/events.parquet",
-      d => {
-        val views = d.where(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-            col("event_id").as("view_id"))
-          .withWatermark("v_ts", "2 hours")
-        val clicks = d.where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-          .withWatermark("c_ts", "2 hours")
-        views.join(clicks,
-          col("v_user") === col("c_user") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_semi")
-          .select(col("v_user").as("user_id"), col("view_id"),
-            unix_micros(col("v_ts")).as("view_us"))
-      }, "q207_mem", OutputMode.Append)
+      viewClickJoin(_, "left_semi")
+        .select(col("v_user").as("user_id"), col("view_id"),
+          unix_micros(col("v_ts")).as("view_us")),
+      "q207_mem", OutputMode.Append)
       .orderBy("view_id")
   }
 
@@ -976,22 +957,12 @@ object StreamingQueries {
       |GROUP BY 1
       |ORDER BY hour_start""".stripMargin) { (s, dir) =>
     EventStream.runToMemory(s, s"$dir/events.parquet",
-      d => {
-        val views = d.where(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-          .withWatermark("v_ts", "2 hours")
-        val clicks = d.where(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-          .withWatermark("c_ts", "2 hours")
-        views.join(clicks,
-          col("v_user") === col("c_user") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"))
-          .groupBy(window(col("c_ts"), "1 hour"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .select(unix_millis(col("window.start")).as("hour_start"),
-            col("n_pairs"))
-      }, "q208_mem", OutputMode.Append)
+      viewClickJoin(_, "inner")
+        .groupBy(window(col("c_ts"), "1 hour"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .select(unix_millis(col("window.start")).as("hour_start"),
+          col("n_pairs")),
+      "q208_mem", OutputMode.Append)
       .orderBy("hour_start")
   }
 

@@ -320,12 +320,19 @@ object EventStream {
     }
   }
 
-  def recentEvents(spark: SparkSession, events: DataFrame,
-      k: Int = 3): DataFrame = {
-    import spark.implicits._
+  /** transformWithState runs only on the RocksDB state-store provider:
+    * scope the setting to the events' (isolated drain) session before the
+    * query starts.
+    */
+  private def useRocksDb(events: DataFrame): Unit =
     events.sparkSession.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  def recentEvents(spark: SparkSession, events: DataFrame,
+      k: Int = 3): DataFrame = {
+    import spark.implicits._
+    useRocksDb(events)
     events
       .selectExpr("user_id", "unix_micros(ts) AS ts_us", "event_id",
         "event_type")
@@ -379,9 +386,7 @@ object EventStream {
   def warmStartCounts(spark: SparkSession, events: DataFrame,
       initCounts: DataFrame): DataFrame = {
     import spark.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    useRocksDb(events)
     val init = initCounts.selectExpr("user_id", "n")
       .as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
     events.selectExpr("user_id", "event_id")
@@ -396,9 +401,7 @@ object EventStream {
   def sessionTimeouts(spark: SparkSession, events: DataFrame,
       gapUs: Long = 1800000000L, delay: String = "2 hours"): DataFrame = {
     import spark.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    useRocksDb(events)
     events
       .withWatermark("ts", delay)
       .selectExpr("user_id", "unix_micros(ts) AS ts_us", "event_id")
@@ -412,11 +415,7 @@ object EventStream {
 
   def userModalType(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    // transformWithState runs only on the RocksDB provider; scope the
-    // setting to this (isolated) session before the query starts
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    useRocksDb(events)
     events.selectExpr("user_id", "event_type")
       .as[(Long, String)]
       .groupByKey(_._1)
@@ -549,7 +548,7 @@ object EventStream {
     if (ctlRows == 0) {
       if (streamedRows != 0) throw new IllegalStateException(
         s"graft streaming tripwire [$queryName]: source ingested " +
-          s"$streamedRows rows but the file is EMPTY — phantom rows")
+          s"$streamedRows rows but the file is EMPTY - phantom rows")
     } else if (streamedRows < 0 || (streamedRows > 0 && streamedRows % ctlRows != 0))
       // streamedRows == 0 with a non-empty file is NOT flagged: the
       // transform's pushed-down predicates prune at parquet row-group
@@ -560,16 +559,63 @@ object EventStream {
       // (some row groups pruned) can't masquerade as a whole multiple.
       throw new IllegalStateException(
         s"graft streaming tripwire [$queryName]: source ingested " +
-          s"$streamedRows rows but the file holds $ctlRows — rows lost")
+          s"$streamedRows rows but the file holds $ctlRows - rows lost")
     ctlRangeUs.foreach { case (ctlMinUs, ctlMaxUs) =>
       if (streamedMaxUs != Long.MinValue &&
           (streamedMaxUs < ctlMinUs - 1000000L || streamedMaxUs > ctlMaxUs + 1000000L))
         throw new IllegalStateException(
           s"graft streaming tripwire [$queryName]: max event-time " +
             s"${streamedMaxUs}us outside the file's ts range " +
-            s"[$ctlMinUs, $ctlMaxUs]us — ts ingestion is corrupting " +
+            s"[$ctlMinUs, $ctlMaxUs]us - ts ingestion is corrupting " +
             "event-times (wrong source schema?)")
     }
+  }
+
+
+  /** State partitions of every drain. State-store cost (init, per-batch
+    * delta commit, snapshot) is paid per STATE PARTITION, and the count is
+    * frozen into the checkpoint at first start. A one-shot drain of a file
+    * keeps state tiny, so a small count wins; a production continuous job
+    * sizes this to the cluster instead (state ops parallelize per
+    * partition).
+    */
+  private val StatePartitions = 4
+
+  /** Run `body` in a drain session of its own (shared SparkContext,
+    * isolated SQLConf: the state-partition override never leaks into the
+    * caller's session), then stop the state-store maintenance pool while
+    * the RpcEnv is alive (see GraftBridge), also after a failed drain or a
+    * tripwire throw. A drain that stages files nests this inside
+    * `TempDirs.withTempDir`, so the pool stops before the dir is deleted.
+    */
+  private def inDrainSession[A](spark: SparkSession)(body: SparkSession => A): A = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.session.timeZone",
+      spark.conf.get("spark.sql.session.timeZone"))
+    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ss.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    try body(ss)
+    finally
+      try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
+      catch { case _: Throwable => () }
+  }
+
+  /** The events parquet under `dir` as a stream. The ts physical encoding
+    * has drifted across testdata generations (legacy INT64-nanos vs
+    * TIMESTAMP_MICROS-NTZ). A FileStreamSource needs a declared schema, and
+    * declaring the WRONG ts type silently corrupts every event-time (a
+    * 1000x shrink, not a crash), so the caller sniffs the footer's
+    * `tsType`; the stream declares exactly that and normalizes through the
+    * same shared branch the batch loaders use.
+    */
+  private def eventsStream(ss: SparkSession, tsType: DataType, dir: String,
+      globFilter: Option[String] = None): DataFrame = {
+    val reader = ss.readStream
+      .schema(StructType(eventSchema.fields.map(f =>
+        if (f.name == "ts") f.copy(dataType = tsType) else f)))
+    globFilter.foreach(g => reader.option("pathGlobFilter", g))
+    reader.parquet(dir)
+      .withColumn("ts", graft.Tables.normalizeTs(tsType, "events-stream"))
   }
 
   /** Checkpointed stop/restart drain — the exactly-once recovery contract.
@@ -586,211 +632,101 @@ object EventStream {
     */
   def runWithRestart(spark: SparkSession, eventsPath: String,
       transform: DataFrame => DataFrame, queryName: String,
-      statePartitions: Int = 4,
-      rowFilter: Column = lit(true)): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone"))
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val inDir = s"$tmp/in"
-    val ckpt = s"$tmp/ckpt"
-    // try/finally: a failed drain must still delete the staging/checkpoint
-    // dirs and stop the state-store maintenance pool — repeated failing
-    // gates in one JVM otherwise accumulate temp data and leave the pool
-    // running (round-10 advice).
-    try {
-    val src = graft.Tables.loadPath(ss, eventsPath).filter(rowFilter)
-    val tsType = src.schema("ts").dataType
-    val half = pmod(xxhash64(col("event_id")), lit(2))
-    graft.io.SingleFile.writeParquetAtomic(
-      src.filter(half === 0), s"$inDir/part1.parquet")
-    def drain(qn: String): Unit = {
-      val stream = ss.readStream
-        .schema(StructType(eventSchema.fields.map(f =>
-          if (f.name == "ts") f.copy(dataType = tsType) else f)))
-        .parquet(inDir)
-        .withColumn("ts", graft.Tables.normalizeTs(tsType, "events-restart"))
-      val q = transform(stream).writeStream
-        .format("memory").queryName(qn)
-        .outputMode(OutputMode.Complete)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      rowFilter: Column = lit(true)): DataFrame =
+    graft.io.TempDirs.withTempDir("graft_restart") { tmp =>
+      inDrainSession(spark) { ss =>
+        val inDir = s"$tmp/in"
+        val src = graft.Tables.loadPath(ss, eventsPath).filter(rowFilter)
+        val half = pmod(xxhash64(col("event_id")), lit(2))
+        graft.io.SingleFile.writeParquetAtomic(
+          src.filter(half === 0), s"$inDir/part1.parquet")
+        def drain(qn: String): Unit =
+          transform(eventsStream(ss, src.schema("ts").dataType, inDir))
+            .writeStream
+            .format("memory").queryName(qn)
+            .outputMode(OutputMode.Complete)
+            .option("checkpointLocation", s"$tmp/ckpt")
+            .trigger(Trigger.AvailableNow())
+            .start()
+            .awaitTermination()
+        drain(queryName + "_pre") // drains file 1, commits it in the source log
+        graft.io.SingleFile.writeParquetAtomic(
+          src.filter(half === 1), s"$inDir/part2.parquet")
+        drain(queryName) // resumes from the checkpoint: file 2 only + restored state
+        // the memory-sink table is driver-resident — the staged input files
+        // and the checkpoint are no longer needed once the drain committed
+        ss.table(queryName)
+      }
     }
-    drain(queryName + "_pre") // drains file 1, commits it in the source log
-    graft.io.SingleFile.writeParquetAtomic(
-      src.filter(half === 1), s"$inDir/part2.parquet")
-    drain(queryName) // resumes from the checkpoint: file 2 only + restored state
-    // the memory-sink table is driver-resident — the staged input files and
-    // the checkpoint are no longer needed once the drain committed
-    ss.table(queryName)
-    } finally {
-      try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-      catch { case _: Throwable => () }
-      graft.io.TempDirs.deleteRecursively(tmp)
-    }
-  }
 
-  /** Two-micro-batch Append drain for operators whose OUTPUT only exists
-    * across batches — stream-stream OUTER join null rows above all
-    * (PLANS.md, Round 9, q199; StreamingSpec's q199 test: the watermark
-    * for batch N derives from data through batch N−1, and state
-    * eviction — which is what EMITS outer nulls — runs against that
-    * lagged watermark, so a single-batch drain can never produce one). The events file splits by `event_id` parity
-    * (DuckDB-replayable, unlike a hash split); part 1's mtime is set
-    * 10 s earlier so the file source's oldest-first ordering makes the
-    * even half batch 1 deterministically. Sink is parquet (the memory
-    * sink cannot resume Append checkpoints), read back and pinned before
-    * the staging is deleted.
-    */
-  def runTwoBatchAppend(spark: SparkSession, eventsPath: String,
-      transform: DataFrame => DataFrame, queryName: String,
-      statePartitions: Int = 4): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone"))
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_twobatch").toString
-    val inDir = s"$tmp/in"
-    val outDir = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
-    // try/finally: the tripwire throw (and any query failure) must still
-    // clean the staging/checkpoint dirs and stop the state-store pool.
-    try {
-    val src = graft.Tables.loadPath(ss, eventsPath)
-    val tsType = src.schema("ts").dataType
-    graft.io.SingleFile.writeParquetAtomic(
-      src.filter(col("event_id") % 2 === 0), s"$inDir/part1.parquet")
-    graft.io.SingleFile.writeParquetAtomic(
-      src.filter(col("event_id") % 2 === 1), s"$inDir/part2.parquet")
-    // a data micro-batch only exists per NON-EMPTY half: an empty or
-    // single-parity input legitimately drains in fewer batches (round-12
-    // empty-input sweep) — count from the just-written local files, not
-    // a second scan of the source
-    val partRows = Seq("part1", "part2")
-      .map(p => ss.read.parquet(s"$inDir/$p.parquet").count())
-    val expectedBatches = partRows.count(_ > 0)
-    java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(inDir, "part1.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 10000))
-    val stream = ss.readStream
-      .schema(StructType(eventSchema.fields.map(f =>
-        if (f.name == "ts") f.copy(dataType = tsType) else f)))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .withColumn("ts", graft.Tables.normalizeTs(tsType, "events-twobatch"))
-    val out = transform(stream)
-    val q = out.writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0)
-    // Batch accounting is only evidence when the scans decoded whole
-    // files: pushed-down predicates prune at parquet row-group granularity
-    // and a fully-pruned part shows a 0-input batch indistinguishable from
-    // a merged one (round-12 tiny-input sweep). An unpruned drain ingests
-    // an exact positive multiple of the file rows — strict there, which is
-    // every real-testdata run.
-    val ingested = q.recentProgress.map(_.numInputRows).sum
-    val unpruned = partRows.sum > 0 && ingested > 0 &&
-      ingested % partRows.sum == 0
-    if (unpruned && nBatches != expectedBatches)
-      throw new IllegalStateException(
-        s"graft two-batch drain [$queryName]: expected $expectedBatches data " +
-          s"micro-batches, saw $nBatches — file ordering or trigger changed; " +
-          "the cross-batch emission contract no longer holds")
-    // explicit schema on the read-back: a zero-emission drain leaves no
-    // parquet part files and schema inference would fail on the empty dir
-    ss.read.schema(out.schema).parquet(outDir)
-      .localCheckpoint() // pin before staging is deleted
-    } finally {
-      try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-      catch { case _: Throwable => () }
-      graft.io.TempDirs.deleteRecursively(tmp)
-    }
-  }
-
-  /** Generalized N-batch Append drain: each frame in `parts` becomes one
-    * micro-batch, in order (explicit mtimes + maxFilesPerTrigger=1 —
-    * the [[runTwoBatchAppend]] mechanics for arbitrary batch counts).
-    * All frames must share a schema; the stream is read with exactly
-    * that schema. Parquet sink (Append checkpoints can't resume into a
-    * memory sink), result pinned before the staging is deleted.
+  /** N-batch Append drain for operators whose OUTPUT only exists across
+    * batches: stream-stream OUTER join null rows (batch N's watermark
+    * derives from data through batch N−1, and state eviction, which EMITS
+    * outer nulls, runs against that lagged watermark) and dedup state
+    * eviction/re-admission. Each frame in `parts` becomes one micro-batch,
+    * in order (ascending part-file mtimes, read oldest first, and
+    * maxFilesPerTrigger=1). All frames share one schema, the stream's.
+    * Parquet sink (Append checkpoints can't resume into a memory sink),
+    * result pinned before the staging is deleted.
     */
   def runBatchedAppend(spark: SparkSession, parts: Seq[DataFrame],
-      transform: DataFrame => DataFrame, queryName: String,
-      statePartitions: Int = 4): DataFrame = {
+      transform: DataFrame => DataFrame, queryName: String): DataFrame = {
     require(parts.nonEmpty, "runBatchedAppend needs at least one part")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone"))
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nbatch").toString
-    val inDir = s"$tmp/in"
-    val outDir = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
-    // try/finally: same failure-path cleanup contract as runTwoBatchAppend.
-    try {
-    parts.zipWithIndex.foreach { case (p, i) =>
-      graft.io.SingleFile.writeParquetAtomic(p, f"$inDir/part$i%03d.parquet")
-      java.nio.file.Files.setLastModifiedTime(
-        java.nio.file.Paths.get(inDir, f"part$i%03d.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 60000 + i * 2000))
-    }
-    // only NON-EMPTY parts produce a data micro-batch (round-12
-    // empty-input sweep); count from the just-written local files
-    val partRows = parts.indices
-      .map(i => ss.read.parquet(f"$inDir/part$i%03d.parquet").count())
-    val expectedBatches = partRows.count(_ > 0)
-    val stream = ss.readStream
-      .schema(parts.head.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val out = transform(stream)
-    val q = out.writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0)
-    // strict only on an unpruned drain — see runTwoBatchAppend (row-group
-    // pruning makes a fully-filtered part's batch read as 0 input rows)
-    val ingested = q.recentProgress.map(_.numInputRows).sum
-    val unpruned = partRows.sum > 0 && ingested > 0 &&
-      ingested % partRows.sum == 0
-    if (unpruned && nBatches != expectedBatches)
-      throw new IllegalStateException(
-        s"graft n-batch drain [$queryName]: expected $expectedBatches data " +
-          s"micro-batches, saw $nBatches — file ordering or trigger changed")
-    // a skipped strict check must be VISIBLE (round-12 advice): a pruned
-    // or anomalous drain (0 rows, or a non-multiple partial/duplicate
-    // replay) is legitimate under row-group pruning, but the oracle row
-    // comparison is then the only backstop — say so in the run output
-    if (!unpruned)
-      System.err.println(
-        s"[graft] n-batch drain [$queryName]: strict batch-count check " +
-          s"skipped (staged=${partRows.sum} ingested=$ingested — pruned " +
-          "or anomalous drain); oracle row compare is the backstop")
-    // explicit schema: a zero-emission drain leaves no parquet part files
-    ss.read.schema(out.schema).parquet(outDir)
-      .localCheckpoint() // pin before staging is deleted
-    } finally {
-      try org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-      catch { case _: Throwable => () }
-      graft.io.TempDirs.deleteRecursively(tmp)
+    graft.io.TempDirs.withTempDir("graft_nbatch") { tmp =>
+      inDrainSession(spark) { ss =>
+        val inDir = s"$tmp/in"
+        val outDir = s"$tmp/out"
+        parts.zipWithIndex.foreach { case (p, i) =>
+          graft.io.SingleFile.writeParquetAtomic(p, f"$inDir/part$i%03d.parquet")
+          java.nio.file.Files.setLastModifiedTime(
+            java.nio.file.Paths.get(inDir, f"part$i%03d.parquet"),
+            java.nio.file.attribute.FileTime.fromMillis(
+              System.currentTimeMillis() - 60000 + i * 2000))
+        }
+        // only NON-EMPTY parts produce a data micro-batch (round-12
+        // empty-input sweep); count from the just-written local files, not
+        // a second scan of the source
+        val partRows = parts.indices
+          .map(i => ss.read.parquet(f"$inDir/part$i%03d.parquet").count())
+        val expectedBatches = partRows.count(_ > 0)
+        val out = transform(ss.readStream.schema(parts.head.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir))
+        val q = out.writeStream
+          .format("parquet")
+          .outputMode(OutputMode.Append)
+          .option("path", outDir)
+          .option("checkpointLocation", s"$tmp/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        val nBatches = q.recentProgress.count(_.numInputRows > 0)
+        // Batch accounting is only evidence when the scans decoded whole
+        // files: pushed-down predicates prune at parquet row-group
+        // granularity and a fully-pruned part shows a 0-input batch
+        // indistinguishable from a merged one (round-12 tiny-input sweep).
+        // An unpruned drain ingests an exact positive multiple of the file
+        // rows — strict there, which is every real-testdata run.
+        val ingested = q.recentProgress.map(_.numInputRows).sum
+        val unpruned = partRows.sum > 0 && ingested > 0 &&
+          ingested % partRows.sum == 0
+        if (unpruned && nBatches != expectedBatches)
+          throw new IllegalStateException(
+            s"graft n-batch drain [$queryName]: expected $expectedBatches data " +
+              s"micro-batches, saw $nBatches - file ordering or trigger changed; " +
+              "the cross-batch emission contract no longer holds")
+        // a skipped strict check must be VISIBLE (round-12 advice): a pruned
+        // or anomalous drain (0 rows, or a non-multiple partial/duplicate
+        // replay) is legitimate under row-group pruning, but the oracle row
+        // comparison is then the only backstop — say so in the run output
+        if (!unpruned)
+          System.err.println(
+            s"[graft] n-batch drain [$queryName]: strict batch-count check " +
+              s"skipped (staged=${partRows.sum} ingested=$ingested - pruned " +
+              "or anomalous drain); oracle row compare is the backstop")
+        // explicit schema: a zero-emission drain leaves no parquet part files
+        ss.read.schema(out.schema).parquet(outDir)
+          .localCheckpoint() // pin before staging is deleted
+      }
     }
   }
 
@@ -801,77 +737,53 @@ object EventStream {
     */
   def runToMemory(spark: SparkSession, eventsDir: String,
       transform: DataFrame => DataFrame, queryName: String,
-      outputMode: OutputMode = OutputMode.Append,
-      statePartitions: Int = 4): DataFrame = {
-    // The drain runs in its OWN session (shared SparkContext, isolated
-    // SQLConf): the state-partition override below must never leak into
-    // queries planned concurrently on the caller's session.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone"))
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // State-store cost (init, per-batch delta commit, snapshot) is paid per
-    // STATE PARTITION, and the partition count is frozen into the
-    // checkpoint at first start. A one-shot drain of a file keeps state
-    // tiny, so a small count wins; a production continuous job sizes this
-    // to the cluster instead (state ops parallelize per partition).
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // FileStreamSource requires a directory: stream the parent with a glob
-    // filter when handed a single file path.
-    val (dir, globFilter) = {
-      val p = new org.apache.hadoop.fs.Path(eventsDir)
-      val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      if (fs.getFileStatus(p).isFile) (p.getParent.toString, Some(p.getName))
-      else (eventsDir, None)
+      outputMode: OutputMode = OutputMode.Append): DataFrame =
+    inDrainSession(spark) { ss =>
+      // FileStreamSource requires a directory: stream the parent with a
+      // glob filter when handed a single file path.
+      val (dir, globFilter) = {
+        val p = new org.apache.hadoop.fs.Path(eventsDir)
+        val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
+        if (fs.getFileStatus(p).isFile) (p.getParent.toString, Some(p.getName))
+        else (eventsDir, None)
+      }
+      // The ts-type sniff is a one-file batch read. Single-file sources go
+      // through the Tables schema memo (the sniff otherwise re-infers the
+      // same immutable file's schema in every streaming gate); a directory
+      // source keeps the glob read.
+      val control =
+        if (globFilter.isDefined) graft.Tables.loadPath(ss, eventsDir)
+        else ss.read.option("pathGlobFilter", "*").parquet(dir)
+      val tsType = control.schema("ts").dataType
+      val q: StreamingQuery = transform(eventsStream(ss, tsType, dir, globFilter))
+        .writeStream
+        .format("memory")
+        .queryName(queryName)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination() // AvailableNow stops itself after the drain
+      // TRIPWIRE (round-6 incident): a mis-declared source schema corrupts
+      // event-times silently — q33/q34/q59/q69 produced plausible-looking
+      // WRONG answers for a full round. Before handing the sink table back,
+      // cross-check the drain against a batch control read of the same
+      // file: (a) the source must have ingested exactly the file's row
+      // count, and (b) if the query tracked event-time, its max must match
+      // the batch max ts (to the second) — a 1000× shrink lands in 1970 and
+      // crashes here.
+      val ctlTs = graft.Tables.normalizeTs(tsType, "events-control")
+      val ctl = control.agg(count(lit(1)), min(ctlTs), max(ctlTs)).head()
+      val streamedRows = q.recentProgress.map(_.numInputRows).sum
+      val streamedMaxUs = q.recentProgress.iterator
+        .flatMap(p => Option(p.eventTime.get("max")))
+        .map(s => java.time.Instant.parse(s).toEpochMilli * 1000L)
+        .foldLeft(Long.MinValue)(math.max)
+      tripwire(queryName, streamedRows, streamedMaxUs, ctl.getLong(0),
+        if (ctl.get(1) == null) None else Some((
+          ctl.getTimestamp(1).getTime * 1000L, ctl.getTimestamp(2).getTime * 1000L)))
+      // The memory sink registered its table in the drain session's
+      // catalog; the returned DataFrame stays valid for the caller (it
+      // carries `ss`).
+      ss.table(queryName)
     }
-    // The ts physical encoding has drifted across testdata generations
-    // (legacy INT64-nanos vs TIMESTAMP_MICROS-NTZ). A FileStreamSource needs
-    // a declared schema, and declaring the WRONG ts type silently corrupts
-    // every event-time (a 1000× shrink, not a crash) — so sniff the actual
-    // footer type with a one-file batch read and declare exactly that, then
-    // normalize through the same shared branch the batch loaders use.
-    // Single-file sources go through the Tables schema memo (the footer
-    // sniff below otherwise re-infers the same immutable file's schema in
-    // every streaming gate); a directory source keeps the glob read.
-    val control =
-      if (globFilter.isDefined) graft.Tables.loadPath(ss, eventsDir)
-      else ss.read.option("pathGlobFilter", "*").parquet(dir)
-    val tsType = control.schema("ts").dataType
-    val reader = ss.readStream
-      .schema(StructType(eventSchema.fields.map(f =>
-        if (f.name == "ts") f.copy(dataType = tsType) else f)))
-    globFilter.foreach(g => reader.option("pathGlobFilter", g))
-    val stream = reader.parquet(dir)
-      .withColumn("ts", graft.Tables.normalizeTs(tsType, "events-stream"))
-    val q: StreamingQuery = transform(stream).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination() // AvailableNow stops itself after the drain
-    // TRIPWIRE (round-6 incident): a mis-declared source schema corrupts
-    // event-times silently — q33/q34/q59/q69 produced plausible-looking
-    // WRONG answers for a full round. Before handing the sink table back,
-    // cross-check the drain against a batch control read of the same file:
-    // (a) the source must have ingested exactly the file's row count, and
-    // (b) if the query tracked event-time, its max must match the batch max
-    // ts (to the second) — a 1000× shrink lands in 1970 and crashes here.
-    val ctlTs = graft.Tables.normalizeTs(tsType, "events-control")
-    val ctl = control.agg(count(lit(1)), min(ctlTs), max(ctlTs)).head()
-    val streamedRows = q.recentProgress.map(_.numInputRows).sum
-    val streamedMaxUs = q.recentProgress.iterator
-      .flatMap(p => Option(p.eventTime.get("max")))
-      .map(s => java.time.Instant.parse(s).toEpochMilli * 1000L)
-      .foldLeft(Long.MinValue)(math.max)
-    tripwire(queryName, streamedRows, streamedMaxUs, ctl.getLong(0),
-      if (ctl.get(1) == null) None else Some((
-        ctl.getTimestamp(1).getTime * 1000L, ctl.getTimestamp(2).getTime * 1000L)))
-    // Tear down the state-store maintenance pool while the RpcEnv is still
-    // alive — it otherwise crashes after spark.stop() (see GraftBridge).
-    org.apache.spark.sql.graft.GraftBridge.stopStateStore()
-    // The memory sink registered its table in the drain session's catalog;
-    // the returned DataFrame stays valid for the caller (it carries `ss`).
-    ss.table(queryName)
-  }
 }

@@ -21,7 +21,7 @@ class ProbeSpec extends SparkSuite {
   }
 
   test("ffprobe on a fake file returns None (graceful degrade)") {
-    val f = java.nio.file.Files.createTempFile("fake", ".mp4")
+    val f = java.nio.file.Paths.get(tmpDir("fake"), "fake.mp4")
     java.nio.file.Files.write(f, "not a video".getBytes)
     assert(Probe.ffprobe(f.toString) === None)
     assert(Probe.ffprobe("/nonexistent/file.mp4") === None)
@@ -42,7 +42,7 @@ class ProbeSpec extends SparkSuite {
   test("probe worker speaks the full line protocol against a stub ffprobe") {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.PosixFilePermissions
-    val binDir = Files.createTempDirectory("graft_stub_bin")
+    val binDir = Paths.get(tmpDir("graft_stub_bin"))
     val stub = binDir.resolve("ffprobe")
     // last arg is the path; emit multi-line JSON exactly like the real tool
     Files.write(stub,

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite, lazy). */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName(getClass.getSimpleName)
@@ -13,6 +14,16 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** A fresh temp dir, deleted after the suite's last test. */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tmpDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.forEach(d => graft.io.TempDirs.deleteRecursively(d))
 }

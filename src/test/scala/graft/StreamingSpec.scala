@@ -147,8 +147,10 @@ class StreamingSpec extends SparkSuite {
       (14L, wm1Us - 500L, false),     // 0.5 ms before
       (15L, wm1Us - 1000L, true),     // 1 ms before
       (16L, wm1Us - 2000L, true))     // 2 ms before
+    // event_id -1: a negative odd id still drains with the odd half
     val rows = cases.map { case (u, t, _) => (u * 10L, t, u, "click") } ++ Seq(
-      (500L, joinBase, 50L, "view"), (501L, joinBase + 60000000L, 50L, "click")) ++
+      (500L, joinBase, 50L, "view"), (501L, joinBase + 60000000L, 50L, "click"),
+      (-1L, joinBase, 70L, "click")) ++
       joinSetters
     val (out, pairs, lonelyViews, lonelyClicks, wmMs) =
       outerJoinRun(StreamingQueries.q200FullOuterStreamJoin, rows)
@@ -162,6 +164,7 @@ class StreamingSpec extends SparkSuite {
     cases.foreach { case (u, _, emits) =>
       assert(out.contains(Seq(Some(u), None, Some(u * 10L))) === emits, s"case $u")
     }
+    assert(out.contains(Seq(Some(70L), None, Some(-1L))), "event_id -1")
   }
 
   test("q203 dedup eviction: a first-seen key re-admits iff floor_ms(first_ts) + delay <= wm1") {

@@ -87,8 +87,10 @@ class TablesSpec extends SparkSuite {
     // gate functions themselves, end-to-end (drain + tripwire + sink),
     // against a NANOS-encoded events fixture and the current NTZ shape.
     // q33 covers the windowed-agg path, q39 the arbitrary-stateful
-    // (mapGroupsWithState) path.
-    for (gate <- Seq("q33_streaming_hourly", "q39_running_user_counts")) {
+    // (mapGroupsWithState) path, q137 the checkpointed-restart drain and
+    // q199 the batched Append drain.
+    for (gate <- Seq("q33_streaming_hourly", "q39_running_user_counts",
+        "q137_stream_restart", "q199_outer_stream_join")) {
       val fn = SparkEntry.queries(gate)
       val a = fn(spark, nanosDir).collect().toSet
       val b = fn(spark, ntzDir).collect().toSet
@@ -123,6 +125,9 @@ class TablesSpec extends SparkSuite {
       EventStream.tripwire("phantom", 5L, Long.MinValue, 0L, None)
     }
     assert(e3.getMessage.contains("phantom"))
+    // a non-UTF-8 stream shows a non-ASCII character as `?`
+    Seq(e1, e2, e3).foreach(e =>
+      assert(e.getMessage.forall(_ < 128), e.getMessage))
     // 0-of-N is allowed: pushed-down predicates prune whole row groups on
     // a small file, so a filter matching nothing decodes nothing — the
     // oracle, not the tripwire, owns the dead-source case (round-12)
