@@ -126,7 +126,8 @@ object Main {
         run(spark, List("stats", statsJsonl, statsOut,
           "--valid-ids", s"$validateOut/validated_episodes.jsonl"))
       else {
-        val raw = graft.io.Episodes.readDataDir(spark, s"$dataRoot/data")
+        val raw = Stats.keepValid(graft.io.Episodes.readDataDir(spark, s"$dataRoot/data"),
+          graft.io.Episodes.EpIdxCol, Some(s"$validateOut/validated_episodes.jsonl"))
         val gs = Stats.computeFromFrames(raw, Seq("action", Schemas.ObsStateStorage))
         graft.io.SingleFile.writeText(spark, statsOut,
           graft.core.StatsDoc.render(gs,

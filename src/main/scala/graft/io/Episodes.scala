@@ -14,9 +14,9 @@ import graft.core.Schemas
   * single scan with per-file provenance columns — replacing the
   * reference's per-file driver loop (its scalability ceiling,
   * validate_from_manifest_refactored.py:51). At 100 TB this is the only
-  * shape that works: the scan parallelizes over files, and every downstream
-  * group-by-episode is a single shuffle (or none, since one file = one
-  * episode = one input split for the common small-episode case).
+  * shape that works: the scan parallelizes over files, and a frame pass
+  * clusters each episode with one hash exchange on [[SrcFileCol]], which
+  * [[writePerEpisode]] reuses.
   */
 object Episodes {
 
@@ -116,7 +116,9 @@ object Episodes {
 
   /** Write one zstd parquet per episode of `df` (rows carrying
     * [[SrcFileCol]]) as `<outDir>/<episode name>`, holding the data
-    * columns only. One partitioned write job, then a parallel
+    * columns only. Clustering on [[SrcFileCol]] (an exchange Spark drops
+    * when `df` is hash-partitioned on it) and no record cap put each
+    * episode in one part file. One partitioned write job, then a parallel
     * metadata-only rename pass (file-per-episode contract, SURVEY §7.3
     * hard part 3). Each episode file in `sources` that got no rows gets a
     * zero-row file with the episode schema (the reference writes one file
@@ -124,18 +126,19 @@ object Episodes {
     * The call owns its output set ([[dropUnwritten]]). Returns the written
     * paths, sorted.
     */
-  def writePerEpisode(df: DataFrame, outDir: String, sources: Seq[String] = Nil): Seq[String] = {
+  def writePerEpisode(df: DataFrame, outDir: String, sources: Seq[String]): Seq[String] = {
     val spark = df.sparkSession
     val tmp = new HPath(outDir, ".stage_tmp")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val name = "_ep_name"
-    df.select(df.columns.filterNot(ProvenanceCols).map(c => col(s"`$c`")).toSeq :+
+    df.repartition(col(SrcFileCol))
+      .select(df.columns.filterNot(ProvenanceCols).map(c => col(s"`$c`")).toSeq :+
         nameCol(col(SrcFileCol)).as(name): _*)
-      .repartition(col(name))
       .sortWithinPartitions(name, "frame_index")
       .write.mode(SaveMode.Overwrite)
       .partitionBy(name)
       .option("compression", "zstd")
+      .option("maxRecordsPerFile", 0)
       .parquet(tmp.toString)
 
     // staged part file → target, one per written episode

@@ -92,7 +92,9 @@ object SingleFile {
 
   /** Replace `target` with the single file `write` stages into the tmp
     * dir it is given: its `part-*` file, or an empty file when it wrote
-    * none (an empty DataFrame yields no JSON part file).
+    * none (an empty DataFrame yields no JSON part file). A DataFrame
+    * write must lift the session's `maxRecordsPerFile` cap, else the rows
+    * past the cap land in a second part file that is never placed.
     */
   private def staged(spark: SparkSession, target: String)(write: String => Unit): Unit = {
     val tgt = new HPath(target)
@@ -112,11 +114,13 @@ object SingleFile {
 
   /** Atomically replace `target` with `df` as a single parquet file. */
   def writeParquetAtomic(df: DataFrame, target: String): Unit =
-    staged(df.sparkSession, target)(df.coalesce(1).write.mode(SaveMode.Overwrite).parquet)
+    staged(df.sparkSession, target)(
+      df.coalesce(1).write.mode(SaveMode.Overwrite).option("maxRecordsPerFile", 0).parquet)
 
   /** Atomically replace `target` with `df` as a single JSONL file. */
   def writeJsonl(df: DataFrame, target: String): Unit =
-    staged(df.sparkSession, target)(df.coalesce(1).write.mode(SaveMode.Overwrite).json)
+    staged(df.sparkSession, target)(
+      df.coalesce(1).write.mode(SaveMode.Overwrite).option("maxRecordsPerFile", 0).json)
 
   /** Atomically replace `target` with a driver-side small text
     * (summary.yaml, *.json docs).

@@ -38,15 +38,6 @@ object Pins {
     out
   }
 
-  /** Two-output form (ops that return a pair of tables). */
-  def sealOutputs(a: DataFrame, b: DataFrame, pins: DataFrame*)
-      : (DataFrame, DataFrame) = {
-    val oa = a.localCheckpoint()
-    val ob = b.localCheckpoint()
-    pins.foreach(_.unpersist())
-    (oa, ob)
-  }
-
   /** Release EVERYTHING a finished gate can have pinned: the session cache
     * (catalog-registered persists) AND every still-persistent RDD — which
     * is where `localCheckpoint` blocks live. The sealed outputs above are

@@ -184,13 +184,6 @@ object Similarity {
     }
   }
 
-  /** Sign-LSH bucket id: `planes` hyperplane sign bits packed into a Long.
-    * Vectors in the same bucket are candidate neighbors. `dims` bounds the
-    * vector width (extra literal components are sliced off per row).
-    */
-  def signBucket(v: Column, planes: Int, seed: String, dims: Int): Column =
-    bucketFromDots(planeDots(v, planes, seed, dims), planes)
-
   /** Per-plane hyperplane dots as `array<double>` — the shared input of
     * the bucket id (signs) and multi-probe flip order (margins).
     */
@@ -202,7 +195,7 @@ object Similarity {
     }: _*)
   }
 
-  /** Bucket id from the plane dots: bit p set iff dot_p >= 0. */
+  /** Sign-LSH bucket id from the plane dots: bit p set iff dot_p >= 0. */
   def bucketFromDots(dots: Column, planes: Int): Column =
     (0 until planes).map { p =>
       when(element_at(dots, p + 1) >= 0, lit(1L << p)).otherwise(lit(0L))

@@ -18,9 +18,9 @@ import graft.io.{Episodes, SingleFile}
   * a window partitioned by source file (no global sort); normalization is
   * built-in higher-order `transform` with broadcast stat literals — the
   * reference's only row-level UDF (align_transform:71-78) disappears into
-  * whole-stage codegen. At 100 TB: no shuffle is needed at all when one
-  * file = one input split (window partition == scan partition); otherwise
-  * one hash shuffle on `_src_file`.
+  * whole-stage codegen. Dedup, reindex and the per-episode write all
+  * cluster on `_src_file`, so the stage plans one hash exchange on it (a
+  * scan that reported one task per file would need none).
   */
 object AlignTransform {
 
@@ -51,15 +51,17 @@ object AlignTransform {
     // width filter (P4)
     df = df.filter(size(col("action")) === ListWidth && size(col(ObsStateSafe)) === ListWidth)
 
-    // sort + dedup keep-first + reindex (W1-W3). Polars' stable sort keeps
-    // file order among equal frame_index; `_ord` reproduces that exactly.
-    val wDedup = Window.partitionBy(src, col("frame_index")).orderBy(ord)
-    val wReindex = Window.partitionBy(src).orderBy(col("frame_index"), ord)
+    // sort + dedup keep-first + reindex (W1-W3) over one window. Polars'
+    // stable sort keeps file order among equal frame_index; `_ord`
+    // reproduces that, so a row whose predecessor has its frame_index
+    // (null-safe) is a later duplicate.
+    val w = Window.partitionBy(src).orderBy(col("frame_index"), ord)
     df = df
-      .withColumn("_rn", row_number().over(wDedup))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("frame_index", row_number().over(wReindex).cast("long") - 1)
+      .withColumn("_dup", lag(ord, 1).over(w).isNotNull &&
+        (lag(col("frame_index"), 1).over(w) <=> col("frame_index")))
+      .filter(!col("_dup"))
+      .drop("_dup")
+      .withColumn("frame_index", row_number().over(w).cast("long") - 1)
 
     // null/NaN drop AFTER reindex — mirrors the reference ordering, which
     // can leave gaps in frame_index when dirty rows are dropped here (P5).
@@ -112,6 +114,6 @@ object AlignTransform {
     val files = Episodes.list(spark, dataDir).uris
     if (files.isEmpty) return Nil
     Episodes.writePerEpisode(transformFrames(Episodes.readRaw(spark, files), stats, normalize),
-      outDir, sources = files)
+      outDir, files)
   }
 }

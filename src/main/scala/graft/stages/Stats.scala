@@ -26,15 +26,17 @@ import graft.io.{Episodes, SingleFile}
   */
 object Stats {
 
-  /** Tolerant episode-id-set load (S7): JSONL (`episode_index`/`episode`
-    * keys), CSV (last field), or bare-number lines. Returns None when no
-    * path/file (meaning: no filtering).
+  /** The rows of `df` whose `idCol` is in the valid episode-id set at
+    * `path`, the one valid-set rule of both paths; every row when there is
+    * no path/file. Tolerant id-set load (S7): JSONL (`episode_index`/
+    * `episode` keys), CSV (last field), or bare-number lines.
     */
-  def loadValidIds(spark: SparkSession, path: Option[String]): Option[DataFrame] = {
-    path.flatMap { p =>
+  def keepValid(df: DataFrame, idCol: String, path: Option[String]): DataFrame = {
+    val spark = df.sparkSession
+    path.fold(df) { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp)) None
+      if (!fs.exists(hp)) df
       else {
         val lines = spark.read.text(p).filter(length(trim(col("value"))) > 0)
         val ids = lines.select(
@@ -43,11 +45,10 @@ object Stats {
               get_json_object(col("value"), "$.episode_index"),
               get_json_object(col("value"), "$.episode")))
             .otherwise(element_at(split(col("value"), ","), -1))
-            .try_cast("long").as("episode_index"))
-          .filter(col("episode_index").isNotNull)
-        // no distinct(): the left-semi join that applies the ids ignores
-        // duplicates
-        Some(ids)
+            .try_cast("long").as(idCol))
+          .filter(col(idCol).isNotNull)
+        // no distinct(): a left-semi join ignores duplicates
+        df.join(broadcast(ids), Seq(idCol), "left_semi")
       }
     }
   }
@@ -97,10 +98,7 @@ object Stats {
         get_json_object(col("value"), "$.stats").as("stats_json"))
       .filter(col("episode_index").isNotNull)
 
-    val filtered = loadValidIds(spark, validIdsPath) match {
-      case Some(ids) => lines.join(broadcast(ids), Seq("episode_index"), "left_semi")
-      case None => lines
-    }
+    val filtered = keepValid(lines, "episode_index", validIdsPath)
 
     // per-episode frame count: action → observation.state → any feature, in
     // declared order (stats_refactored.py:176-190)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.core.{FeatureStats, GlobalStats, Schemas, StatsDoc}
-import graft.io.Episodes
+import graft.io.{Episodes, SingleFile}
 import graft.stages.AlignTransform
 
 /** Stage 4 oracle tests: dirty episodes come out sorted, deduped (keep
@@ -35,6 +35,21 @@ class AlignTransformSpec extends SparkSuite {
     // dedup kept the FIRST in-file occurrence of frame 1 (original payload)
     val a0OfFrame1 = rows(1).getAs[Float]("a0")
     assert(a0OfFrame1 === clean(1).action.head)
+  }
+
+  test("dedup keeps the first of several null-frame_index rows") {
+    val root = tmpDir("align_null_fi")
+    val f = cleanFrames(0, 4)
+    // file order: null (ts 0), frame 1, null (ts 2), frame 3
+    val rows = f.map(x => org.apache.spark.sql.Row(x.action, x.observation_state, x.timestamp,
+      if (x.frame_index % 2 == 0) null else x.frame_index, x.episode_index, x.index, x.task_index))
+    SingleFile.writeParquetAtomic(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), Schemas.episodeSchema),
+      s"$root/data/chunk-000/episode_000000.parquet")
+    val out = AlignTransform.transformFrames(Episodes.readDataDir(spark, s"$root/data"), None,
+      normalize = false).orderBy("frame_index").select("frame_index", "timestamp").collect()
+    assert(out.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+      Seq(0L -> f(0).timestamp, 1L -> f(1).timestamp, 2L -> f(3).timestamp))
   }
 
   test("width filter drops rows with wrong vector width") {
@@ -126,6 +141,36 @@ class AlignTransformSpec extends SparkSuite {
       assert(empty.count() === 0)
       assert(empty.schema === ep0.schema)
       assert(empty.columns.toSeq === Schemas.episodeSchema.fieldNames.toSeq)
+    }
+  }
+
+  test("a session maxRecordsPerFile cap drops no frame of an episode file") {
+    val root = tmpDir("align_cap")
+    dataset(spark, root, Map(0L -> cleanFrames(0, 40)))
+    val outDir = tmpDir("align_cap_out")
+    val written = withConf("spark.sql.files.maxRecordsPerFile", "10") {
+      AlignTransform.run(spark, s"$root/data", outDir, None)
+    }
+    assert(spark.read.parquet(written.head).count() === 40)
+  }
+
+  test("writePerEpisode clusters unclustered input: one file per episode, every row, in order") {
+    val root = tmpDir("align_scattered")
+    val episodes = Map(0L -> cleanFrames(0, 30), 1L -> cleanFrames(1, 25), 2L -> cleanFrames(2, 20))
+    dataset(spark, root, episodes)
+    val files = Episodes.list(spark, s"$root/data").uris
+    // each episode's frames, last first, dealt round-robin over 3 partitions
+    val scattered = Episodes.readRaw(spark, files).orderBy(col("frame_index").desc).repartition(3)
+    assert(scattered.rdd.getNumPartitions === 3)
+    val outDir = tmpDir("align_scattered_out")
+    val written = Episodes.writePerEpisode(scattered, outDir, files)
+    val names = episodes.keys.toSeq.sorted.map(e => f"episode_$e%06d.parquet")
+    assert(written.map(_.split("/").last) === names)
+    assert(new java.io.File(outDir).list().filter(_.endsWith(".parquet")).sorted.toSeq === names)
+    episodes.foreach { case (e, frames) =>
+      val got = spark.read.parquet(f"$outDir/episode_$e%06d.parquet")
+        .select("frame_index").collect().map(_.getLong(0)).toSeq
+      assert(got === frames.map(_.frame_index), s"episode $e")
     }
   }
 

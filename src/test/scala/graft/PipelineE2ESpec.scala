@@ -5,9 +5,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.core.{Schemas, StatsDoc, Status}
@@ -135,14 +138,41 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(indexed === Set(0L, 1L, 7L))
   }
 
+  test("pipeline without episodes_stats.jsonl: frame stats over the valid episodes only") {
+    val root = tmpDir("e2e_frame_stats")
+    val outRoot = s"$root/out"
+    val episodes = Map(0L -> cleanFrames(0, 40), 1L -> cleanFrames(1, 30),
+      2L -> Defects.wrongWidth(2, 35), 3L -> Defects.dupFrames(3, 35))
+    dataset(spark, root, episodes, videosFor = episodes.keySet,
+      metaLengths = episodes.map { case (e, f) => e -> f.size.toLong })
+    cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
+
+    val features = Seq("action", Schemas.ObsStateStorage)
+    val got = StatsDoc.parse(io.SingleFile.readText(spark, s"$outRoot/global_stats.json").get).get
+    val want = Stats.computeFromFrames(io.Episodes.readRaw(spark,
+      Seq(0L, 1L).map(e => f"$root/data/chunk-000/episode_$e%06d.parquet")), features)
+    assert((got.episodesUsed, got.totalFrames) === ((2L, 70L)))
+    def close(a: Seq[Double], b: Seq[Double]): Boolean =
+      a.size == b.size && a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-9 * (1 + math.abs(y)) }
+    features.foreach { f =>
+      val (g, w) = (got.features(f), want.features(f))
+      assert(g.count === w.count, f)
+      Seq(g.mean -> w.mean, g.std -> w.std, g.min -> w.min, g.max -> w.max).foreach {
+        case (a, b) => assert(close(a, b), s"$f: $a vs $b")
+      }
+    }
+  }
+
   /** Spark jobs per stage call under this suite's session (local[4], 4
     * shuffle partitions) on the golden corpus. Jobs are set by the plans,
     * not by timing, so a count that moves means a plan changed: an extra
     * action, a re-executed subplan or a schema-inference job.
+    * align_transform: one shuffle-map job for its one `_src_file`
+    * exchange, then the write job.
     */
   private val jobBudget = Map(
     "discover" -> 4, "validate" -> 9, "stats" -> 3,
-    "align_transform" -> 4, "materialize" -> 3)
+    "align_transform" -> 2, "materialize" -> 3)
 
   test("stage calls: pinned job counts, one fingerprint pass, no cached table left") {
     val outRoot = s"$root/out_stages"
@@ -183,17 +213,38 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
         }.size)
     }
 
+    /** A plan and, recursively, the plans of the cached tables it reads. */
+    def trees(p: SparkPlan): Seq[SparkPlan] =
+      p +: collect(p) { case m: InMemoryTableScanExec => m }.flatMap(m => trees(m.relation.cachedPlan))
+    /** The keys of each shuffle planned over the episode files of `dir`
+      * (a hash key's column names; else the partitioning's name).
+      */
+    def shufflesOver(dir: String): Seq[Seq[String]] = executions.synchronized(executions.toSeq)
+      .flatMap(qe => trees(qe.executedPlan)).distinct
+      .filter(t => collect(t) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+        .flatten.exists(_.toString.contains(dir)))
+      .flatMap(t => collect(t) { case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case o => Seq(o.getClass.getSimpleName)
+      } })
+
     spark.sparkContext.addSparkListener(jobCounter)
     spark.listenerManager.register(planRecorder)
     try {
       val delta = stage("discover")(Discover.run(spark, root, manifest))
       assert(fingerprintPasses() === Seq(1), "the manifest write fingerprints each file once")
+      executions.synchronized(executions.clear())
       val (total, ok, fail) = stage("validate")(Validate.run(spark, manifest, s"$root/meta",
         validateOut, Validate.Config(skipVideo = true)))
+      // the groupBy reuses the order window's clustering
+      assert(shufflesOver(s"$root/data").count(_ == Seq(io.Episodes.SrcFileCol)) === 1)
       val gs = stage("stats")(Stats.run(spark, s"$root/meta/episodes_stats.jsonl", statsOut,
         Seq("action", Schemas.ObsStateStorage), Some(s"$validateOut/validated_episodes.jsonl")))
+      executions.synchronized(executions.clear())
       val normalized = stage("align_transform")(AlignTransform.run(spark, s"$root/data",
         s"$outRoot/normalized", Some(statsOut)))
+      // dedup, reindex and the writer share one clustering
+      assert(shufflesOver(s"$root/data") === Seq(Seq(io.Episodes.SrcFileCol)))
       executions.synchronized(executions.clear())
       val index = stage("materialize")(Materialize.run(spark, s"$outRoot/normalized",
         s"$outRoot/dataset", Materialize.Config(videosRoot = Some(s"$root/videos"))))

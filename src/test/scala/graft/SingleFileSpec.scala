@@ -66,6 +66,17 @@ class SingleFileSpec extends SparkSuite {
     assert(readIds(tgt) == Set(5L))
   }
 
+  test("a session maxRecordsPerFile cap drops no row of a single-file write") {
+    val dir = tmpDir("sf_cap")
+    withConf("spark.sql.files.maxRecordsPerFile", "2") {
+      SingleFile.writeParquetAtomic((1L to 6L).toDF("id"), s"$dir/state.parquet")
+      SingleFile.writeJsonl((1L to 7L).toDF("id"), s"$dir/lines.jsonl")
+    }
+    assert(readIds(s"$dir/state.parquet") == (1L to 6L).toSet)
+    assert(spark.read.json(s"$dir/lines.jsonl").select("id").collect()
+      .map(_.getLong(0)).toSet == (1L to 7L).toSet)
+  }
+
   private def leftovers(tgt: String): Seq[String] = {
     val fs = new HPath(tgt).getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(".bak", ".tmpdir").map(tgt + _).filter(p => fs.exists(new HPath(p)))

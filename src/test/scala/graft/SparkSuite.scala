@@ -23,6 +23,16 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
+  /** `body` with the session conf `key` set to `value`, restored after:
+    * the session is shared by every test of the suite.
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override protected def afterAll(): Unit =
     try super.afterAll()
     finally tmpDirs.forEach(d => graft.io.TempDirs.deleteRecursively(d))
