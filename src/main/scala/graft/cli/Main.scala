@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.core.Schemas
 import graft.stages._
 
 /** CLI mirroring the reference's five subcommands
@@ -88,7 +87,7 @@ object Main {
     case "stats" :: statsJsonl :: outJson :: rest =>
       val features = flag(rest, "--features")
         .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq("action", Schemas.ObsStateStorage))
+        .getOrElse(Stats.DefaultFeatures)
       val gs = Stats.run(spark, statsJsonl, outJson, features,
         flag(rest, "--valid-ids"))
       println(s"stats: episodes_used=${gs.episodesUsed} total_frames=${gs.totalFrames} -> $outJson")
@@ -126,12 +125,8 @@ object Main {
         run(spark, List("stats", statsJsonl, statsOut,
           "--valid-ids", s"$validateOut/validated_episodes.jsonl"))
       else {
-        val raw = Stats.keepValid(graft.io.Episodes.readDataDir(spark, s"$dataRoot/data"),
-          graft.io.Episodes.EpIdxCol, Some(s"$validateOut/validated_episodes.jsonl"))
-        val gs = Stats.computeFromFrames(raw, Seq("action", Schemas.ObsStateStorage))
-        graft.io.SingleFile.writeText(spark, statsOut,
-          graft.core.StatsDoc.render(gs,
-            Seq("action", Schemas.ObsStateStorage), "Recomputed from raw frames."))
+        Stats.runFromFrames(spark, s"$dataRoot/data", statsOut, Stats.DefaultFeatures,
+          Some(s"$validateOut/validated_episodes.jsonl"))
         println(s"stats: recomputed from frames -> $statsOut")
       }
       run(spark, List("align-transform", s"$dataRoot/data", normDir, "--stats", statsOut))

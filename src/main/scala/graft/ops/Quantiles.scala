@@ -1,19 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact linear-interpolation quantiles (numpy/Polars `quantile(...,
-  * "linear")` semantics) per embedding dimension — the exact twin of the
-  * mergeable `percentile_approx` sketch used in [[graft.stages.Stats]].
+  * "linear")` semantics) per group, and per embedding dimension as the
+  * group keyed by vector position. [[graft.stages.Stats]]' q01/q99 tails
+  * are the bounded-value-error histogram counterpart.
   *
-  * Shape: posexplode → per-dim rank window → one groupBy picking the two
-  * bracketing order statistics per quantile and interpolating. Two
-  * shuffles (rank + group), no driver state. The rank window sorts only
-  * values of ONE dimension per partition — at 100 TB per-dim windows are
-  * the scalable form of "sort each column" (each dim's sort is
-  * independent and distributes).
+  * Shape: per-group rank window → one groupBy picking the two bracketing
+  * order statistics per quantile and interpolating. Two shuffles (rank +
+  * group), no driver state. The rank window sorts only values of ONE group
+  * per partition — at 100 TB per-dim windows are the scalable form of
+  * "sort each column" (each dim's sort is independent and distributes).
   *
   * Determinism: ties in `v` are interchangeable for order statistics (the
   * selected VALUES are equal whatever the tie order), and the
@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
-  /** Per-GROUP exact quantiles of a numeric column: (group, n, <p>...).
-    * Same rank-window + bracketing-agg shape as [[perDimension]], keyed by
-    * an arbitrary group column — each group's sort distributes
-    * independently.
+  /** Per-GROUP exact quantiles of a numeric column: (group, n, <p>...),
+    * each rounded to 6 places unless `roundDp` says otherwise. Each group's
+    * sort distributes independently.
     */
   def perGroup(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[(String, Double)], roundDp: Option[Int] = Some(6)): DataFrame = {
@@ -51,32 +50,12 @@ object Quantiles {
     }.select(col(groupCol) +: col("n") +: ps.map(p => col(p._1)): _*)
   }
 
-  /** Per-dimension exact quantiles of an `array<float/double>` column.
-    * Returns (dim, n, q_<p> ...) with one column per requested quantile.
+  /** Per-dimension exact quantiles of an `array<float/double>` column:
+    * [[perGroup]] keyed by the vector position. Returns (dim, n, <p>...).
     */
-  def perDimension(df: DataFrame, vecCol: String, ps: Seq[(String, Double)]): DataFrame = {
-    val exploded = df.select(
-      posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "v")))
-    val ranked = exploded
-      .withColumn("rn", row_number().over(Window.partitionBy("dim").orderBy("v")) - 1)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("dim")))
-    def pick(atPos: Column): Column = max(when(col("rn") === atPos, col("v")))
-    val aggs = ps.flatMap { case (name, p) =>
-      val pos = lit(p) * (col("n") - 1).cast("double")
-      Seq(
-        pick(floor(pos)).as(s"_lo_$name"),
-        pick(ceil(pos)).as(s"_hi_$name"))
-    }
-    val allAggs = count(lit(1)).as("n") +: aggs
-    val base = ranked.groupBy("dim").agg(allAggs.head, allAggs.tail: _*)
-    ps.foldLeft(base) { case (acc, (name, p)) =>
-      val pos = lit(p) * (col("n") - 1).cast("double")
-      val frac = pos - floor(pos).cast("double")
-      acc.withColumn(name,
-        graft.functions.Exact.roundPortable(
-          col(s"_lo_$name") + frac * (col(s"_hi_$name") - col(s"_lo_$name")), 6))
-    }.select(col("dim") +: col("n") +: ps.map { case (name, _) => col(name) }: _*)
-  }
+  def perDimension(df: DataFrame, vecCol: String, ps: Seq[(String, Double)]): DataFrame =
+    perGroup(df.select(posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "v"))),
+      "dim", "v", ps)
 
   /** Per-group LOWER WEIGHTED MEDIAN with integer weights: the smallest
     * value v whose cumulative weight (in value order) reaches half the

@@ -294,9 +294,9 @@ object SimilarityQueries {
   }
 
   /** Exact linear-interpolation per-dimension quantiles (numpy `quantile`
-    * semantics) — the exact twin of the percentile_approx sketch in Stats,
-    * gated bit-for-bit: both engines pick the two bracketing order
-    * statistics per dim and interpolate with the same IEEE formula.
+    * semantics, [[graft.ops.Quantiles.perDimension]]), gated bit-for-bit:
+    * both engines pick the two bracketing order statistics per dim and
+    * interpolate with the same IEEE formula.
     */
   val q38EmbedQuantiles: Q = {
     val ps = Seq("q01" -> 0.01, "q50" -> 0.5, "q99" -> 0.99)

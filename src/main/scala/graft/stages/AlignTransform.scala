@@ -14,7 +14,8 @@ import graft.io.{Episodes, SingleFile}
   * keep-first → reindex 0..N-1 → drop null/NaN key scalars → optional
   * z-score normalization vs global stats → rename back.
   *
-  * Spark-first: ONE job over every episode at once. Per-episode ordering is
+  * Spark-first: one pass over every episode at once — a shuffle-map job
+  * for its one exchange, then the write job. Per-episode ordering is
   * a window partitioned by source file (no global sort); normalization is
   * built-in higher-order `transform` with broadcast stat literals — the
   * reference's only row-level UDF (align_transform:71-78) disappears into

@@ -93,21 +93,6 @@ class AlignTransformSpec extends SparkSuite {
     assert(out.select("action").head().getSeq[Float](0) === frames.head.action)
   }
 
-  /** `body`'s result and the Spark jobs it ran. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drain(): Unit =
-      org.apache.spark.sql.graft.GraftBridge.waitListenerBusEmpty(spark.sparkContext, 60000)
-    drain()
-    spark.sparkContext.addSparkListener(counter)
-    try { val out = body; drain(); (out, jobs.get) }
-    finally spark.sparkContext.removeSparkListener(counter)
-  }
-
   test("full run writes one parquet per episode with the original name") {
     // episodes 5 and 6: all rows have 7-wide vectors -> every row filtered
     // -> the output files must still exist, empty (reference writes

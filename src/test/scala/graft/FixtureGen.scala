@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{Models, Schemas}
+import graft.core.{FeatureStats, Models, Schemas}
 import graft.io.SingleFile
 
 /** Synthetic robot-dataset fixtures (FIXTURES.md §A): episode parquets with
@@ -95,6 +95,17 @@ object FixtureGen {
     }
   }
 
+  /** Per dimension of equal-width vectors: (mean, population std, min,
+    * max), computed on the driver in two passes.
+    */
+  private def moments(vecs: Seq[Seq[Float]]): Seq[(Double, Double, Double, Double)] =
+    vecs.head.indices.map { d =>
+      val xs = vecs.map(_(d).toDouble)
+      val mu = xs.sum / xs.size
+      val varv = xs.map(x => (x - mu) * (x - mu)).sum / xs.size
+      (mu, math.sqrt(varv), xs.min, xs.max)
+    }
+
   /** episodes_stats.jsonl lines for the given per-episode frames (exact
     * per-episode stats like the upstream producer would emit).
     */
@@ -102,12 +113,7 @@ object FixtureGen {
     episodes.toSeq.sortBy(_._1).map { case (ep, frames) =>
       val n = frames.size
       def stats(vecs: Seq[Seq[Float]]): String = {
-        val dims = vecs.head.indices.map { d =>
-          val xs = vecs.map(_(d).toDouble)
-          val mu = xs.sum / xs.size
-          val varv = xs.map(x => (x - mu) * (x - mu)).sum / xs.size
-          (mu, math.sqrt(varv), xs.min, xs.max)
-        }
+        val dims = moments(vecs)
         val cnt = countShape(ep) match {
           case "list" => vecs.head.indices.map(_ => n).mkString("[", ", ", "]")
           case "scalar" => n.toString
@@ -121,4 +127,16 @@ object FixtureGen {
       s"""{"episode_index": $ep, "stats": {"action": ${stats(frames.map(_.action))}, "observation.state": ${stats(frames.map(_.observation_state))}}}"""
     }.mkString("\n") + "\n"
   }
+
+  /** Exact flat stats of both default features over all of `frames` (the
+    * concatenated frames of several episodes), computed on the driver: an
+    * oracle for `global_stats.json` that shares no code with stages.Stats.
+    */
+  def flatStats(frames: Seq[Frame]): Map[String, FeatureStats] =
+    Seq("action" -> frames.map(_.action),
+        Schemas.ObsStateStorage -> frames.map(_.observation_state)).map { case (k, vecs) =>
+      val dims = moments(vecs)
+      k -> FeatureStats(vecs.size.toLong, dims.map(_._1), dims.map(_._2), dims.map(_._3),
+        dims.map(_._4))
+    }.toMap
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.ops.{Bfs, Cluster, Hits, KCore, LabelProp, PageRank, Pins, RandomWalk}
@@ -28,23 +25,6 @@ class GraphJobBudgetSpec extends SparkSuite {
   private lazy val sym = (edges ++ edges.map(_.swap)).toDF("src", "dst")
   private lazy val pairs = edges.toDF("id_a", "id_b")
   private lazy val seeds = Seq(3L, 17L, 42L).toDF("v")
-
-  private def drain(): Unit =
-    org.apache.spark.sql.graft.GraftBridge.waitListenerBusEmpty(spark.sparkContext, 60000)
-
-  /** Jobs started while `body` runs: the op call plus one collect of its
-    * output, so an op that returns a lazy plan pays for it here too.
-    */
-  private def jobsOf(body: => DataFrame): Int = {
-    val jobs = new AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    drain()
-    spark.sparkContext.addSparkListener(counter)
-    try { body.collect(); drain() } finally spark.sparkContext.removeSparkListener(counter)
-    jobs.get
-  }
 
   private val calls: Seq[(String, () => DataFrame)] = Seq(
     "pagerank 5" -> (() => PageRank.run(sym, "src", "dst", 5)),
@@ -79,7 +59,9 @@ class GraphJobBudgetSpec extends SparkSuite {
 
   test("graph op calls: pinned job counts") {
     calls.foreach { case (_, call) => call() } // warm the session's codegen and schema paths
-    val counted = calls.map { case (name, call) => name -> jobsOf(call()) }
+    // the op call plus one collect of its output, so an op that returns a
+    // lazy plan pays for it here too
+    val counted = calls.map { case (name, call) => name -> jobsOf(call().collect())._2 }
     assert(counted.toMap === jobBudget, s"counted: $counted")
   }
 

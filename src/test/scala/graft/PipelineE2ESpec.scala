@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -13,7 +11,7 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.core.{Schemas, StatsDoc, Status}
+import graft.core.{StatsDoc, Status}
 import graft.stages._
 
 /** End-to-end golden run: the five-stage `cli.Main pipeline` over a
@@ -21,7 +19,7 @@ import graft.stages._
   * reference dataset ships only meta/, so the golden corpus is generated
   * with the same layout: data/chunk-*, meta/episodes*.jsonl, videos/).
   * Asserts the cross-stage invariants the reference pipeline guarantees:
-  * manifest statuses, frame totals, global stats vs the flat recompute,
+  * manifest statuses, frame totals, global stats vs driver-side flat stats,
   * split-count conservation, and video placement. A second run calls the
   * five stages one by one and pins what each call costs and leaves behind.
   */
@@ -30,20 +28,21 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val expectedFrames = Map(0L -> 40L, 1L -> 35L, 2L -> 30L, 3L -> 25L, 4L -> 20L)
 
+  private val goldenEpisodes = Map(
+    0L -> cleanFrames(0, 40),
+    1L -> cleanFrames(1, 35),
+    2L -> Defects.dupFrames(2, 30),  // 31 raw rows, 30 after dedup
+    3L -> Defects.unsorted(3, 25),
+    4L -> cleanFrames(4, 20))
+
   /** The golden corpus; outputs go to per-test out-roots beneath it. */
   private lazy val root: String = {
     val root = tmpDir("e2e_root")
-    val episodes = Map(
-      0L -> cleanFrames(0, 40),
-      1L -> cleanFrames(1, 35),
-      2L -> Defects.dupFrames(2, 30),  // 31 raw rows, 30 after dedup
-      3L -> Defects.unsorted(3, 25),
-      4L -> cleanFrames(4, 20))
-    dataset(spark, root, episodes,
+    dataset(spark, root, goldenEpisodes,
       videosFor = Set(0L, 1L, 2L, 3L), // episode 4 → MISSING_SIDE
       metaLengths = expectedFrames)
     Files.write(Paths.get(s"$root/meta/episodes_stats.jsonl"),
-      statsJsonl(episodes).getBytes)
+      statsJsonl(goldenEpisodes).getBytes)
     root
   }
 
@@ -71,16 +70,12 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(validatedIds === Set(0L, 1L, 4L))
 
     // --- global stats doc: pooled reduction over the VALID episodes must
-    // equal the flat recompute over the same episodes (exact per-episode
-    // stats in the fixture → agreement to float tolerance)
+    // equal the driver's flat stats over the same episodes (exact
+    // per-episode stats in the fixture → agreement to float tolerance)
     val statsText = io.SingleFile.readText(spark, s"$outRoot/global_stats.json").get
     val gs = StatsDoc.parse(statsText).get
-    val validFiles = Seq(0L, 1L, 4L).map(ep =>
-      f"$root/data/chunk-000/episode_$ep%06d.parquet")
-    val flat = stages.Stats.computeFromFrames(
-      io.Episodes.readRaw(spark, validFiles),
-      Seq("action", Schemas.ObsStateStorage))
-    gs.features("action").mean.zip(flat.features("action").mean).foreach {
+    val flat = flatStats(Seq(0L, 1L, 4L).flatMap(goldenEpisodes))
+    gs.features("action").mean.zip(flat("action").mean).foreach {
       case (a, b) => assert(math.abs(a - b) < 1e-6, s"pooled vs flat mean: $a vs $b")
     }
     assert(gs.totalFrames === 40L + 35L + 20L)
@@ -147,19 +142,55 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
       metaLengths = episodes.map { case (e, f) => e -> f.size.toLong })
     cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
 
-    val features = Seq("action", Schemas.ObsStateStorage)
-    val got = StatsDoc.parse(io.SingleFile.readText(spark, s"$outRoot/global_stats.json").get).get
-    val want = Stats.computeFromFrames(io.Episodes.readRaw(spark,
-      Seq(0L, 1L).map(e => f"$root/data/chunk-000/episode_$e%06d.parquet")), features)
+    val statsText = io.SingleFile.readText(spark, s"$outRoot/global_stats.json").get
+    val got = StatsDoc.parse(statsText).get
+    val want = flatStats(Seq(0L, 1L).flatMap(episodes))
     assert((got.episodesUsed, got.totalFrames) === ((2L, 70L)))
     def close(a: Seq[Double], b: Seq[Double]): Boolean =
       a.size == b.size && a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-9 * (1 + math.abs(y)) }
-    features.foreach { f =>
-      val (g, w) = (got.features(f), want.features(f))
+    Stats.DefaultFeatures.foreach { f =>
+      val (g, w) = (got.features(f), want(f))
       assert(g.count === w.count, f)
       Seq(g.mean -> w.mean, g.std -> w.std, g.min -> w.min, g.max -> w.max).foreach {
         case (a, b) => assert(close(a, b), s"$f: $a vs $b")
       }
+    }
+
+    // the frames path's jobs: 4 for the fold's pass over every feature (the
+    // valid-id broadcast, two shuffle-map jobs, the result) and 4 for the
+    // histogram's (the parent ran 25: a pass per feature and per count)
+    val again = s"$outRoot/global_stats_again.json"
+    val (_, jobs) = jobsOf(Stats.runFromFrames(spark, s"$root/data", again,
+      Stats.DefaultFeatures, Some(s"$outRoot/validate/validated_episodes.jsonl")))
+    assert(jobs === 8)
+    assert(io.SingleFile.readText(spark, again).get === statsText)
+  }
+
+  test("an all-invalid corpus: no stats, one unnormalized file per episode, with or without episodes_stats.jsonl") {
+    val episodes = Map(0L -> Defects.wrongWidth(0, 10), 1L -> Defects.dupFrames(1, 12),
+      2L -> Defects.unsorted(2, 9))
+    Seq(true, false).foreach { withJsonl =>
+      val root = tmpDir("e2e_all_invalid")
+      val outRoot = s"$root/out"
+      dataset(spark, root, episodes, videosFor = episodes.keySet,
+        metaLengths = episodes.map { case (e, f) => e -> f.size.toLong })
+      if (withJsonl)
+        Files.write(Paths.get(s"$root/meta/episodes_stats.jsonl"), statsJsonl(episodes).getBytes)
+      cli.Main.run(spark, List("pipeline", root, outRoot, "--skip-video"))
+
+      val gs = StatsDoc.parse(io.SingleFile.readText(spark, s"$outRoot/global_stats.json").get).get
+      assert((gs.episodesUsed, gs.totalFrames) === ((0L, 0L)), s"jsonl=$withJsonl")
+      assert(gs.features.isEmpty, s"jsonl=$withJsonl")
+      // no stats, so align-transform writes every episode unnormalized:
+      // the 7-wide episode's rows all drop, the others keep their clean
+      // frames in frame order
+      val norm = io.Episodes.readDataDir(spark, s"$outRoot/normalized")
+      val actions = norm.orderBy(io.Episodes.SrcFileCol, "frame_index")
+        .select(col(io.Episodes.EpIdxCol), col("action")).collect()
+        .groupBy(_.getLong(0)).map { case (e, rs) => e -> rs.map(_.getSeq[Float](1)).toSeq }
+      assert(io.Episodes.list(spark, s"$outRoot/normalized").uris.size === 3, s"jsonl=$withJsonl")
+      assert(actions === Map(1L -> cleanFrames(1, 12).map(_.action),
+        2L -> cleanFrames(2, 9).map(_.action)), s"jsonl=$withJsonl")
     }
   }
 
@@ -181,26 +212,16 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val statsOut = s"$outRoot/global_stats.json"
     spark.catalog.clearCache()
 
-    val jobs = new AtomicInteger()
-    val jobCounter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val executions = mutable.ArrayBuffer.empty[QueryExecution]
     val planRecorder = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         executions.synchronized(executions += qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def drain(): Unit =
-      org.apache.spark.sql.graft.GraftBridge.waitListenerBusEmpty(spark.sparkContext, 60000)
-
     val counted = mutable.LinkedHashMap.empty[String, Int]
     def stage[T](name: String)(body: => T): T = {
-      drain()
-      jobs.set(0)
-      val out = body
-      drain()
-      counted(name) = jobs.get
+      val (out, jobs) = jobsOf(body)
+      counted(name) = jobs
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cached table behind")
       out
     }
@@ -228,7 +249,6 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
         case o => Seq(o.getClass.getSimpleName)
       } })
 
-    spark.sparkContext.addSparkListener(jobCounter)
     spark.listenerManager.register(planRecorder)
     try {
       val delta = stage("discover")(Discover.run(spark, root, manifest))
@@ -239,7 +259,7 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
       // the groupBy reuses the order window's clustering
       assert(shufflesOver(s"$root/data").count(_ == Seq(io.Episodes.SrcFileCol)) === 1)
       val gs = stage("stats")(Stats.run(spark, s"$root/meta/episodes_stats.jsonl", statsOut,
-        Seq("action", Schemas.ObsStateStorage), Some(s"$validateOut/validated_episodes.jsonl")))
+        Stats.DefaultFeatures, Some(s"$validateOut/validated_episodes.jsonl")))
       executions.synchronized(executions.clear())
       val normalized = stage("align_transform")(AlignTransform.run(spark, s"$root/data",
         s"$outRoot/normalized", Some(statsOut)))
@@ -269,7 +289,6 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(again.count() === 0)
     } finally {
       spark.listenerManager.unregister(planRecorder)
-      spark.sparkContext.removeSparkListener(jobCounter)
     }
   }
 }

@@ -95,30 +95,11 @@ class SkylineBlockingSpec extends SparkSuite {
     // own — it rides the op's one materialization as an observe() metric,
     // so we also pin JOB-COUNT PARITY against a dup-free call of the
     // identical shape.
-    def countJobs(body: => Array[(Long, Long)]): (Array[(Long, Long)], Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val r = body
-        // listener bus is async: poll until the count is stable
-        var last = -1
-        var tries = 0
-        while (jobs.get() != last && tries < 50) {
-          last = jobs.get(); Thread.sleep(100); tries += 1
-        }
-        (r, jobs.get())
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     val errBuf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
     System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
     val (out, jobsDup) =
-      try countJobs(Blocking.sortedNeighborhood(dup.toDF("doc_id", "text"),
+      try jobsOf(Blocking.sortedNeighborhood(dup.toDF("doc_id", "text"),
         "doc_id", lit("k"), toks, w = 4, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))))
       finally System.setErr(realErr)
@@ -136,7 +117,7 @@ class SkylineBlockingSpec extends SparkSuite {
     val errBuf2 = new java.io.ByteArrayOutputStream()
     System.setErr(new java.io.PrintStream(errBuf2, true, "UTF-8"))
     val (_, jobsUniq) =
-      try countJobs(Blocking.sortedNeighborhood(uniq.toDF("doc_id", "text"),
+      try jobsOf(Blocking.sortedNeighborhood(uniq.toDF("doc_id", "text"),
         "doc_id", lit("k"), toks, w = 4, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))))
       finally System.setErr(realErr)

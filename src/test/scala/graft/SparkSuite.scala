@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,6 +32,23 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(key, value)
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s result and the Spark jobs it started. The listener bus is
+    * drained before and after, so no job of earlier work is counted and
+    * none of `body`'s is missed.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def drain(): Unit =
+      org.apache.spark.sql.graft.GraftBridge.waitListenerBusEmpty(spark.sparkContext, 60000)
+    drain()
+    spark.sparkContext.addSparkListener(counter)
+    try { val out = body; drain(); (out, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(counter)
   }
 
   override protected def afterAll(): Unit =

@@ -12,7 +12,7 @@ import graft.stages.Stats
 class StatsSpec extends SparkSuite {
   import FixtureGen._
 
-  private val features = Seq("action", Schemas.ObsStateStorage)
+  private val features = Stats.DefaultFeatures
 
   test("pooled reduction equals flat recompute over concatenated frames") {
     val root = tmpDir("stats_eq")
@@ -23,8 +23,7 @@ class StatsSpec extends SparkSuite {
       statsJsonl(episodes).getBytes)
 
     val pooled = Stats.reduceFromJsonl(spark, s"$root/episodes_stats.jsonl", features)
-    val flat = Stats.computeFromFrames(
-      Episodes.readDataDir(spark, s"$root/data"), features)
+    val flat = Stats.reduceFromFrames(spark, s"$root/data", features)
 
     assert(pooled.episodesUsed === 3)
     assert(pooled.totalFrames === 65)
@@ -106,7 +105,7 @@ class StatsSpec extends SparkSuite {
     assert(gs.features("action").count === 4)
   }
 
-  test("computeFromFrames emits q01/q99 matching the reference stats.json shape") {
+  test("reduceFromFrames emits q01/q99 matching the reference stats.json shape") {
     // golden SHAPE contract: the reference dataset's meta/stats.json carries
     // per-feature q01/q99 vectors next to mean/std/min/max
     // (reference robot_data/meta/stats.json)
@@ -122,7 +121,7 @@ class StatsSpec extends SparkSuite {
     val root = tmpDir("stats_q")
     val episodes = Map(0L -> cleanFrames(0, 40), 1L -> cleanFrames(1, 40))
     dataset(spark, root, episodes)
-    val gs = Stats.computeFromFrames(Episodes.readDataDir(spark, s"$root/data"), features)
+    val gs = Stats.reduceFromFrames(spark, s"$root/data", features)
     features.foreach { k =>
       val f = gs.features(k)
       assert(f.q01.isDefined && f.q99.isDefined, s"$k missing q01/q99")
@@ -179,8 +178,7 @@ class StatsSpec extends SparkSuite {
         index = i.toLong, task_index = 0L)
     }
     writeEpisode(spark, frames, s"$root/data/chunk-000/episode_000000.parquet")
-    val gs = Stats.computeFromFrames(
-      Episodes.readDataDir(spark, s"$root/data"), Seq("action"))
+    val gs = Stats.reduceFromFrames(spark, s"$root/data", Seq("action"))
     val f = gs.features("action")
     // constant dim: degenerate range → both tails ARE the constant
     assert(f.q01.get(0) === 5.0 && f.q99.get(0) === 5.0)
