@@ -970,31 +970,36 @@ object Relational {
       // explicit schema on the read-back: an EMPTY corpus writes a
       // zero-file layout and schema inference would fail on it — an
       // empty partitioned export is legitimate (round-12 empty sweep)
-      val pruned = s.read.schema(docs.schema).parquet(tmp)
+      val agg = s.read.schema(docs.schema).parquet(tmp)
         .filter(col("source").isin("src0", "src1", "src2"))
-      // plan tripwire — fail loudly if the partition filter didn't reach the
-      // scan or didn't shrink the file list
-      val scan = pruned.queryExecution.executedPlan.collectFirst {
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
-      }.getOrElse(throw new IllegalStateException(
-        "q131: no FileSourceScanExec in the executed plan"))
-      val total = scan.relation.location.listFiles(Nil, Nil).map(_.files.size).sum
-      // total == 0 (empty layout): nothing was partitioned (no dirs to
-      // discover, `source` reads as a data column) and nothing can be
-      // pruned — both assertions are vacuous, not violated
-      if (total > 0 && scan.partitionFilters.isEmpty)
-        throw new IllegalStateException(
-          "q131: partition filter did not reach the scan (partitionFilters empty)")
-      val kept = scan.relation.location.listFiles(
-        scan.partitionFilters, scan.dataFilters).map(_.files.size).sum
-      if (total > 0 && kept >= total) throw new IllegalStateException(
-        s"q131: partition pruning ineffective — scan reads $kept of $total files")
-      // localCheckpoint pins the rows before withTempDir deletes the staging
-      // layout the plan reads from
-      pruned.groupBy("source")
+        .groupBy("source")
         .agg(count(lit(1)).as("n"), sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("source")
-        .localCheckpoint()
+      // the checkpoint pins the rows before withTempDir deletes the staging
+      // layout the plan reads from
+      val (out, rows, scans) = certified(agg) {
+        case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
+      }
+      // plan tripwire — fail loudly if the partition filter didn't reach the
+      // scan or didn't shrink the file list. A scan stage that produced no
+      // rows is replaced by an empty relation in the final adaptive plan,
+      // so only a read that flowed must still show its scan.
+      if (rows > 0 && scans.isEmpty) throw new IllegalStateException(
+        "q131: no FileSourceScanExec in the executed plan")
+      scans.headOption.foreach { scan =>
+        val total = scan.relation.location.listFiles(Nil, Nil).map(_.files.size).sum
+        // total == 0 (empty layout): nothing was partitioned (no dirs to
+        // discover, `source` reads as a data column) and nothing can be
+        // pruned — both assertions are vacuous, not violated
+        if (total > 0 && scan.partitionFilters.isEmpty)
+          throw new IllegalStateException(
+            "q131: partition filter did not reach the scan (partitionFilters empty)")
+        val kept = scan.relation.location.listFiles(
+          scan.partitionFilters, scan.dataFilters).map(_.files.size).sum
+        if (total > 0 && kept >= total) throw new IllegalStateException(
+          s"q131: partition pruning ineffective — scan reads $kept of $total files")
+      }
+      out
     }
   }
 
@@ -1015,64 +1020,52 @@ object Relational {
       |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
-    val wh = java.nio.file.Files.createTempDirectory("q132")
-    // unique table names: repeated/concurrent gate runs in one session must
-    // not race on DROP TABLE / saveAsTable (round-7 advice)
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val (tOrd, tCust) = (s"q132_ord_$run", s"q132_cust_$run")
-    Tables.orders(s, dir).select("o_custkey", "o_totalprice")
-      .write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .option("path", s"$wh/ord").saveAsTable(tOrd)
-    Tables.customer(s, dir).select("c_custkey", "c_mktsegment")
-      .write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .option("path", s"$wh/cust").saveAsTable(tCust)
-    // broadcast off so the no-exchange claim is about bucketing, not about
-    // the dimension being small; the threshold is restored only AFTER the
-    // gated result is materialized, so the execution the oracle checks is
-    // the same one the tripwire certified (round-7 advice)
-    val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = s.table(tOrd)
-        .join(s.table(tCust), col("o_custkey") === col("c_custkey"))
-      // materialize the gated aggregate inside the no-broadcast window
-      // (localCheckpoint is eager), so the returned frame is pinned results,
-      // not a plan that re-executes after the threshold is restored. The
-      // tripwire inspects THIS execution's finalized adaptive plan — one
-      // execution per gate (round-12 verdict: the old joined.count() probe
-      // ran the join twice). The agg's own groupBy/sort exchanges sit ABOVE
-      // the join, so the no-shuffle claim is asserted on the join's
-      // SUBTREE: bucketed inputs must feed the merge join with no exchange.
-      val agg = joined.groupBy(col("c_mktsegment").as("segment"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(cents(col("o_totalprice"))).as("sum_price_cents"))
-        .orderBy("segment")
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      // vacuous on an empty input — AQE's empty-relation propagation
-      // collapses the join away entirely (round-12 empty-input sweep);
-      // count() here reads the pinned checkpoint blocks, not the plan
-      if (out.count() > 0) {
-        val joins = deepCollect(qe.executedPlan) {
-          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-          case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+    graft.io.TempDirs.withTempDir("q132") { wh =>
+      // unique table names: repeated/concurrent gate runs in one session
+      // must not race on DROP TABLE / saveAsTable (round-7 advice)
+      val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+      val (tOrd, tCust) = (s"q132_ord_$run", s"q132_cust_$run")
+      try {
+        Tables.orders(s, dir).select("o_custkey", "o_totalprice")
+          .write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")
+          .option("path", s"$wh/ord").saveAsTable(tOrd)
+        Tables.customer(s, dir).select("c_custkey", "c_mktsegment")
+          .write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey")
+          .option("path", s"$wh/cust").saveAsTable(tCust)
+        // broadcast off so the no-exchange claim is about bucketing, not
+        // about the dimension being small; the threshold is restored only
+        // AFTER the gated result is pinned, so the execution the oracle
+        // checks is the same one the tripwire certified (round-7 advice).
+        // The agg's own groupBy/sort exchanges sit ABOVE the join, so the
+        // no-shuffle claim is asserted on the join's SUBTREE: bucketed
+        // inputs must feed the merge join with no exchange.
+        withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          val agg = s.table(tOrd)
+            .join(s.table(tCust), col("o_custkey") === col("c_custkey"))
+            .groupBy(col("c_mktsegment").as("segment"))
+            .agg(count(lit(1)).as("n_orders"),
+              sum(cents(col("o_totalprice"))).as("sum_price_cents"))
+            .orderBy("segment")
+          val (out, rows, joins) = certified(agg) {
+            case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+            case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+          }
+          // vacuous on an empty input — AQE's empty-relation propagation
+          // collapses the join away entirely (round-12 empty-input sweep)
+          if (rows > 0) {
+            if (joins.isEmpty) throw new IllegalStateException(
+              "q132: no shuffled/merge join in the executed plan — the " +
+                "no-broadcast window did not produce the bucketed join shape")
+            val below = joins.flatMap(_.children.flatMap(c => PlanWalk.collect(c) {
+              case e: org.apache.spark.sql.execution.exchange.Exchange => e
+            }))
+            if (below.nonEmpty) throw new IllegalStateException(
+              s"q132: bucketed join shuffled (${below.size} exchange(s) below " +
+                "the join) — co-located bucketing is not being honored")
+          }
+          out
         }
-        if (joins.isEmpty) throw new IllegalStateException(
-          "q132: no shuffled/merge join in the executed plan — the " +
-            "no-broadcast window did not produce the bucketed join shape")
-        val below = joins.flatMap(_.children.flatMap(c => deepCollect(c) {
-          case e: org.apache.spark.sql.execution.exchange.Exchange => e
-        }))
-        if (below.nonEmpty) throw new IllegalStateException(
-          s"q132: bucketed join shuffled (${below.size} exchange(s) below " +
-            "the join) — co-located bucketing is not being honored")
-      }
-      out
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      s.sql(s"DROP TABLE IF EXISTS $tOrd")
-      s.sql(s"DROP TABLE IF EXISTS $tCust")
-      graft.io.TempDirs.deleteRecursively(wh)
+      } finally Seq(tOrd, tCust).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
@@ -1097,91 +1090,96 @@ object Relational {
       |WHERE c.c_nationkey = 3
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
-    val wh = java.nio.file.Files.createTempDirectory("q162")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val (tLi, tOrd, tCust) = (s"q162_li_$run", s"q162_ord_$run", s"q162_cust_$run")
-    Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice")
-      .write.mode("overwrite").option("path", s"$wh/li").saveAsTable(tLi)
-    Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      .write.mode("overwrite").option("path", s"$wh/ord").saveAsTable(tOrd)
-    Tables.customer(s, dir).select("c_custkey", "c_nationkey")
-      .write.mode("overwrite").option("path", s"$wh/cust").saveAsTable(tCust)
-    Seq(tLi, tOrd, tCust).foreach { t =>
-      s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
-    }
-    val query =
-      s"""SELECT o.o_custkey % 8 AS bucket, count(*) AS n,
-         |  CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
-         |FROM $tLi l JOIN $tOrd o ON l.l_orderkey = o.o_orderkey
-         |JOIN $tCust c ON o.o_custkey = c.c_custkey
-         |WHERE c.c_nationkey = 3
-         |GROUP BY 1""".stripMargin
-    // left-to-right catalog-table order of the optimized join tree's leaves
-    def leafOrder(df: DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collectLeaves().flatMap {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.catalogTable.map(_.identifier.table)
-        case _ => None
-      }
-    val (prevCbo, prevReorder) = (
-      s.conf.get("spark.sql.cbo.enabled"),
-      s.conf.get("spark.sql.cbo.joinReorder.enabled"))
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "false")
-      val blindOrder = leafOrder(s.sql(query))
-      if (blindOrder.take(2).toSet != Set(tLi, tOrd))
-        throw new IllegalStateException(
-          s"q162: stats-blind plan no longer keeps the written fact-fact " +
-            s"order ($blindOrder) — the gate's calibration premise broke")
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      val cboDf = s.sql(query)
-      val cboOrder = leafOrder(cboDf)
-      if (!cboOrder.take(2).contains(tCust))
-        throw new IllegalStateException(
-          s"q162: CBO join reorder did not pull the selective dim into the " +
-            s"innermost join (leaf order $cboOrder) — stats are not driving " +
-            "the join tree")
-      // materialize inside the CBO window so the checked values come from
-      // the certified plan
-      cboDf.orderBy("bucket").localCheckpoint()
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", prevCbo)
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", prevReorder)
-      Seq(tLi, tOrd, tCust).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.TempDirs.deleteRecursively(wh)
+    graft.io.TempDirs.withTempDir("q162") { wh =>
+      val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+      val (tLi, tOrd, tCust) = (s"q162_li_$run", s"q162_ord_$run", s"q162_cust_$run")
+      try {
+        Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice")
+          .write.mode("overwrite").option("path", s"$wh/li").saveAsTable(tLi)
+        Tables.orders(s, dir).select("o_orderkey", "o_custkey")
+          .write.mode("overwrite").option("path", s"$wh/ord").saveAsTable(tOrd)
+        Tables.customer(s, dir).select("c_custkey", "c_nationkey")
+          .write.mode("overwrite").option("path", s"$wh/cust").saveAsTable(tCust)
+        Seq(tLi, tOrd, tCust).foreach { t =>
+          s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
+        }
+        val query =
+          s"""SELECT o.o_custkey % 8 AS bucket, count(*) AS n,
+             |  CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
+             |FROM $tLi l JOIN $tOrd o ON l.l_orderkey = o.o_orderkey
+             |JOIN $tCust c ON o.o_custkey = c.c_custkey
+             |WHERE c.c_nationkey = 3
+             |GROUP BY 1""".stripMargin
+        // left-to-right catalog-table order of the optimized join tree's leaves
+        def leafOrder(df: DataFrame): Seq[String] =
+          df.queryExecution.optimizedPlan.collectLeaves().flatMap {
+            case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              r.catalogTable.map(_.identifier.table)
+            case _ => None
+          }
+        val blindOrder = withConfs(s, "spark.sql.cbo.enabled" -> "false") {
+          leafOrder(s.sql(query))
+        }
+        if (blindOrder.take(2).toSet != Set(tLi, tOrd))
+          throw new IllegalStateException(
+            s"q162: stats-blind plan no longer keeps the written fact-fact " +
+              s"order ($blindOrder) — the gate's calibration premise broke")
+        withConfs(s, "spark.sql.cbo.enabled" -> "true",
+            "spark.sql.cbo.joinReorder.enabled" -> "true") {
+          val cboDf = s.sql(query)
+          val cboOrder = leafOrder(cboDf)
+          if (!cboOrder.take(2).contains(tCust))
+            throw new IllegalStateException(
+              s"q162: CBO join reorder did not pull the selective dim into the " +
+                s"innermost join (leaf order $cboOrder) — stats are not driving " +
+                "the join tree")
+          // materialize inside the CBO window so the checked values come
+          // from the certified plan
+          cboDf.orderBy("bucket").localCheckpoint()
+        }
+      } finally Seq(tLi, tOrd, tCust).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
-  /** Collect across AQE stage boundaries: QueryStageExec nodes are leaves
-    * whose actual plan lives in `plan`, not `children` — a plain collect on
-    * an executed adaptive plan misses everything below the first exchange.
+  /** `body` with the session confs `pins` set, restored after: a key that
+    * was set explicitly gets its value back, the others are unset. The
+    * snapshot reads the explicit settings alone (`getAll`). `getOption`
+    * resolves defaults and fallback keys, and `get(k, null)` still follows
+    * a fallback key to its parent's setting, so restoring either would
+    * leave a key that was unset (say
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) explicitly set and
+    * no longer following its parent for the rest of the session.
     */
-  /** Snapshot the EXPLICITLY-SET values of session confs before a gate
-    * pins them (restored in the gate's `finally`). `conf.getOption` is
-    * the wrong read here: it resolves registered entries' defaults AND
-    * fallback keys (`spark.sql.adaptive.autoBroadcastJoinThreshold`
-    * falls back to `spark.sql.autoBroadcastJoinThreshold`), so restoring
-    * what it returns SETS a previously-unset key to a snapshot of its
-    * fallback — permanently decoupling the adaptive threshold from the
-    * base conf for the rest of the session. `conf.get(key, null)` reads
-    * only the explicit settings map (a null default skips entry
-    * resolution), so truly-unset keys restore to unset.
-    */
-  private def savedConfs(s: SparkSession, confs: Seq[(String, String)])
-      : Seq[(String, Option[String])] =
-    confs.map { case (k, _) => k -> Option(s.conf.get(k, null)) }
+  private def withConfs[T](s: SparkSession, pins: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    try {
+      pins.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally pins.foreach { case (k, _) => set.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
 
-  private def deepCollect[T](p: org.apache.spark.sql.execution.SparkPlan)(
-      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
-    val here = if (pf.isDefinedAt(p)) Seq(pf(p)) else Nil
-    val kids = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    here ++ kids.flatMap(deepCollect(_)(pf))
+  /** Spark's walker over executed plans: it descends into an adaptive
+    * plan's current plan and into each query stage's plan, which a plain
+    * `collect` treats as leaves. Its own object, so the trait's
+    * `collect`/`find`/`foreach` stay out of `Relational`'s scope.
+    */
+  private object PlanWalk
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The certification step of a plan-tripwired gate: runs `df` once, as
+    * an eager `localCheckpoint`, and returns the pinned rows, the row count
+    * observed on that same job, and the nodes of its finalized adaptive
+    * plan that `pf` matches. The count reads 0 when the optimizer proved
+    * the plan empty and dropped the observer (`Observed.longs`).
+    */
+  private def certified[T](df: DataFrame)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T])
+      : (DataFrame, Long, Seq[T]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    val out = observed.localCheckpoint()
+    val Seq(rows) = graft.stages.Observed.longs(obs, "rows")
+    (out, rows, PlanWalk.collect(observed.queryExecution.executedPlan)(pf))
   }
 
   /** Runtime bloom-filter injection (`InjectRuntimeFilter`), driver-gated
@@ -1204,7 +1202,7 @@ object Relational {
       |WHERE o.o_orderpriority = '1-URGENT'
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-    val confs = Seq(
+    withConfs(s,
       // broadcast off: with a broadcast-able dim the planner ships the dim
       // itself (strictly better); the bloom path is FOR the non-broadcast
       // regime, so the gate pins that regime explicitly
@@ -1215,42 +1213,30 @@ object Relational {
       // 10 GB application-side scan) gate the identical rewrite at cluster
       // scale — the rule, not the thresholds, is what the gate certifies
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val saved = savedConfs(s, confs)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
       val urgent = Tables.orders(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
       val joined = Tables.lineitem(s, dir)
         .select("l_orderkey", "l_returnflag", "l_extendedprice")
         .join(urgent, col("l_orderkey") === col("o_orderkey"))
-      // ONE execution per gate (round-12 verdict: the old joined-only
-      // count() probe ran the join twice): materialize the gated aggregate
-      // eagerly and inspect ITS finalized adaptive plan — the bloom-pushed
-      // fact scan is inside it. `flowed` comes from the pinned result
-      // (groupBy output is empty iff the join output was), so the
-      // plan-shape assertion stays vacuous when AQE's empty-relation
-      // propagation collapses the join (round-12 empty-input sweep).
+      // the bloom-pushed fact scan is inside the gated aggregate's plan.
+      // `rows` counts the aggregate's output, which is empty iff the join
+      // output was, so the plan-shape assertion stays vacuous when AQE's
+      // empty-relation propagation collapses the join (round-12 sweep).
       val agg = joined.groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_items"),
           sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
         .orderBy("l_returnflag")
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      val flowed = out.count()
-      val blooms = deepCollect(qe.executedPlan) {
+      val (out, rows, blooms) = certified(agg) {
         case f: org.apache.spark.sql.execution.FilterExec
             if f.condition.exists(_.isInstanceOf[
               org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]) => f
       }
-      if (flowed > 0 && blooms.isEmpty) throw new IllegalStateException(
+      if (rows > 0 && blooms.isEmpty) throw new IllegalStateException(
         "q140: no BloomFilterMightContain in the executed plan — the " +
           "runtime bloom-filter injection did not fire")
       out
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1286,13 +1272,11 @@ object Relational {
     // depends on, the q144 discipline: an ambient session that disables
     // broadcast joins (the invariance sweep's `nobroadcast` mode, or a
     // cluster default) must not flip a certification gate into a refusal.
-    val confs = Seq(
+    withConfs(s,
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")
-    val saved = savedConfs(s, confs)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try graft.io.TempDirs.withTempDir("q143") { tmpDir =>
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB"
+    )(graft.io.TempDirs.withTempDir("q143") { tmpDir =>
       val docs = Tables.documents(s, dir)
       docs.write.mode("overwrite").partitionBy("source")
         .parquet(s"$tmpDir/fact")
@@ -1310,26 +1294,22 @@ object Relational {
         .filter(col("grp") === 1)
         .select(col("source").as("dim_source"))
       val joined = fact.join(dim, col("source") === col("dim_source"))
-      // ONE execution per gate (round-12 verdict): materialize the gated
-      // aggregate eagerly and inspect ITS finalized plan — the DPP'd fact
-      // scan (and its numPartitions metric) is inside it. `flowed` comes
-      // from the pinned result, which is empty iff the join output was.
+      // the DPP'd fact scan (and its numPartitions metric) is inside the
+      // gated aggregate's plan; `rows` is empty iff the join output was
       val agg = joined.groupBy("source")
         .agg(count(lit(1)).as("n"), sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("source")
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      val flowed = out.count()
-      val totalParts = docs.select("source").distinct().count()
+      val (out, rows, scans) = certified(agg) {
+        case sc: org.apache.spark.sql.execution.FileSourceScanExec
+            if sc.relation.partitionSchema.exists(_.name == "source") => sc
+      }
+      // the fact scan's own listing: one directory per `source` value
+      val totalParts = scans.headOption.fold(0)(_.relation.location.listFiles(Nil, Nil).size)
       // DPP is only assertable when it could have fired AND shrunk
       // something: with <2 partitions there is nothing to prune away, and
       // with zero join output the empty dim side collapses the plan
       // before any pruning expression exists (round-12 degenerate sweeps)
-      if (totalParts > 1 && flowed > 0) {
-        val scans = deepCollect(qe.executedPlan) {
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec
-              if sc.relation.partitionSchema.exists(_.name == "source") => sc
-        }
+      if (totalParts > 1 && rows > 0) {
         val dppScan = scans.find(_.partitionFilters.exists(_.exists(
           _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression])))
           .getOrElse(throw new IllegalStateException(
@@ -1342,10 +1322,7 @@ object Relational {
         }
       }
       out
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    })
   }
 
   /** AQE skew-join split, driver-gated with a plan tripwire: a 90%-one-key
@@ -1380,7 +1357,7 @@ object Relational {
       |FROM fact f JOIN dim d ON d.key = f.key
       |GROUP BY f.l_returnflag
       |ORDER BY f.l_returnflag""".stripMargin) { (s, dir) =>
-    val confs = Seq(
+    withConfs(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "true",
@@ -1391,10 +1368,7 @@ object Relational {
       // trips both conditions at sf0.01 and above.
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB")
-    val saved = savedConfs(s, confs)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB") {
       val fact = Tables.lineitem(s, dir).select(
         when(col("l_orderkey") % 10 < 9, lit(0L))
           .otherwise(col("l_orderkey") % 100).as("key"),
@@ -1414,30 +1388,23 @@ object Relational {
         // splitting an aggregation's input would duplicate its rows
         .localCheckpoint()
       val joined = fact.join(dim, Seq("key"))
-      // ONE execution per gate (round-12 verdict): materialize the gated
-      // aggregate eagerly and inspect ITS finalized adaptive plan — the
-      // skew-marked SortMergeJoin is inside it (the groupBy above regroups
-      // on a different key, so splitting the join's partitions introduces
-      // no extra shuffle and OptimizeSkewedJoin still applies). Vacuous on
-      // an empty input — AQE collapses the join (round-12 sweep).
+      // the skew-marked SortMergeJoin is inside the gated aggregate's plan
+      // (the groupBy above regroups on a different key, so splitting the
+      // join's partitions introduces no extra shuffle and
+      // OptimizeSkewedJoin still applies). Vacuous on an empty input — AQE
+      // collapses the join (round-12 sweep).
       val agg = joined.groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           sum(col("price_cents") * col("n_orders")).as("weighted_cents"))
         .orderBy("l_returnflag")
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      val flowed = out.count()
-      val skewed = deepCollect(qe.executedPlan) {
+      val (out, rows, skewed) = certified(agg) {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
             if j.isSkewJoin => j
       }
-      if (flowed > 0 && skewed.isEmpty) throw new IllegalStateException(
+      if (rows > 0 && skewed.isEmpty) throw new IllegalStateException(
         "q144: no skew-marked SortMergeJoin in the executed plan — " +
           "AQE skew-join split did not fire")
       out
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1459,41 +1426,30 @@ object Relational {
       |FROM orders
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    val confs = Seq(
+    withConfs(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB")
-    val saved = savedConfs(s, confs)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB") {
       val agg = Tables.orders(s, dir)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           sum(cents(col("o_totalprice"))).as("sum_cents"))
         .orderBy("o_orderpriority")
-      // ONE execution per gate (round-12 verdict): the localCheckpoint IS
-      // the execution; the tripwire inspects its finalized adaptive plan.
       // Vacuous on an empty input — the collapsed plan has no exchange to
       // coalesce (round-12 empty-input sweep).
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      val flowed = out.count()
-      val staticParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val reads = deepCollect(qe.executedPlan) {
+      val (out, rows, reads) = certified(agg) {
         case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => r
       }
-      if (flowed > 0 && reads.isEmpty) throw new IllegalStateException(
+      val staticParts = s.conf.get("spark.sql.shuffle.partitions").toInt
+      if (rows > 0 && reads.isEmpty) throw new IllegalStateException(
         "q145: no AQEShuffleRead in the executed plan — AQE coalescing " +
           "is not active")
-      if (flowed > 0 && !reads.exists(_.partitionSpecs.size < staticParts))
+      if (rows > 0 && !reads.exists(_.partitionSpecs.size < staticParts))
         throw new IllegalStateException(
           s"q145: AQE did not coalesce below the static $staticParts " +
             s"partitions (specs: ${reads.map(_.partitionSpecs.size).mkString(",")})")
       out
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1527,11 +1483,7 @@ object Relational {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 2)
       .orderBy("o_custkey", "rk")
-    // ONE execution per gate (round-12 verdict): the localCheckpoint IS
-    // the execution; the tripwire inspects its finalized adaptive plan.
-    val qe = topk.queryExecution
-    val out = topk.localCheckpoint()
-    val limits = deepCollect(qe.executedPlan) {
+    val (out, _, limits) = certified(topk) {
       case l: org.apache.spark.sql.execution.window.WindowGroupLimitExec => l
     }
     if (limits.isEmpty) throw new IllegalStateException(
@@ -1562,13 +1514,10 @@ object Relational {
       |WHERE o.o_orderpriority = '1-URGENT' AND o.o_totalprice > 150000
       |GROUP BY l.l_linestatus
       |ORDER BY l.l_linestatus""".stripMargin) { (s, dir) =>
-    val confs = Seq(
+    withConfs(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")
-    val saved = savedConfs(s, confs)
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB") {
       val dim = Tables.orders(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_totalprice") > 150000)
@@ -1579,27 +1528,20 @@ object Relational {
       val joined = Tables.lineitem(s, dir)
         .select("l_orderkey", "l_linestatus", "l_extendedprice")
         .join(dim, col("l_orderkey") === col("o_orderkey"))
-      // ONE execution per gate (round-12 verdict): materialize the gated
-      // aggregate eagerly and inspect ITS finalized adaptive plan — the
-      // runtime-converted BroadcastHashJoin is inside it. Vacuous on an
-      // empty input — AQE collapses the join (round-12 sweep).
+      // the runtime-converted BroadcastHashJoin is inside the gated
+      // aggregate's plan. Vacuous on an empty input — AQE collapses the
+      // join (round-12 sweep).
       val agg = joined.groupBy("l_linestatus")
         .agg(count(lit(1)).as("n"),
           sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
         .orderBy("l_linestatus")
-      val qe = agg.queryExecution
-      val out = agg.localCheckpoint()
-      val flowed = out.count()
-      val bhj = deepCollect(qe.executedPlan) {
+      val (out, rows, bhj) = certified(agg) {
         case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
       }
-      if (flowed > 0 && bhj.isEmpty) throw new IllegalStateException(
+      if (rows > 0 && bhj.isEmpty) throw new IllegalStateException(
         "q149: no BroadcastHashJoin in the executed plan — AQE did not " +
           "convert the stats-blind sort-merge join at runtime")
       out
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1723,32 +1665,14 @@ object Relational {
     // plan tripwire — the sliced decomposition's whole point is that the
     // RANGE window partitions on (key, _slice), not the key alone (which
     // would serialize each key's timeline through one task at scale).
-    // ONE execution per gate (round-12 verdict): the localCheckpoint IS
-    // the execution; unwrap AQE to the finalized plan (the q132 idiom)
-    // before collecting window nodes. Vacuous on an empty input — AQE's
-    // empty-relation propagation elides the window (round-12 sweep).
-    val qe = slid.queryExecution
-    val out = slid.localCheckpoint()
-    val flowed = out.count()
-    // AQE cuts the tree at QueryStageExec boundaries, so a plain collect
-    // never sees operators inside materialized stages — descend explicitly
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val nested = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allNodes(a.executedPlan)
-        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          allNodes(qs.plan)
-        case _ => Nil
-      }
-      p +: (p.children.flatMap(allNodes) ++ nested)
-    }
-    val windows = allNodes(qe.executedPlan).collect {
+    // Vacuous on an empty input — AQE's empty-relation propagation elides
+    // the window (round-12 sweep).
+    val (out, rows, windows) = certified(slid) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
-    if (flowed > 0 && windows.isEmpty) throw new IllegalStateException(
+    if (rows > 0 && windows.isEmpty) throw new IllegalStateException(
       "q172: no WindowExec in the executed plan")
-    if (flowed > 0 && !windows.exists(_.partitionSpec.size >= 2))
+    if (rows > 0 && !windows.exists(_.partitionSpec.size >= 2))
       throw new IllegalStateException(
         "q172: sliding window lost its slice partitioning — partitionSpec is " +
           windows.map(_.partitionSpec.map(_.sql).mkString("(", ",", ")")).mkString("; "))
@@ -1822,18 +1746,11 @@ object Relational {
         .agg(count(lit(1)).as("n"),
           sum(cents(col("o_totalprice"))).as("sum_price_cents"))
         .orderBy("bucket")
-      // ONE execution per gate (round-12 verdict): the localCheckpoint IS
-      // the execution; the tripwire inspects its finalized plan. Vacuous
-      // on an empty input — empty-relation propagation folds the whole
-      // expression tree away (round-12 empty-input sweep).
-      val qe = composed.queryExecution
-      val out = composed.localCheckpoint()
-      val flowed = out.count()
-      def exprsOf(p: org.apache.spark.sql.execution.SparkPlan) =
-        deepCollect(p) { case n => n.expressions }.flatten
-          .flatMap(_.collect { case e => e })
-      val exprs = exprsOf(qe.executedPlan)
-      if (flowed > 0 && !exprs.exists(_.isInstanceOf[graft.functions.Hash60]))
+      // Vacuous on an empty input — empty-relation propagation folds the
+      // whole expression tree away (round-12 empty-input sweep).
+      val (out, rows, nodes) = certified(composed) { case n => n }
+      val exprs = nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      if (rows > 0 && !exprs.exists(_.isInstanceOf[graft.functions.Hash60]))
         throw new IllegalStateException(
           "q182: no fused Hash60 in the executed plan — FuseHash60Rule " +
             "did not rewrite the composed md5-conv chain")
@@ -1845,7 +1762,7 @@ object Relational {
         case org.apache.spark.sql.catalyst.expressions.Levenshtein(_, _, None) => true
         case _ => false
       }
-      if (flowed > 0 && (!bounded || unbounded))
+      if (rows > 0 && (!bounded || unbounded))
         throw new IllegalStateException(
           s"q182: BoundLevenshteinRule did not rewrite (bounded=$bounded, " +
             s"unbounded=$unbounded)")

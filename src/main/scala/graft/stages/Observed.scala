@@ -2,10 +2,11 @@ package graft.stages
 
 import org.apache.spark.sql.Observation
 
-/** Reads the counters a stage attached to a pass it runs anyway
-  * (`Dataset.observe`), instead of spending extra actions on counts.
+/** Reads the counters a stage (or a certified gate in `Relational`)
+  * attached to a pass it runs anyway (`Dataset.observe`), instead of
+  * spending extra actions on counts.
   */
-private[stages] object Observed {
+private[graft] object Observed {
 
   /** The named long metrics of a finished observation, 0 for any that is
     * absent: when the optimizer proves the observed plan empty it drops

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 
 /** AQE runtime re-planning — the "plans survive a 100× scale-up" levers
@@ -16,38 +16,8 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
   *    counterpart of the deterministic `ops/SkewJoin` salting, which
   *    exists for the cases AQE cannot split (e.g. aggregations).
   */
-class AdaptiveSpec extends SparkSuite {
+class AdaptiveSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  /** Collect across AQE boundaries: QueryStageExec nodes are leaves whose
-    * actual stage plan lives in `plan`, not `children`, so a plain
-    * `collect` on an executed adaptive plan sees none of the join nodes.
-    */
-  private def deepCollect[T](p: org.apache.spark.sql.execution.SparkPlan)(
-      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
-    val here = if (pf.isDefinedAt(p)) Seq(pf(p)) else Nil
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    here ++ kids.flatMap(deepCollect(_)(pf))
-  }
-
-  private def finalPlan(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("AQE converts a statically-planned SMJ to broadcast from runtime stats") {
     val dir = tmpDir("aqe_bhj")
@@ -65,10 +35,10 @@ class AdaptiveSpec extends SparkSuite {
       // execute THIS QueryExecution (count() would plan a separate one),
       // so the adaptive plan below is the final, re-optimized one
       assert(joined.collect().length > 0)
-      val plan = finalPlan(joined)
-      assert(deepCollect(plan) { case b: BroadcastHashJoinExec => b }.nonEmpty,
+      val plan = stripAQEPlan(joined.queryExecution.executedPlan)
+      assert(collect(plan) { case b: BroadcastHashJoinExec => b }.nonEmpty,
         s"expected runtime broadcast conversion:\n$plan")
-      assert(deepCollect(plan) { case s: SortMergeJoinExec => s }.isEmpty)
+      assert(collect(plan) { case s: SortMergeJoinExec => s }.isEmpty)
     }
   }
 
@@ -90,8 +60,8 @@ class AdaptiveSpec extends SparkSuite {
       val dim = spark.read.parquet(s"$dir/dim").filter(col("cat") === 7) // selective
       val joined = spark.read.parquet(s"$dir/fact").join(dim, "k")
       assert(joined.collect().length === 2 * 100) // 100 dim keys × 2 fact rows
-      val plan = finalPlan(joined)
-      val hasBloom = deepCollect(plan) {
+      val plan = stripAQEPlan(joined.queryExecution.executedPlan)
+      val hasBloom = collect(plan) {
         case f: org.apache.spark.sql.execution.FilterExec
             if f.condition.exists(_.isInstanceOf[
               org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]) => f
@@ -123,8 +93,8 @@ class AdaptiveSpec extends SparkSuite {
       val joined = spark.read.parquet(s"$dir/left")
         .join(spark.read.parquet(s"$dir/right"), "k")
       assert(joined.collect().length === 100000 + 20 * 150)
-      val plan = finalPlan(joined)
-      val smjs = deepCollect(plan) { case s: SortMergeJoinExec => s }
+      val plan = stripAQEPlan(joined.queryExecution.executedPlan)
+      val smjs = collect(plan) { case s: SortMergeJoinExec => s }
       assert(smjs.nonEmpty, s"expected an SMJ:\n$plan")
       assert(smjs.exists(_.isSkewJoin),
         s"expected the skew-join split to trigger:\n$plan")

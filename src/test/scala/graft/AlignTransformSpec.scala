@@ -133,7 +133,7 @@ class AlignTransformSpec extends SparkSuite {
     val root = tmpDir("align_cap")
     dataset(spark, root, Map(0L -> cleanFrames(0, 40)))
     val outDir = tmpDir("align_cap_out")
-    val written = withConf("spark.sql.files.maxRecordsPerFile", "10") {
+    val written = withConf("spark.sql.files.maxRecordsPerFile" -> "10") {
       AlignTransform.run(spark, s"$root/data", outDir, None)
     }
     assert(spark.read.parquet(written.head).count() === 40)

@@ -68,7 +68,7 @@ class SingleFileSpec extends SparkSuite {
 
   test("a session maxRecordsPerFile cap drops no row of a single-file write") {
     val dir = tmpDir("sf_cap")
-    withConf("spark.sql.files.maxRecordsPerFile", "2") {
+    withConf("spark.sql.files.maxRecordsPerFile" -> "2") {
       SingleFile.writeParquetAtomic((1L to 6L).toDF("id"), s"$dir/state.parquet")
       SingleFile.writeJsonl((1L to 7L).toDF("id"), s"$dir/lines.jsonl")
     }

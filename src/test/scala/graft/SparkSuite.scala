@@ -24,14 +24,19 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  /** `body` with the session conf `key` set to `value`, restored after:
-    * the session is shared by every test of the suite.
+  /** `body` with the session confs `pins` set, restored after: the
+    * session is shared by every suite of the test JVM. A key that was set
+    * explicitly gets its value back, the others are unset. The snapshot
+    * reads the explicit settings alone (`getAll`): `getOption` resolves
+    * defaults and fallback keys, so restoring what it returns would leave
+    * an unset fallback key set, no longer following its parent.
     */
-  def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  def withConf[T](pins: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    try {
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally pins.foreach { case (k, _) => set.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** `body`'s result and the Spark jobs it started. The listener bus is
