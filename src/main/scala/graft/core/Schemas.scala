@@ -107,22 +107,6 @@ object Models {
       index: Long,
       task_index: Long)
 
-  /** Manifest row, mirrors core/models.py:5-19. */
-  final case class EpisodeManifestRow(
-      episode_index: Long,
-      chunk: String,
-      parquet_uri: String,
-      video_front_uri: String,
-      video_wrist_uri: String,
-      exists_front: Boolean,
-      exists_wrist: Boolean,
-      bytes_total: Long,
-      fingerprint: String,
-      fingerprint_algo: String,
-      discovered_at: String,
-      status: String,
-      errors: String)
-
   /** One validation issue (typed, not JSON strings — SURVEY §1.2/F13). */
   final case class Issue(kind: String, detail: String)
 

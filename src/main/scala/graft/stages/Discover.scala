@@ -1,8 +1,10 @@
 package graft.stages
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.{Json, Schemas, Status}
 import graft.io.{Episodes, SingleFile}
@@ -15,18 +17,21 @@ import graft.ops.Fingerprint
   *
   * Spark shape (SURVEY §3.1): the reference's thread pool becomes executor
   * parallelism — a file-listing Dataset fingerprinted in `mapPartitions` —
-  * and the relational tail (prev-manifest join, tombstone anti-join, orphan
-  * anti-join, relaxed union, sort) is pure DataFrame logic with the small
-  * previous manifest broadcast. At 100 TB / 10M episodes: listing is
+  * and the relational tail (prev-manifest join, tombstone anti-join,
+  * relaxed union, sort) is pure DataFrame logic with the small previous
+  * manifest broadcast. At 100 TB / 10M episodes: listing is
   * driver-side metadata (cheap), fingerprinting is a bounded 128 KiB read
   * per file fanned across executors, and every join broadcasts the smaller
   * side.
   *
-  * The fingerprint pass runs once per call: the anti-joins take their
-  * (chunk, episode) keys from the file listing, not from the
-  * fingerprinted rows, so the manifest write's plan holds a single
-  * fingerprint `mapPartitions`. Nothing is cached; the returned delta is a
-  * read of the manifest just written.
+  * Episode bookkeeping stays on the driver, file passes on the
+  * executors: the two listings are local, the fingerprint pass runs
+  * once, over the listed files as they are partitioned (no exchange),
+  * and orphan videos are the set difference of the listings, so the
+  * manifest write's plan holds a single fingerprint `mapPartitions` and
+  * only the tombstone join reads the previous manifest. Driver memory is
+  * O(listed files), as the listing already is. Nothing is cached; the
+  * returned delta is a read of the manifest just written.
   */
 object Discover {
 
@@ -37,7 +42,11 @@ object Discover {
       stabilityMinBytes: Long = Fingerprint.StabilityMinBytes,
       stabilityPauseMs: Long = Fingerprint.StabilityPauseMs)
 
-  import graft.core.Models.EpisodeManifestRow
+  /** The manifest as written: every column nullable but the episode
+    * index and the byte total, whichever row kinds a run holds.
+    */
+  private val WrittenSchema = StructType(Schemas.manifestSchema.map(f =>
+    f.copy(nullable = !Set("episode_index", "bytes_total")(f.name))))
 
   private def utcNow(): String =
     java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
@@ -54,16 +63,15 @@ object Discover {
     val videosRoot = s"$dataRoot/videos"
     val nowStr = utcNow()
     val parts = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism * 2))
-    spark.createDataset(files).repartition(parts).mapPartitions { it =>
+    spark.createDataset(spark.sparkContext.parallelize(files, parts)).mapPartitions { it =>
       val conf = hconf.value
       it.map { case (chunk, pqUri) =>
         val pq = new HPath(pqUri)
         val fs = pq.getFileSystem(conf)
         Episodes.indexOf(pqUri) match {
           case None =>
-            EpisodeManifestRow(-1L, chunk, pqUri, null, null, exists_front = false,
-              exists_wrist = false, 0L, null, Fingerprint.Algo, nowStr,
-              Status.Error, """{"reason": "bad_episode_name"}""")
+            Row(-1L, chunk, pqUri, null, null, false, false, 0L, null, Fingerprint.Algo,
+              nowStr, Status.Error, """{"reason": "bad_episode_name"}""")
           case Some(idx) =>
             val Seq(vFront, vWrist) =
               Cameras.map(cam => new HPath(Episodes.videoPath(videosRoot, chunk, cam, idx)))
@@ -92,40 +100,30 @@ object Discover {
             val status =
               if ((!existsFront || !existsWrist) && status0 == Status.New) Status.MissingSide
               else status0
-            EpisodeManifestRow(idx, chunk, pqUri,
+            Row(idx, chunk, pqUri,
               if (existsFront) vFront.toString else null,
               if (existsWrist) vWrist.toString else null,
               existsFront, existsWrist, bytesTotal, fp, Fingerprint.Algo,
               nowStr, status, err)
         }
       }
-    }.toDF()
+    }(Encoders.row(WrittenSchema))
   }
 
   /** Orphan-video detection (J3): videos whose (chunk, episode) has no
-    * parquet — a distributed anti-join replacing the reference's Python
-    * set + nested loop (discover_refactored.py:138-157).
+    * listed parquet, the set difference of the two driver-side listings
+    * (the reference's Python set, discover_refactored.py:138-157).
     */
   def orphanVideos(spark: SparkSession, dataRoot: String, chunks: Seq[String],
-      parquetKeys: DataFrame): DataFrame = {
-    import spark.implicits._
+      parquetKeys: Set[(String, Long)]): DataFrame = {
     val nowStr = utcNow()
-    val vidDf = Episodes.listVideos(spark, s"$dataRoot/videos", chunks)
-      .toDF("chunk", "episode_index", "cam", "uri", "bytes")
-    vidDf.join(parquetKeys, Seq("chunk", "episode_index"), "left_anti")
-      .select(
-        col("episode_index"), col("chunk"),
-        lit(null).cast("string").as("parquet_uri"),
-        when(col("cam") === Cameras(0), col("uri")).otherwise(lit(null)).as("video_front_uri"),
-        when(col("cam") === Cameras(1), col("uri")).otherwise(lit(null)).as("video_wrist_uri"),
-        (col("cam") === Cameras(0)).as("exists_front"),
-        (col("cam") === Cameras(1)).as("exists_wrist"),
-        col("bytes").as("bytes_total"),
-        lit(null).cast("string").as("fingerprint"),
-        lit(Fingerprint.Algo).as("fingerprint_algo"),
-        lit(nowStr).as("discovered_at"),
-        lit(Status.OrphanVideo).as("status"),
-        lit(null).cast("string").as("errors"))
+    val rows = Episodes.listVideos(spark, s"$dataRoot/videos", chunks).collect {
+      case (chunk, idx, cam, uri, bytes) if !parquetKeys((chunk, idx)) =>
+        val front = cam == Cameras(0)
+        Row(idx, chunk, null, if (front) uri else null, if (front) null else uri,
+          front, !front, bytes, null, Fingerprint.Algo, nowStr, Status.OrphanVideo, null)
+    }
+    spark.createDataFrame(rows.asJava, WrittenSchema)
   }
 
   /** Full incremental discover: fingerprint current files, reclassify
@@ -151,12 +149,9 @@ object Discover {
     var cur = fingerprintEpisodes(spark, dataRoot, files, cfg)
     // the (chunk, episode) key of every fingerprinted row (-1 for a bad
     // file name, as fingerprintEpisodes emits it), built from the listing
-    // so the anti-joins below do not re-run the fingerprint pass
-    val curKeys = {
-      import spark.implicits._
-      files.map { case (chunk, uri) => (chunk, Episodes.indexOf(uri).getOrElse(-1L)) }.distinct
-        .toDF("chunk", "episode_index")
-    }
+    // so the tombstone join and the orphan difference do not re-run the
+    // fingerprint pass
+    val curKeys = files.map { case (chunk, uri) => (chunk, Episodes.indexOf(uri).getOrElse(-1L)) }.toSet
 
     // J1: reclassify vs previous manifest fingerprints (broadcast — the
     // previous manifest is one row per episode, small relative to data)
@@ -175,7 +170,8 @@ object Discover {
     val tombstones = prevOpt.map { prev =>
       val nowStr = utcNow()
       prev.select("chunk", "episode_index").dropDuplicates("chunk", "episode_index")
-        .join(curKeys, Seq("chunk", "episode_index"), "left_anti")
+        .join(spark.createDataFrame(curKeys.toSeq).toDF("chunk", "episode_index"),
+          Seq("chunk", "episode_index"), "left_anti")
         .select(
           col("episode_index"), col("chunk"),
           lit(null).cast("string").as("parquet_uri"),

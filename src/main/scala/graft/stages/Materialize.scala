@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileUtil, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import graft.core.{Json, Schemas}
@@ -24,10 +24,11 @@ import graft.io.Episodes.Cameras
   * (row count, column names), copies the file byte for byte into its
   * split dir (staged copy + rename), places its videos (symlink/hardlink/
   * copy/manifest-only, materialize_refactored.py:29-47) and emits its
-  * index row. The index is written from that pass as one sorted file,
-  * with the split counts observed on the write. Videos are placed on
-  * local paths, so on a cluster videosRoot/outDir must be a SHARED
-  * filesystem that resolves identically on every executor.
+  * index row. The index rows come back to the driver (O(episodes), one
+  * row each; no frame does), which sorts them, writes them as one file
+  * and takes the written set and the split counts from them. Videos are
+  * placed on local paths, so on a cluster videosRoot/outDir must be a
+  * SHARED filesystem that resolves identically on every executor.
   */
 object Materialize {
 
@@ -87,30 +88,22 @@ object Materialize {
       }.toDF(Seq("episode_index", "num_rows", "split", "chunk", "parquet_path") ++
         Cameras.map(view => s"$view.path"): _*)
 
-    val splits = Observation()
+    val rows = placed.collect().toSeq.sortBy(r => (r.getLong(0), r.getString(4)))
     val indexPath = s"$outDir/dataset_index.parquet"
-    SingleFile.writeParquetAtomic(
-      placed.observe(splits,
-          count_if(col("split") === "train").as("train"),
-          count_if(col("split") === "val").as("val"),
-          count_if(col("split") === "test").as("test"))
-        .repartition(1).sortWithinPartitions("episode_index"),
-      indexPath)
-    val index = spark.read.schema(placed.schema).parquet(indexPath)
+    SingleFile.writeParquetAtomic(spark.createDataFrame(rows.asJava, placed.schema), indexPath)
 
     // the stage owns its layout: an episode file it did not place goes,
     // with its video links (not listed: the Hadoop local filesystem does
     // not see a link whose source is gone)
     val outFs = new HPath(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val written = index.select("parquet_path").as[String].collect()
-      .map(rel => outFs.makeQualified(new HPath(outDir, rel))).toSet
+    val written = rows.map(r => outFs.makeQualified(new HPath(outDir, r.getString(4)))).toSet
     Episodes.dropUnwritten(spark, s"$outDir/split=*/chunk=*/episode_*.parquet", written)
       .foreach(stale => Episodes.indexOf(stale.getName).foreach(ep => Cameras.foreach(view =>
         Files.deleteIfExists(Paths.get(stale.getParent.toUri.getPath, "videos", view,
           Episodes.videoName(ep))))))
     outFs.delete(new HPath(tmp), true)
 
-    val Seq(train, validation, test) = Observed.longs(splits, "train", "val", "test")
+    val Seq(train, validation, test) = Seq("train", "val", "test").map(s => rows.count(_.getString(2) == s))
     val manifest =
       s"""{
          |  "source_parquet": ${Json.quote(normDir)},
@@ -124,7 +117,7 @@ object Materialize {
          |  "link_videos": ${Json.quote(cfg.linkVideos)}
          |}""".stripMargin
     SingleFile.writeText(spark, s"$outDir/_manifest.json", manifest)
-    index
+    spark.read.schema(placed.schema).parquet(indexPath)
   }
 
   /** Replaces the video at `rel` under `outDir` with a link to (or a copy

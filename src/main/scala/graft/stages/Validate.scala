@@ -1,10 +1,15 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import java.net.URI
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Schemas, Status}
-import graft.io.{Episodes, SingleFile}
+import org.apache.spark.sql.types._
+import graft.core.{Json, Schemas, Status}
+import graft.core.Models.Issue
+import graft.io.{Episodes, ParallelFs, SingleFile}
 
 /** Stage 2 — Validate (reference validate/validate_one.py:63-147 +
   * steps/validate_from_manifest_refactored.py:24-114).
@@ -16,12 +21,15 @@ import graft.io.{Episodes, SingleFile}
   * rows-vs-meta check (J4), and a `when(...)` stack assembles the verdict
   * and typed issues array. 10k or 10M episodes is the same plan.
   *
-  * Each piece of work runs once per call: the manifest is read with its
-  * declared schema (no inference job), the verdict aggregation is
-  * executed only by the sink writes, and the summary counts ride the
-  * `episodes.parquet` write as an `Observation`. The two tables read more
-  * than once (the existence-checked manifest and the sorted results) are
-  * cached for the call and released before it returns.
+  * Episode bookkeeping stays on the driver, frames on the executors: the
+  * actionable manifest rows are collected once (the scan needs their
+  * paths anyway), their files are checked for existence on the driver,
+  * and the one frame pass (the aggregation) returns one verdict row per
+  * file. Each verdict is matched to its manifest row by qualified Hadoop
+  * path, sorted, and the four sinks are written from those rows: the
+  * parquet in one job, the JSONL and the summary as text. Driver memory
+  * is O(actionable episodes), one manifest row and one verdict row each;
+  * no frame reaches the driver, and nothing is cached.
   *
   * Issue kinds mirror validate_one.py:
   *   frame_index_start, frame_index_not_sorted, timestamp_not_sorted,
@@ -108,6 +116,44 @@ object Validate {
       .drop("_meta_ep", "ep_idx_name")
   }
 
+  /** One actionable manifest row. */
+  private final case class Entry(episode: java.lang.Long, chunk: String, parquetUri: String,
+      videoFront: String, videoWrist: String)
+
+  /** One row of the verdict table: a manifest row's verdict, or its
+    * `parquet_missing` row. `episode` is the verdict's own (parsed from
+    * the file name), the manifest's for a missing parquet.
+    */
+  private final case class Checked(episode: java.lang.Long, e: Entry, rows: java.lang.Long,
+      frameMin: java.lang.Long, frameMax: java.lang.Long, expectedRows: java.lang.Long,
+      issues: Seq[Issue]) {
+    def ok: Boolean = issues.isEmpty
+    /** The columns before `issues`, named and ordered as in [[ResultSchema]]. */
+    def columns: Seq[(String, Any)] = ResultSchema.fieldNames.toSeq.zip(Seq(
+      episode, e.chunk, e.parquetUri, e.videoFront, e.videoWrist, ok,
+      rows, frameMin, frameMax, expectedRows))
+  }
+
+  /** An issue list as Spark's `to_json` renders it. */
+  private[graft] def issuesJson(issues: Seq[Issue]): String =
+    issues.map(i => Json.obj(Seq("kind" -> i.kind, "detail" -> i.detail))).mkString("[", ",", "]")
+
+  /** `episodes.parquet`'s schema (the sinks' columns, in order). */
+  val ResultSchema: StructType = StructType(Seq(
+    StructField("episode_index", LongType),
+    StructField("chunk", StringType),
+    StructField("parquet_uri", StringType),
+    StructField("video_front_uri", StringType),
+    StructField("video_wrist_uri", StringType),
+    StructField("ok", BooleanType, nullable = false),
+    StructField("rows", LongType),
+    StructField("frame_min", LongType),
+    StructField("frame_max", LongType),
+    StructField("expected_rows_meta", LongType),
+    StructField("issues", ArrayType(StructType(Seq(
+      StructField("kind", StringType, nullable = false),
+      StructField("detail", StringType)))), nullable = false)))
+
   /** Full stage from a discover manifest: filter ACTIONABLE statuses (P6),
     * validate the referenced parquets, mark missing parquets, write the four
     * sink files (parquet, failures.jsonl, validated_episodes.jsonl,
@@ -117,160 +163,120 @@ object Validate {
     */
   def run(spark: SparkSession, manifestPath: String, metaDir: String,
       outDir: String, cfg: Config = Config()): (Long, Long, Long) = {
-    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: Path): Path = p.getFileSystem(conf).makeQualified(p)
+    def long(r: Row, i: Int): java.lang.Long = if (r.isNullAt(i)) null else r.getLong(i)
 
-    val manifest = spark.read.schema(manifestSchema).parquet(manifestPath)
+    val entries = spark.read.schema(manifestSchema).parquet(manifestPath)
       .filter(col("status").isin(Status.Actionable: _*))
       .select("episode_index", "chunk", "parquet_uri", "video_front_uri", "video_wrist_uri")
+      .collect().toSeq
+      .map(r => Entry(long(r, 0), r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+    val (present, missing) = entries.zip(ParallelFs.mapParallel(entries)(e =>
+        Option(e.parquetUri).map(u => new Path(u)).exists(p => p.getFileSystem(conf).exists(p))))
+      .partitionMap { case (e, exists) => if (exists) Left(e) else Right(e) }
 
-    val meta = loadEpisodesMeta(spark, s"$metaDir/episodes.jsonl")
-
-    // existence check distributed over the manifest (S14-style mapPartitions)
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val withExists = manifest.mapPartitions { it =>
-      val conf = hconf.value
-      it.map { r =>
-        val uri = Option(r.getAs[String]("parquet_uri"))
-        val exists = uri.exists { u =>
-          val p = new org.apache.hadoop.fs.Path(u)
-          p.getFileSystem(conf).exists(p)
-        }
-        (r.getAs[Long]("episode_index"), r.getAs[String]("chunk"),
-          uri.orNull, r.getAs[String]("video_front_uri"),
-          r.getAs[String]("video_wrist_uri"), exists)
-      }
-    }.toDF("episode_index", "chunk", "parquet_uri",
-        "video_front_uri", "video_wrist_uri", "parquet_exists").cache()
-
-    val present = withExists.filter(col("parquet_exists"))
     // the delta's files, read as an explicit list: the scan's file index
     // holds one entry per file whichever way the paths are given
-    val readPaths = present.select("parquet_uri").as[String].collect().toSeq.sorted
+    val readPaths = present.map(_.parquetUri).distinct.sorted
+    // each verdict keyed by its file's qualified path: `src_file` is a
+    // percent-encoded URI, a manifest URI a raw Hadoop path string
+    val verdictOf: Map[Path, Row] =
+      if (readPaths.isEmpty) Map.empty
+      else verdicts(episodeAggregates(Episodes.readRaw(spark, readPaths)),
+          loadEpisodesMeta(spark, s"$metaDir/episodes.jsonl"), cfg)
+        .select("src_file", "episode_index", "rows", "frame_min", "frame_max",
+          "expected_rows_meta", "issues")
+        .collect().map(r => qualified(new Path(new URI(r.getString(0)))) -> r).toMap
+    val presentPaths = present.map(e => e -> qualified(new Path(e.parquetUri)))
+    val unmatched = verdictOf.keySet -- presentPaths.map(_._2)
+    if (unmatched.nonEmpty)
+      throw new IllegalStateException(
+        s"validate: verdicts for files the manifest does not list: ${unmatched.mkString(", ")}")
 
-    // `input_file_name()` is a scheme-qualified, percent-ENCODED URI;
-    // manifest URIs (Hadoop Path.toString) keep raw chars and may lack the
-    // scheme. Normalize both sides: strip scheme, then percent-decode
-    // (decoding a string without '%' escapes is the identity).
-    def normUri(c: Column): Column = {
-      val stripped = regexp_replace(c, "^file:/+", "/")
-      coalesce(try_url_decode(stripped), stripped)
-    }
+    val checked = presentPaths.map { case (e, p) =>
+      val r = verdictOf.getOrElse(p, throw new IllegalStateException(
+        s"validate: ${e.parquetUri} has no frames, so no verdict"))
+      Checked(long(r, 1), e, long(r, 2), long(r, 3), long(r, 4), long(r, 5),
+        r.getSeq[Row](6).map(i => Issue(i.getString(0), i.getString(1))))
+    } ++ missing.map(e => // validate_from_manifest:55-69
+      Checked(e.episode, e, null, null, null, null,
+        Seq(Issue("parquet_missing", Option(e.parquetUri).getOrElse("null")))))
 
-    // missing-parquet short-circuit rows (validate_from_manifest:55-69)
-    val missing = withExists.filter(!col("parquet_exists"))
-      .select(
-        col("episode_index"), col("chunk"), col("parquet_uri"),
-        col("video_front_uri"), col("video_wrist_uri"),
-        lit(false).as("ok"), lit(null).cast("long").as("rows"),
-        lit(null).cast("long").as("frame_min"), lit(null).cast("long").as("frame_max"),
-        lit(null).cast("long").as("expected_rows_meta"),
-        array(struct(lit("parquet_missing").as("kind"),
-          coalesce(col("parquet_uri"), lit("null")).as("detail"))).as("issues"))
+    val results = (if (cfg.skipVideo) checked else addVideoChecks(spark, checked, cfg))
+      .sortBy(c => (Option(c.episode).map(_.longValue), Option(c.e.chunk), Option(c.e.parquetUri)))
 
-    val combined =
-      if (readPaths.isEmpty) missing
-      else {
-        val aggs = episodeAggregates(Episodes.readRaw(spark, readPaths))
-        verdicts(aggs, meta, cfg)
-          .join(present.select(col("parquet_uri").as("src_uri"), col("chunk").as("m_chunk"),
-              col("video_front_uri"), col("video_wrist_uri")),
-            normUri(col("src_file")) === normUri(col("src_uri")), "inner")
-          .select(
-            col("episode_index"), col("m_chunk").as("chunk"),
-            col("src_uri").as("parquet_uri"),
-            col("video_front_uri"), col("video_wrist_uri"),
-            col("ok"), col("rows"), col("frame_min"), col("frame_max"),
-            col("expected_rows_meta"), col("issues"))
-          .unionByName(missing)
-      }
-
-    // one sorted partition: one part file per sink, no range sampling
-    val results = (if (cfg.skipVideo) combined else addVideoChecks(spark, combined, cfg))
-      .repartition(1).sortWithinPartitions("episode_index").cache()
-
-    // the summary counts ride the first sink write
-    val counts = Observation()
-    SingleFile.writeParquetAtomic(
-      results.observe(counts, count(lit(1)).as("total"), count_if(col("ok")).as("ok")),
+    SingleFile.writeParquetAtomic(spark.createDataFrame(results.map(c => Row.fromSeq(
+        c.columns.map(_._2) :+ c.issues.map(i => Row(i.kind, i.detail)))).asJava, ResultSchema),
       s"$outDir/episodes.parquet")
-    SingleFile.writeJsonl(
-      results.filter(!col("ok")).withColumn("issues", to_json(col("issues"))),
-      s"$outDir/failures.jsonl")
-    SingleFile.writeJsonl(
-      results.filter(col("ok")).select(
-        "episode_index", "rows", "chunk", "parquet_uri",
-        "video_front_uri", "video_wrist_uri"),
-      s"$outDir/validated_episodes.jsonl")
+    // the JSONL sinks as Spark's JSON writer renders them, `issues` as its
+    // `to_json` string
+    val (ok, failed) = results.partition(_.ok)
+    SingleFile.writeText(spark, s"$outDir/failures.jsonl", Json.lines(failed.map(c =>
+      c.columns :+ ("issues" -> issuesJson(c.issues)))))
+    SingleFile.writeText(spark, s"$outDir/validated_episodes.jsonl", Json.lines(ok.map { c =>
+      val byName = c.columns.toMap
+      Seq("episode_index", "rows", "chunk", "parquet_uri", "video_front_uri", "video_wrist_uri")
+        .map(k => k -> byName(k))
+    }))
 
-    results.unpersist()
-    withExists.unpersist()
-    val Seq(total, okN) = Observed.longs(counts, "total", "ok")
+    val (total, okN) = (results.size.toLong, ok.size.toLong)
     SingleFile.writeText(spark, s"$outDir/summary.yaml",
       s"total: $total\nok: $okN\nfail: ${total - okN}\n")
     (total, okN, total - okN)
   }
 
   /** Video checks (validate_one.py:124-137): per camera, ffprobe the
-    * manifest's video URI inside `mapPartitions` (S17). Missing/unreadable
-    * video → `<cam>_video_missing`; fps outside ±1.0 of expected →
-    * `<cam>_fps`; frame count vs table rows beyond tolerance →
-    * `<cam>_frames_vs_rows`. A probe failure (including no ffprobe binary
-    * on the executor) degrades to the missing issue, never a crash.
+    * manifest's video URI in one executor-side pass over the rows (S17).
+    * Missing/unreadable video → `<cam>_video_missing`; fps outside ±1.0
+    * of expected → `<cam>_fps`; frame count vs table rows beyond tolerance
+    * → `<cam>_frames_vs_rows`. A probe failure (including no ffprobe
+    * binary on the executor) degrades to the missing issue, never a crash.
     */
-  def addVideoChecks(spark: SparkSession, results: DataFrame, cfg: Config): DataFrame = {
-    import spark.implicits._
+  private def addVideoChecks(spark: SparkSession, results: Seq[Checked], cfg: Config): Seq[Checked] = {
     import graft.ops.Probe
     val fpsExpected = cfg.fpsExpected
     val tol = cfg.frameTolerance
-    val probed = results
-      .select(col("episode_index"), col("video_front_uri"), col("video_wrist_uri"), col("rows"))
-      .as[(Long, Option[String], Option[String], Option[Long])]
-      .mapPartitions { it =>
-        // ONE persistent probe worker per partition (spawn cost amortized
-        // across the partition's files; one ffprobe invocation per file
-        // still — see Probe.Worker). Closed on task completion, success or
-        // failure, so no subprocess outlives its task.
-        val worker = new Probe.Worker()
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => worker.close()))
-        it.map { case (ep, vf, vw, rowsOpt) =>
-          val issues = Seq(("front", vf), ("wrist", vw)).flatMap { case (cam, uriOpt) =>
-            val meta = uriOpt.flatMap(worker.probe)
-            meta match {
-              case None =>
-                Seq((s"${cam}_video_missing", uriOpt.getOrElse("null")))
-              case Some(m) =>
-                val fpsIssue = Probe.effectiveFps(m)
-                  .filter(f => math.abs(f - fpsExpected) > 1.0)
-                  .map(f => (s"${cam}_fps", f.toString))
-                val framesIssue = (m.nbFrames, rowsOpt) match {
-                  case (Some(nb), Some(rows)) if math.abs(nb - rows) > tol =>
-                    Some((s"${cam}_frames_vs_rows", s"$nb,$rows"))
-                  case _ => None
-                }
-                fpsIssue.toSeq ++ framesIssue.toSeq
-            }
+    val inputs = results.map(c => (c.e.videoFront, c.e.videoWrist, Option(c.rows).map(_.longValue)))
+    val parts = math.max(1, math.min(inputs.size, spark.sparkContext.defaultParallelism))
+    val videoIssues = spark.sparkContext.parallelize(inputs, parts).mapPartitions { it =>
+      // ONE persistent probe worker per partition (spawn cost amortized
+      // across the partition's files; one ffprobe invocation per file
+      // still — see Probe.Worker). Closed on task completion, success or
+      // failure, so no subprocess outlives its task.
+      val worker = new Probe.Worker()
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => worker.close()))
+      it.map { case (vf, vw, rowsOpt) =>
+        Seq(("front", vf), ("wrist", vw)).flatMap { case (cam, uri) =>
+          Option(uri).flatMap(worker.probe) match {
+            case None =>
+              Seq(Issue(s"${cam}_video_missing", Option(uri).getOrElse("null")))
+            case Some(m) =>
+              val fpsIssue = Probe.effectiveFps(m)
+                .filter(f => math.abs(f - fpsExpected) > 1.0)
+                .map(f => Issue(s"${cam}_fps", f.toString))
+              val framesIssue = (m.nbFrames, rowsOpt) match {
+                case (Some(nb), Some(rows)) if math.abs(nb - rows) > tol =>
+                  Some(Issue(s"${cam}_frames_vs_rows", s"$nb,$rows"))
+                case _ => None
+              }
+              fpsIssue.toSeq ++ framesIssue.toSeq
           }
-          (ep, issues)
         }
-      }.toDF("episode_index", "_video_issues")
-      .withColumn("_video_issues",
-        expr("transform(_video_issues, x -> struct(x._1 AS kind, x._2 AS detail))"))
-    results.join(probed, Seq("episode_index"), "left")
-      .withColumn("issues", concat(col("issues"), col("_video_issues")))
-      .withColumn("ok", size(col("issues")) === 0)
-      .drop("_video_issues")
+      }
+    }.collect()
+    results.zip(videoIssues).map { case (c, v) => c.copy(issues = c.issues ++ v) }
   }
 
   /** `meta/episodes.jsonl` with declared schema (S5); empty frame when the
     * file is absent.
     */
   def loadEpisodesMeta(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) spark.read.schema(episodesMetaSchema).json(path)
     else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], episodesMetaSchema)
+      spark.sparkContext.emptyRDD[Row], episodesMetaSchema)
   }
 }

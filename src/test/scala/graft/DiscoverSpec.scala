@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
-import graft.core.Status
+import org.apache.spark.sql.types.{DataType, StructType}
+import graft.core.{Schemas, Status}
 import graft.io.Episodes
 import graft.stages.Discover
 
@@ -62,12 +66,32 @@ class DiscoverSpec extends SparkSuite {
   }
 
   test("manifest schema matches the declared contract") {
-    val root = tmpDir("disc_schema")
-    val manifest = s"$root/manifest/episodes.parquet"
-    dataset(spark, root, Map(0L -> cleanFrames(0, 5)))
-    Discover.run(spark, root, manifest)
-    val df = spark.read.parquet(manifest)
-    assert(df.schema.fieldNames.toSeq === graft.core.Schemas.manifestSchema.fieldNames.toSeq)
+    // the schema as written, nullability included (a read makes every
+    // column nullable): only the episode index and the byte total are
+    // required, whichever row kinds the run holds and whether any video
+    // is listed at all
+    val contract = StructType(Schemas.manifestSchema.map(f =>
+      f.copy(nullable = !Set("episode_index", "bytes_total")(f.name))))
+    Seq(
+      ("no video", Set.empty[Long], false, Set(Status.MissingSide)),
+      ("videos, no orphan", Set(0L), false, Set(Status.New)),
+      ("an orphan video", Set(0L), true, Set(Status.New, Status.OrphanVideo))
+    ).foreach { case (corpus, videosFor, orphan, statuses) =>
+      val root = tmpDir("disc_schema")
+      val manifest = s"$root/manifest/episodes.parquet"
+      dataset(spark, root, Map(0L -> cleanFrames(0, 5)), videosFor = videosFor)
+      if (orphan) {
+        val dir = Paths.get(s"$root/videos/chunk-000/observation.images.wrist")
+        Files.write(dir.resolve("episode_000003.mp4"), "orphan".getBytes)
+      }
+      Discover.run(spark, root, manifest)
+      assert(statusMap(spark.read.parquet(manifest)).values.toSet === statuses, corpus)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new HPath(manifest), spark.sparkContext.hadoopConfiguration))
+      val written = try reader.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+      assert(DataType.fromJson(written) === contract, corpus)
+    }
   }
 
   test("since filter skips old files; only-chunks restricts listing") {

@@ -197,13 +197,24 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
   /** Spark jobs per stage call under this suite's session (local[4], 4
     * shuffle partitions) on the golden corpus. Jobs are set by the plans,
     * not by timing, so a count that moves means a plan changed: an extra
-    * action, a re-executed subplan or a schema-inference job.
-    * align_transform: one shuffle-map job for its one `_src_file`
-    * exchange, then the write job.
+    * action, a re-executed subplan or a schema-inference job. Episode
+    * bookkeeping runs on the driver; the jobs are the frame and file
+    * passes and the sinks:
+    *  - discover: the manifest write's `repartition(1)` shuffle-map job
+    *    (fingerprint pass, orphan rows, sort input), then the write job;
+    *  - validate: the manifest rows' collect, the meta broadcast, the
+    *    verdict aggregation's shuffle-map and result jobs, then the
+    *    `episodes.parquet` write from the driver's rows;
+    *  - stats: the valid-id broadcast, the fold's shuffle-map and result
+    *    jobs;
+    *  - align_transform: one shuffle-map job for its one `_src_file`
+    *    exchange, then the write job;
+    *  - materialize: the placement pass's collect, then the index write
+    *    from its rows.
     */
   private val jobBudget = Map(
-    "discover" -> 4, "validate" -> 9, "stats" -> 3,
-    "align_transform" -> 2, "materialize" -> 3)
+    "discover" -> 2, "validate" -> 5, "stats" -> 3,
+    "align_transform" -> 2, "materialize" -> 2)
 
   test("stage calls: pinned job counts, one fingerprint pass, no cached table left") {
     val outRoot = s"$root/out_stages"
@@ -226,13 +237,14 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
       out
     }
     /** Discover fingerprint nodes in each parquet write's executed plan. */
-    def fingerprintPasses(): Seq[Int] = executions.synchronized {
+    def fingerprintNodes(): Seq[Seq[MapPartitionsExec]] = executions.synchronized {
       executions.toSeq
         .filter(qe => find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
         .map(qe => collect(qe.executedPlan) {
           case m: MapPartitionsExec if m.func.getClass.getName.startsWith("graft.stages.Discover") => m
-        }.size)
+        })
     }
+    def fingerprintPasses(): Seq[Int] = fingerprintNodes().map(_.size)
 
     /** A plan and, recursively, the plans of the cached tables it reads. */
     def trees(p: SparkPlan): Seq[SparkPlan] =
@@ -253,6 +265,9 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     try {
       val delta = stage("discover")(Discover.run(spark, root, manifest))
       assert(fingerprintPasses() === Seq(1), "the manifest write fingerprints each file once")
+      // the fingerprint pass runs over the listed files as partitioned
+      assert(fingerprintNodes().flatten.forall(m =>
+        find(m)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty), "an exchange feeds the fingerprint pass")
       executions.synchronized(executions.clear())
       val (total, ok, fail) = stage("validate")(Validate.run(spark, manifest, s"$root/meta",
         validateOut, Validate.Config(skipVideo = true)))
@@ -270,9 +285,11 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
         s"$outRoot/dataset", Materialize.Config(videosRoot = Some(s"$root/videos"))))
       assert(counted.toMap === jobBudget)
       // materialize places the normalized files: it scans none of them
-      val scans = executions.synchronized(executions.toSeq).flatMap(qe =>
+      val recorded = executions.synchronized(executions.toSeq)
+      assert(recorded.exists(qe => find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined),
+        "the index write is recorded")
+      val scans = recorded.flatMap(qe =>
         collect(qe.executedPlan) { case s: FileSourceScanExec => s.relation.location.rootPaths })
-      assert(scans.nonEmpty, "the index read-back is recorded")
       assert(!scans.flatten.exists(_.toString.contains(s"$outRoot/normalized")), scans)
 
       assert(delta.count() === 5)

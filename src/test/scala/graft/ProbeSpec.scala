@@ -86,4 +86,19 @@ class ProbeSpec extends SparkSuite {
     // the missing-video issue; table checks all pass
     assert(issues === Set("front_video_missing", "wrist_video_missing"))
   }
+
+  test("video checks keep one row per actionable manifest row when two share an episode") {
+    // episode 9 has videos and no parquet: its two orphan videos are two
+    // manifest rows of one episode index, and a join on the index would
+    // give each row both rows' checks
+    val root = tmpDir("probe_orphans")
+    dataset(spark, root, Map(0L -> cleanFrames(0, 10)), videosFor = Set(0L, 9L),
+      metaLengths = Map(0L -> 10L))
+    val manifest = s"$root/m.parquet"
+    graft.stages.Discover.run(spark, root, manifest)
+    val out = tmpDir("probe_orphans_out")
+    assert(Validate.run(spark, manifest, s"$root/meta", out,
+      Validate.Config(skipVideo = false)) === ((3L, 0L, 3L)))
+    assert(spark.read.parquet(s"$out/episodes.parquet").count() === 3)
+  }
 }

@@ -147,4 +147,17 @@ class ValidateSpec extends SparkSuite {
     assert(run(ep => if (ep == 0L || ep == 4L) "CHANGED" else "UNCHANGED") === ((2L, 1L, 1L)))
     assert(run(_ => "UNCHANGED") === ((0L, 0L, 0L)))
   }
+
+  test("roots with a space, a plus or a percent sign validate every episode") {
+    // the scan names a file by its percent-encoded URI, the manifest by its
+    // raw Hadoop path: under `pct%41x` a decode-both match reads the
+    // manifest's `%41` as `A` and drops both episodes without a row
+    Seq("sp ace", "pl+us", "pct%zz", "pct%41x").foreach { name =>
+      val root = s"${tmpDir("validate_paths")}/$name"
+      dataset(spark, root, Map(0L -> cleanFrames(0, 10), 1L -> cleanFrames(1, 12)))
+      val manifest = s"$root/manifest/episodes.parquet"
+      graft.stages.Discover.run(spark, root, manifest)
+      assert(Validate.run(spark, manifest, s"$root/meta", s"$root/out") === ((2L, 2L, 0L)), name)
+    }
+  }
 }
