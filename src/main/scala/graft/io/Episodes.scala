@@ -1,8 +1,16 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import graft.core.Schemas
 
 /** The episode-file layout (SURVEY §2.1 S1/S13, stages 4–5), owned here
@@ -15,8 +23,8 @@ import graft.core.Schemas
   * reference's per-file driver loop (its scalability ceiling,
   * validate_from_manifest_refactored.py:51). At 100 TB this is the only
   * shape that works: the scan parallelizes over files, and a frame pass
-  * clusters each episode with one hash exchange on [[SrcFileCol]], which
-  * [[writePerEpisode]] reuses.
+  * clusters each episode with one hash exchange on [[SrcFileCol]], on
+  * which [[writePerEpisode]]'s tasks write and place each episode's file.
   */
 object Episodes {
 
@@ -39,12 +47,9 @@ object Episodes {
     case _ => None
   }
 
-  /** The episode index ([[indexOf]]) and the episode file name of a path
-    * column.
-    */
+  /** The episode index ([[indexOf]]) of a path column. */
   def indexCol(path: Column): Column =
     regexp_extract(path, "episode_(\\d+)\\.parquet$", 1).try_cast("long")
-  def nameCol(path: Column): Column = regexp_extract(path, "(episode_\\d+\\.parquet)$", 1)
 
   private def videoDir(videosRoot: String, chunk: String, camera: String): String =
     s"$videosRoot/chunk-$chunk/$camera"
@@ -115,65 +120,64 @@ object Episodes {
     readRaw(spark, list(spark, dataDir).uris)
 
   /** Write one zstd parquet per episode of `df` (rows carrying
-    * [[SrcFileCol]]) as `<outDir>/<episode name>`, holding the data
-    * columns only. Clustering on [[SrcFileCol]] (an exchange Spark drops
-    * when `df` is hash-partitioned on it) and no record cap put each
-    * episode in one part file. One partitioned write job, then a parallel
-    * metadata-only rename pass (file-per-episode contract, SURVEY §7.3
-    * hard part 3). Each episode file in `sources` that got no rows gets a
-    * zero-row file with the episode schema (the reference writes one file
-    * per input unconditionally, align_transform_refactored.py:158-160).
-    * The call owns its output set ([[dropUnwritten]]). Returns the written
-    * paths, sorted.
+    * [[SrcFileCol]]) as `<outDir>/<source file name>`, holding the data
+    * columns only. Each episode is written and placed by the task that
+    * holds its rows: clustering on [[SrcFileCol]] (an exchange Spark drops
+    * when `df` is hash-partitioned on it) puts it in one partition, sorted
+    * by frame_index; the task writes each run of one episode's rows to a
+    * staged file named for its attempt and [[SingleFile.place]]s it. One
+    * action beyond the clustering, and no driver pass over written files
+    * (file-per-episode contract, SURVEY §7.3 hard part 3). Each file in
+    * `sources` that got no rows gets a zero-row file from the same writer,
+    * on the driver (the reference writes one file per input
+    * unconditionally, align_transform_refactored.py:158-160). Two sources
+    * with one file name are refused before any write. The call owns its
+    * output set ([[dropUnwritten]]). Returns the written paths, sorted.
     */
   def writePerEpisode(df: DataFrame, outDir: String, sources: Seq[String]): Seq[String] = {
     val spark = df.sparkSession
+    val shared = sources.groupBy(new HPath(_).getName).values.filter(_.size > 1)
+    require(shared.isEmpty, "source files share an episode file name: " +
+      shared.map(_.sorted.mkString(" and ")).toSeq.sorted.mkString("; "))
+    val clustered = df.repartition(col(SrcFileCol))
+      .select((df.columns.filterNot(ProvenanceCols) :+ SrcFileCol).map(c => col(s"`$c`")).toSeq: _*)
+      .sortWithinPartitions(SrcFileCol, "frame_index")
+    val schema = clustered.drop(SrcFileCol).schema
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map("compression" -> "zstd"), schema)
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    val fs = new HPath(outDir).getFileSystem(conf.value)
     val tmp = new HPath(outDir, ".stage_tmp")
-    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = "_ep_name"
-    df.repartition(col(SrcFileCol))
-      .select(df.columns.filterNot(ProvenanceCols).map(c => col(s"`$c`")).toSeq :+
-        nameCol(col(SrcFileCol)).as(name): _*)
-      .sortWithinPartitions(name, "frame_index")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(name)
-      .option("compression", "zstd")
-      .option("maxRecordsPerFile", 0)
-      .parquet(tmp.toString)
-
-    // staged part file → target, one per written episode
-    val staged = glob(spark, s"$tmp/$name=*").map { st =>
-      (fs.globStatus(new HPath(st.getPath, "part-*.parquet")).head.getPath,
-        new HPath(outDir, st.getPath.getName.stripPrefix(s"$name=")))
+    fs.delete(tmp, true) // a crashed call's staged files
+    def writeAndPlace(staged: HPath, name: String)(write: OutputWriter => Unit): Unit = {
+      val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID())
+      val w = factory.newInstance(staged.toString, schema, ctx)
+      try write(w) finally w.close()
+      SingleFile.place(staged.getFileSystem(conf.value), staged, new HPath(outDir, name))
     }
-    val empties = sources.map(new HPath(_).getName).filterNot(staged.map(_._2.getName).toSet)
-    val stagedEmpties = if (empties.isEmpty) Nil else {
-      val emptyDir = new HPath(tmp, "_empty")
-      // repartition(1): a 0-partition empty frame writes no part file at all
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.episodeSchema)
-        .repartition(1).write.parquet(emptyDir.toString)
-      val part = fs.globStatus(new HPath(emptyDir, "part-*.parquet")).head.getPath
-      ParallelFs.mapParallel(empties) { n =>
-        val copy = new HPath(emptyDir, n)
-        org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, copy, false, fs.getConf)
-        (copy, new HPath(outDir, n))
-      }
+    val qe = clustered.queryExecution
+    val written = SQLExecution.withNewExecutionId(qe, Some("writePerEpisode")) {
+      qe.toRdd.mapPartitions { part =>
+        val rows = part.buffered
+        val data = UnsafeProjection.create(schema) // the writer writes every field of a row
+        Iterator.continually(rows).takeWhile(_.hasNext).map { _ =>
+          val src = rows.head.getUTF8String(schema.length).clone()
+          val name = new HPath(src.toString).getName
+          writeAndPlace(new HPath(tmp, s"${TaskContext.get().taskAttemptId()}-$name"), name) { w =>
+            while (rows.hasNext && rows.head.getUTF8String(schema.length) == src)
+              w.write(data(rows.next()))
+          }
+          name
+        }
+      }.collect().toSeq
     }
-    val moves = staged ++ stagedEmpties
-    fs.mkdirs(new HPath(outDir))
-    ParallelFs.mapParallel(moves) { case (part, target) => replace(fs, part, target) }
+    val empties = sources.map(new HPath(_).getName).filterNot(written.toSet)
+    ParallelFs.mapParallel(empties)(n => writeAndPlace(new HPath(tmp, s"driver-$n"), n)(_ => ()))
 
-    dropUnwritten(spark, s"$outDir/episode_*.parquet", moves.map(m => fs.makeQualified(m._2)).toSet)
+    val targets = (written ++ empties).map(new HPath(outDir, _))
+    dropUnwritten(spark, s"$outDir/episode_*.parquet", targets.map(fs.makeQualified).toSet)
     fs.delete(tmp, true)
-    moves.map(_._2.toString).sorted
-  }
-
-  /** Move the staged file `part` onto `target`: the target path only ever
-    * holds a whole file.
-    */
-  def replace(fs: FileSystem, part: HPath, target: HPath): Unit = {
-    fs.delete(target, false)
-    if (!fs.rename(part, target)) throw new java.io.IOException(s"rename failed: $part -> $target")
+    targets.map(_.toString).sorted
   }
 
   /** A per-episode writer owns its output set: after its placements it

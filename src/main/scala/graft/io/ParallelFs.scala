@@ -3,10 +3,9 @@ package graft.io
 import java.util.concurrent.{Callable, Executors}
 
 /** Bounded driver-side parallelism for filesystem metadata passes (the
-  * per-episode rename/link loops). Hadoop `FileSystem` handles are
-  * thread-safe, so a pool turns an O(#episodes) serial RPC chain into
-  * O(#episodes / pool). On object stores (rename = copy) the same pool
-  * bounds the copy concurrency instead of serializing it.
+  * per-episode existence checks, zero-row files and deletions). Hadoop
+  * `FileSystem` handles are thread-safe, so a pool turns an O(#episodes)
+  * serial RPC chain into O(#episodes / pool).
   */
 object ParallelFs {
   def mapParallel[A, B](items: Seq[A], parallelism: Int = 32)(f: A => B): Seq[B] = {

@@ -62,26 +62,25 @@ object SingleFile {
     if (!f.exists(tgt) && f.exists(bak)) renameOrThrow(f, bak, tgt)
   }
 
-  /** Replace `target` with the single part file staged in `tmp`, never
-    * leaving a state where BOTH target and backup are missing: the old
-    * version is renamed aside (not deleted) until the new one is in place,
-    * so a crash at any step loses at most the in-flight version, which
-    * [[recoverAtomic]] / the next write heal. (The previous delete-then-
-    * rename protocol had a window where a crash lost the file entirely —
-    * fatal for read-modify-write state like the streaming manifest fold,
-    * whose checkpoint-replayed batch would then rebuild from empty.)
-    * A failed rename of the new file in restores the backup before
-    * throwing, so the caller observes the old version, not a hole. The
-    * old version may be a directory of part files (a plain Spark write).
+  /** The one placement primitive (every single-file sink, every
+    * per-episode file): replace `tgt` with the file `staged`, never leaving
+    * a state where BOTH target and backup are missing. The old version is
+    * renamed aside (not deleted) until the new one is in place, so a crash
+    * at any step loses at most the in-flight version, which
+    * [[recoverAtomic]] / the next write heal (a delete-then-rename loses
+    * the file entirely in that window). A failed rename of the new file in
+    * restores the backup before throwing, so the caller observes the old
+    * version, not a hole. The old version may be a directory of part files
+    * (a plain Spark write).
     */
-  private def replaceWith(f: FileSystem, tgt: HPath, part: HPath): Unit = {
+  def place(f: FileSystem, staged: HPath, tgt: HPath): Unit = {
     val bak = new HPath(tgt.toString + ".bak")
     if (tgt.getParent != null) f.mkdirs(tgt.getParent)
     recover(f, tgt)
     f.delete(bak, true)
     val hadOld = f.exists(tgt)
     if (hadOld) renameOrThrow(f, tgt, bak)
-    try renameOrThrow(f, part, tgt)
+    try renameOrThrow(f, staged, tgt)
     catch {
       case e: java.io.IOException =>
         if (hadOld) recover(f, tgt) // put the old version back before failing
@@ -108,7 +107,7 @@ object SingleFile {
         f.create(empty).close()
         empty
       }
-    replaceWith(f, tgt, part)
+    place(f, part, tgt)
     f.delete(tmp, true)
   }
 

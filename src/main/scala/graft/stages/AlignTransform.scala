@@ -15,13 +15,12 @@ import graft.io.{Episodes, SingleFile}
   * z-score normalization vs global stats → rename back.
   *
   * Spark-first: one pass over every episode at once — a shuffle-map job
-  * for its one exchange, then the write job. Per-episode ordering is
-  * a window partitioned by source file (no global sort); normalization is
-  * built-in higher-order `transform` with broadcast stat literals — the
-  * reference's only row-level UDF (align_transform:71-78) disappears into
-  * whole-stage codegen. Dedup, reindex and the per-episode write all
-  * cluster on `_src_file`, so the stage plans one hash exchange on it (a
-  * scan that reported one task per file would need none).
+  * for its one exchange, then the write job, whose tasks write and place
+  * the files of the episodes they hold. Dedup, reindex and the write all
+  * cluster on `_src_file` (a window, no global sort): one hash exchange (a
+  * scan that reported one task per file would need none). Normalization
+  * is higher-order functions over broadcast stat literals: the reference's
+  * only row-level UDF (align_transform:71-78) disappears into codegen.
   */
 object AlignTransform {
 

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileUtil, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -21,14 +22,14 @@ import graft.io.Episodes.Cameras
   * Spark shape: the layout is placed, not re-encoded, and no frame is
   * read. The split is a column over the normalized file list; one
   * executor-side `mapPartitions` pass reads each file's parquet footer
-  * (row count, column names), copies the file byte for byte into its
-  * split dir (staged copy + rename), places its videos (symlink/hardlink/
-  * copy/manifest-only, materialize_refactored.py:29-47) and emits its
-  * index row. The index rows come back to the driver (O(episodes), one
-  * row each; no frame does), which sorts them, writes them as one file
-  * and takes the written set and the split counts from them. Videos are
-  * placed on local paths, so on a cluster videosRoot/outDir must be a
-  * SHARED filesystem that resolves identically on every executor.
+  * (row count, column names), copies the file byte for byte to a staged
+  * path named for its task attempt, [[SingleFile.place]]s it in its split
+  * dir, places its videos (symlink/hardlink/copy/manifest-only,
+  * materialize_refactored.py:29-47) and emits its index row. The driver
+  * sorts the index rows (O(episodes); no frame comes back), writes them
+  * as one file and takes the written set and the split counts from them.
+  * Videos are placed on local paths, so on a cluster videosRoot/outDir
+  * must be a SHARED filesystem that resolves identically on every executor.
   */
 object Materialize {
 
@@ -76,9 +77,9 @@ object Materialize {
             val ep = Episodes.indexOf(uri).getOrElse(
               throw new IllegalArgumentException(s"$uri: not an episode file name"))
             val dir = s"split=$split/chunk=$Chunk"
-            val staged = new HPath(tmp, src.getName)
+            val staged = new HPath(tmp, s"${TaskContext.get().taskAttemptId()}-${src.getName}")
             FileUtil.copy(src.getFileSystem(conf), src, outFs, staged, false, true, conf)
-            Episodes.replace(outFs, staged, new HPath(s"$outDir/$dir", src.getName))
+            SingleFile.place(outFs, staged, new HPath(s"$outDir/$dir", src.getName))
             val Seq(front, wrist) = Cameras.map(view => placeVideo(
               cfg.videosRoot.map(Episodes.videoPath(_, Chunk, view, ep)), outDir,
               s"$dir/videos/$view/${Episodes.videoName(ep)}", cfg.linkVideos))

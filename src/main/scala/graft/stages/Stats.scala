@@ -1,6 +1,6 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{FeatureStats, GlobalStats, Schemas, StatsDoc}
@@ -31,27 +31,23 @@ object Stats {
 
   /** The rows of `df` whose `idCol` is in the valid episode-id set at
     * `path`, the one valid-set rule of both paths; every row when there is
-    * no path/file. Tolerant id-set load (S7): JSONL (`episode_index`/
+    * no path/file. The set is read once, to the driver, so no pass over the
+    * rows reads it again. Tolerant id-set load (S7): JSONL (`episode_index`/
     * `episode` keys), CSV (last field), or bare-number lines.
     */
   private def keepValid(df: DataFrame, idCol: String, path: Option[String]): DataFrame = {
     val spark = df.sparkSession
     path.fold(df) { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp)) df
+      if (!hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)) df
       else {
-        val lines = spark.read.text(p).filter(length(trim(col("value"))) > 0)
-        val ids = lines.select(
-          when(trim(col("value")).startsWith("{"),
-            coalesce(
-              get_json_object(col("value"), "$.episode_index"),
-              get_json_object(col("value"), "$.episode")))
-            .otherwise(element_at(split(col("value"), ","), -1))
-            .try_cast("long").as(idCol))
-          .filter(col(idCol).isNotNull)
-        // no distinct(): a left-semi join ignores duplicates
-        df.join(broadcast(ids), Seq(idCol), "left_semi")
+        val v = col("value")
+        val ids = spark.read.text(p).filter(length(trim(v)) > 0)
+          .select(when(trim(v).startsWith("{"),
+            coalesce(get_json_object(v, "$.episode_index"), get_json_object(v, "$.episode")))
+            .otherwise(element_at(split(v, ","), -1)).try_cast("long"))
+          .collect().collect { case Row(id: Long) => id }
+        df.filter(col(idCol).isInCollection(ids))
       }
     }
   }

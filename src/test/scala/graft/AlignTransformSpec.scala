@@ -116,7 +116,9 @@ class AlignTransformSpec extends SparkSuite {
     val names = Seq(0, 3, 5, 6).map(e => f"episode_$e%06d.parquet")
     assert(written.map(_.split("/").last) === names)
     assert(new java.io.File(outDir).list().filter(_.endsWith(".parquet")).sorted.toSeq === names)
-    // one empty file is written and copied: no job per all-filtered episode
+    // the shuffle-map job and the write job; the zero-row files are
+    // written on the driver, with no job, however many episodes need one
+    assert(jobs === 2)
     assert(jobs === oneFilteredJobs)
     val ep0 = spark.read.parquet(written.head)
     assert(ep0.columns.toSet === Schemas.RequiredEpisodeCols.toSet)
@@ -127,6 +129,20 @@ class AlignTransformSpec extends SparkSuite {
       assert(empty.schema === ep0.schema)
       assert(empty.columns.toSeq === Schemas.episodeSchema.fieldNames.toSeq)
     }
+  }
+
+  test("two source files with one episode file name are refused before any write") {
+    val root = tmpDir("align_shared_name")
+    val sources = Seq("000" -> 5, "001" -> 7).map { case (chunk, n) =>
+      val path = s"$root/data/chunk-$chunk/episode_000001.parquet"
+      writeEpisode(spark, cleanFrames(1, n), path)
+      path
+    }
+    val outDir = tmpDir("align_shared_name_out")
+    val e = intercept[IllegalArgumentException](AlignTransform.run(spark, s"$root/data", outDir, None))
+    assert(e.getMessage.contains("share an episode file name"), e.getMessage)
+    sources.foreach(p => assert(e.getMessage.contains(p), e.getMessage))
+    assert(new java.io.File(outDir).list().isEmpty)
   }
 
   test("a session maxRecordsPerFile cap drops no frame of an episode file") {

@@ -156,13 +156,13 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
       }
     }
 
-    // the frames path's jobs: 4 for the fold's pass over every feature (the
-    // valid-id broadcast, two shuffle-map jobs, the result) and 4 for the
-    // histogram's (the parent ran 25: a pass per feature and per count)
+    // the frames path's jobs: the valid-id list's one read, 3 for the
+    // fold's pass over every feature (two shuffle-map jobs, the result)
+    // and 3 for the histogram's; both passes filter on the ids read once
     val again = s"$outRoot/global_stats_again.json"
     val (_, jobs) = jobsOf(Stats.runFromFrames(spark, s"$root/data", again,
       Stats.DefaultFeatures, Some(s"$outRoot/validate/validated_episodes.jsonl")))
-    assert(jobs === 8)
+    assert(jobs === 7)
     assert(io.SingleFile.readText(spark, again).get === statsText)
   }
 
@@ -205,8 +205,8 @@ class PipelineE2ESpec extends SparkSuite with AdaptiveSparkPlanHelper {
     *  - validate: the manifest rows' collect, the meta broadcast, the
     *    verdict aggregation's shuffle-map and result jobs, then the
     *    `episodes.parquet` write from the driver's rows;
-    *  - stats: the valid-id broadcast, the fold's shuffle-map and result
-    *    jobs;
+    *  - stats: the valid-id list's collect, the fold's shuffle-map and
+    *    result jobs;
     *  - align_transform: one shuffle-map job for its one `_src_file`
     *    exchange, then the write job;
     *  - materialize: the placement pass's collect, then the index write

@@ -77,6 +77,20 @@ class SingleFileSpec extends SparkSuite {
       .map(_.getLong(0)).toSet == (1L to 7L).toSet)
   }
 
+  test("a failed placement keeps the live file and leaves no backup") {
+    val dir = tmpDir("sf_place_fail")
+    val tgt = new HPath(s"$dir/episode_000001.parquet")
+    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = "live episode bytes".getBytes("UTF-8")
+    val out = fs.create(tgt)
+    try out.write(live) finally out.close()
+    intercept[java.io.IOException](
+      SingleFile.place(fs, new HPath(s"$dir/.stage_tmp/0-episode_000001.parquet"), tgt))
+    val in = fs.open(tgt)
+    try assert(org.apache.commons.io.IOUtils.toByteArray(in).toSeq === live.toSeq) finally in.close()
+    assert(!fs.exists(new HPath(tgt.toString + ".bak")), "backup left behind")
+  }
+
   private def leftovers(tgt: String): Seq[String] = {
     val fs = new HPath(tgt).getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(".bak", ".tmpdir").map(tgt + _).filter(p => fs.exists(new HPath(p)))
